@@ -315,41 +315,43 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     edges = pairs.union(
         pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
     ).persist()
-    # init = round 0 for free: every node's label starts at
-    # min(node, min neighbor) — one aggregation instead of a
-    # distinct + a full propagation round
-    labels = (
-        edges.groupBy(F.col("id_a").alias("node"))
-        .agg(F.min("id_b").alias("m"))
-        .select("node", F.least(F.col("node"), F.col("m")).alias("lbl"))
-        .localCheckpoint()
-    )
-    for _ in range(MAX_CC_ITERS):
-        nbr_min = (
-            edges.join(labels, edges.id_b == labels.node)
-            .groupBy(F.col("id_a").alias("node2"))
-            .agg(F.min("lbl").alias("nbr_lbl"))
+    try:
+        # init = round 0 for free: every node's label starts at
+        # min(node, min neighbor) — one aggregation instead of a
+        # distinct + a full propagation round
+        labels = (
+            edges.groupBy(F.col("id_a").alias("node"))
+            .agg(F.min("id_b").alias("m"))
+            .select("node", F.least(F.col("node"), F.col("m")).alias("lbl"))
+            .localCheckpoint()
         )
-        cand = labels.join(nbr_min, labels.node == nbr_min.node2).select(
-            "node", "lbl", F.least(F.col("lbl"), F.col("nbr_lbl")).alias("cand")
-        )
-        # pointer jump (label-of-label): cand is itself a node id, so one
-        # self-join replaces it with cand's own (≤) label — convergence
-        # drops from O(diameter) to O(log diameter) rounds
-        lut = cand.select(F.col("node").alias("jn"), F.col("cand").alias("jl"))
-        upd = iteration_barrier(
-            cand.join(lut, cand.cand == lut.jn).select(
-                "node", "lbl", F.col("jl").alias("new_lbl")
+        for _ in range(MAX_CC_ITERS):
+            nbr_min = (
+                edges.join(labels, edges.id_b == labels.node)
+                .groupBy(F.col("id_a").alias("node2"))
+                .agg(F.min("lbl").alias("nbr_lbl"))
             )
-        )  # in-loop truncation: `cand` is referenced twice, so an
-        # unpinned tree doubles per round — exempt from the audit's
-        # barriers_disabled (plans.iteration_barrier docstring)
-        # count runs on the checkpointed frame — no recompute, no extra join
-        changed = upd.filter(F.col("new_lbl") != F.col("lbl")).count()
-        labels = upd.select("node", F.col("new_lbl").alias("lbl"))
-        if changed == 0:
-            break
-    edges.unpersist()
+            cand = labels.join(nbr_min, labels.node == nbr_min.node2).select(
+                "node", "lbl", F.least(F.col("lbl"), F.col("nbr_lbl")).alias("cand")
+            )
+            # pointer jump (label-of-label): cand is itself a node id, so one
+            # self-join replaces it with cand's own (≤) label — convergence
+            # drops from O(diameter) to O(log diameter) rounds
+            lut = cand.select(F.col("node").alias("jn"), F.col("cand").alias("jl"))
+            upd = iteration_barrier(
+                cand.join(lut, cand.cand == lut.jn).select(
+                    "node", "lbl", F.col("jl").alias("new_lbl")
+                )
+            )  # in-loop truncation: `cand` is referenced twice, so an
+            # unpinned tree doubles per round — exempt from the audit's
+            # barriers_disabled (plans.iteration_barrier docstring)
+            # count runs on the checkpointed frame — no recompute, no extra join
+            changed = upd.filter(F.col("new_lbl") != F.col("lbl")).count()
+            labels = upd.select("node", F.col("new_lbl").alias("lbl"))
+            if changed == 0:
+                break
+    finally:
+        edges.unpersist()
     return labels
 
 
@@ -509,8 +511,9 @@ def d_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _capped_shingle_stats(docs: DataFrame):
     """``(counts, inter, sh_cache)`` over the DF-capped shingle space —
     callers MUST ``sh_cache.unpersist()`` once their result is
-    materialized (both consumers do, right after ``ordered_result``'s
-    eager checkpoint) —
+    materialized, and in a ``finally`` (both consumers do, right after
+    ``ordered_result``'s eager checkpoint; the helper releases it
+    itself if it fails before returning) —
     the shared engine of :func:`d_ngram_jaccard` and
     :func:`d_containment_pairs` (r14 restructure, guide §2.4 + the
     ``_banded_hamming_pairs`` precedent measured 2.0→1.1s in r12):
@@ -559,59 +562,63 @@ def _capped_shingle_stats(docs: DataFrame):
         .repartition("x")
         .persist()
     )
-    hot = (
-        raw_sh.groupBy("x")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > NGRAM_DF_CAP)
-        .select("x")
-        .localCheckpoint()
-    )
-    # r15 scale guard (VERDICT r14 item 5 / ADVICE r14): the in-row
-    # ``size(hs) − |hs ∩ hot|`` fast path folds the ENTIRE hot-shingle
-    # list into one broadcast array row — fine while |hot| is small
-    # (at any SF of this corpus it is tens of rows), but on a
-    # boilerplate-heavy corpus the hot set grows ∝ corpus/cap and a
-    # single million-entry array row plus an O(|hot|)-per-document
-    # in-row intersect is the wrong shape. ``hot`` is already
-    # materialized (eager localCheckpoint above), so sizing it is one
-    # tiny job over checkpoint blocks; above the cap, fall back to the
-    # exploded anti-join + groupBy(doc_id) count — the pre-r14 shape
-    # whose per-task state is bounded regardless of |hot| — and let
-    # the planner pick the anti-join strategy instead of forcing a
-    # broadcast build of an oversized hot relation. Equivalent by
-    # construction: both count each document's non-hot distinct
-    # shingles, and a document with ZERO surviving shingles can never
-    # appear in ``inter`` (no shared shingle survives), so its missing
-    # count row is unobservable through the inner joins both consumers
-    # use.
-    hot_is_small = hot.count() <= HOT_BROADCAST_CAP
-    hot_b = F.broadcast(hot) if hot_is_small else hot
-    grouped = (
-        raw_sh.join(hot_b, "x", "left_anti")
-        .groupBy("x")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("g"))
-    )
-    if hot_is_small:
-        hot_arr = hot.agg(F.collect_list("x").alias("hot"))
-        counts = garr.crossJoin(F.broadcast(hot_arr)).select(
-            "doc_id",
-            (
-                F.size("hs") - F.size(F.array_intersect("hs", "hot"))
-            ).cast("bigint").alias("n"),
+    try:
+        hot = (
+            raw_sh.groupBy("x")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .filter(F.col("df") > NGRAM_DF_CAP)
+            .select("x")
+            .localCheckpoint()
         )
-    else:
-        counts = (
+        # r15 scale guard (VERDICT r14 item 5 / ADVICE r14): the in-row
+        # ``size(hs) − |hs ∩ hot|`` fast path folds the ENTIRE hot-shingle
+        # list into one broadcast array row — fine while |hot| is small
+        # (at any SF of this corpus it is tens of rows), but on a
+        # boilerplate-heavy corpus the hot set grows ∝ corpus/cap and a
+        # single million-entry array row plus an O(|hot|)-per-document
+        # in-row intersect is the wrong shape. ``hot`` is already
+        # materialized (eager localCheckpoint above), so sizing it is one
+        # tiny job over checkpoint blocks; above the cap, fall back to the
+        # exploded anti-join + groupBy(doc_id) count — the pre-r14 shape
+        # whose per-task state is bounded regardless of |hot| — and let
+        # the planner pick the anti-join strategy instead of forcing a
+        # broadcast build of an oversized hot relation. Equivalent by
+        # construction: both count each document's non-hot distinct
+        # shingles, and a document with ZERO surviving shingles can never
+        # appear in ``inter`` (no shared shingle survives), so its missing
+        # count row is unobservable through the inner joins both consumers
+        # use.
+        hot_is_small = hot.count() <= HOT_BROADCAST_CAP
+        hot_b = F.broadcast(hot) if hot_is_small else hot
+        grouped = (
             raw_sh.join(hot_b, "x", "left_anti")
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+            .groupBy("x")
+            .agg(F.array_sort(F.collect_list("doc_id")).alias("g"))
         )
-    inter = (
-        combination_pairs(
-            grouped.filter(F.size("g") >= 2), "g", "id_a", "id_b"
+        if hot_is_small:
+            hot_arr = hot.agg(F.collect_list("x").alias("hot"))
+            counts = garr.crossJoin(F.broadcast(hot_arr)).select(
+                "doc_id",
+                (
+                    F.size("hs") - F.size(F.array_intersect("hs", "hot"))
+                ).cast("bigint").alias("n"),
+            )
+        else:
+            counts = (
+                raw_sh.join(hot_b, "x", "left_anti")
+                .groupBy("doc_id")
+                .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+            )
+        inter = (
+            combination_pairs(
+                grouped.filter(F.size("g") >= 2), "g", "id_a", "id_b"
+            )
+            .groupBy("id_a", "id_b")
+            .agg(F.count(F.lit(1)).alias("n_inter"))
         )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
+    except BaseException:
+        raw_sh.unpersist()  # the caller never receives it
+        raise
     return counts, inter, raw_sh
 
 
@@ -632,30 +639,30 @@ def d_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     — no shingle self-join."""
     docs = load_table(spark, sf_dir, "documents", fanout=True)
     counts, inter, sh_cache = _capped_shingle_stats(docs)
-    joined = (
-        inter.join(counts.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
-        .join(counts.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
-    )
-    jacc = F.col("n_inter").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    ).cast("double")
-    out = (
-        joined.select(
-            "id_a",
-            "id_b",
-            F.round(jacc, 9).alias("jaccard"),
+    try:
+        joined = (
+            inter.join(counts.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
+            .join(counts.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
         )
-        .filter(F.col("jaccard") >= 0.05)
-        .transform(ordered_result, "id_a", "id_b")
-    )
-    # ordered_result materialized the result eagerly, so the shingle
-    # cache has served both aggregations — release it NOW instead of
-    # leaving a CacheManager entry pinned for the session (the
-    # ADVICE-r7 leak class; a corpus-gram-sized cache at 100 TB must
-    # not outlive its query). Under a plan audit the sort is lazy and
-    # the unpersist merely makes a re-execution recompute the cache.
-    sh_cache.unpersist()
-    return out
+        jacc = F.col("n_inter").cast("double") / (
+            F.col("n_a") + F.col("n_b") - F.col("n_inter")
+        ).cast("double")
+        return (
+            joined.select(
+                "id_a",
+                "id_b",
+                F.round(jacc, 9).alias("jaccard"),
+            )
+            .filter(F.col("jaccard") >= 0.05)
+            .transform(ordered_result, "id_a", "id_b")
+        )
+    finally:
+        # ordered_result materialized the result eagerly (or raised),
+        # so release the shingle cache NOW rather than pin a
+        # corpus-gram-sized CacheManager entry for the session (the
+        # ADVICE-r7 leak class). Under a plan audit the sort is lazy
+        # and a re-execution merely recomputes the cache.
+        sh_cache.unpersist()
 
 
 # Asymmetric containment threshold: c(A,B) = |S_A ∩ S_B| / |S_A| (Broder's
@@ -685,27 +692,28 @@ def d_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic — containment adds no new shuffle."""
     docs = load_table(spark, sf_dir, "documents", fanout=True)
     counts, inter, sh_cache = _capped_shingle_stats(docs)
-    joined = inter.join(
-        counts.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n", "n_a"),
-        "id_a",
-    ).join(
-        counts.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n", "n_b"),
-        "id_b",
-    )
-    c_ab = F.col("n_inter").cast("double") / F.col("n_a").cast("double")
-    c_ba = F.col("n_inter").cast("double") / F.col("n_b").cast("double")
-    out = (
-        joined.filter(F.greatest(c_ab, c_ba) >= CONTAIN_MIN)
-        .select(
+    try:
+        joined = inter.join(
+            counts.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n", "n_a"),
             "id_a",
+        ).join(
+            counts.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n", "n_b"),
             "id_b",
-            F.round(c_ab, 9).alias("cont_a_in_b"),
-            F.round(c_ba, 9).alias("cont_b_in_a"),
         )
-        .transform(ordered_result, "id_a", "id_b")
-    )
-    sh_cache.unpersist()  # see d_ngram_jaccard — freed post-materialization
-    return out
+        c_ab = F.col("n_inter").cast("double") / F.col("n_a").cast("double")
+        c_ba = F.col("n_inter").cast("double") / F.col("n_b").cast("double")
+        return (
+            joined.filter(F.greatest(c_ab, c_ba) >= CONTAIN_MIN)
+            .select(
+                "id_a",
+                "id_b",
+                F.round(c_ab, 9).alias("cont_a_in_b"),
+                F.round(c_ba, 9).alias("cont_b_in_a"),
+            )
+            .transform(ordered_result, "id_a", "id_b")
+        )
+    finally:
+        sh_cache.unpersist()  # see d_ngram_jaccard — freed post-materialization
 
 
 def d_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:

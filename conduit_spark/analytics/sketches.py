@@ -128,6 +128,24 @@ HLL_M = 1 << HLL_B
 # alpha_64 = 0.7213 / (1 + 1.079/64), the standard bias constant
 HLL_ALPHA = 0.709366
 _REST_BITS = 32 - HLL_B  # md5_int32 is 32-bit
+
+
+def hll_bucket_cols(df: DataFrame, hash_col: str = "x") -> DataFrame:
+    """Add the HLL ``(bucket, rho)`` of a 32-bit hash: bucket = low 6
+    bits, rho = 1-based first-set-bit position of the top 26 bits
+    (27 when all zero). Shared by the batch and streaming sketches."""
+    rest = F.expr(f"{hash_col} div {HLL_M}")
+    rho = F.instr(F.lpad(F.bin(rest), _REST_BITS, "0"), "1")
+    return df.withColumns(
+        {
+            "bucket": (F.col(hash_col) % HLL_M).cast("int"),
+            "rho": F.when(rho == 0, F.lit(_REST_BITS + 1))
+            .otherwise(rho)
+            .cast("int"),
+        }
+    )
+
+
 # Sub-salt fan-out for the EXACT-count side of sk_hll_distinct (r15):
 # bounds each phase-1 collect_set group at ~distinct/(HLL_M·fine).
 # Like KMV_SALTS, results are salt-invariant (the (bucket, fsalt)
@@ -279,6 +297,20 @@ HIST_NBINS = 64
 _HIST_PS = (0.5, 0.9, 0.99)
 
 
+def hist_bin_col(df: DataFrame, value_col: str = "value") -> DataFrame:
+    """Add ``bin = clamp(floor(value / w), 0, nbins-1)``. Shared by
+    the batch and streaming sketches."""
+    return df.withColumn(
+        "bin",
+        F.least(
+            F.greatest(
+                F.floor(F.col(value_col) / F.lit(HIST_BIN_W)), F.lit(0)
+            ),
+            F.lit(HIST_NBINS - 1),
+        ).cast("int"),
+    )
+
+
 def sk_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type approximate percentiles from a fixed 64-bin
     histogram sketch of ``events.value`` — the mergeable alternative to
@@ -293,17 +325,7 @@ def sk_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative count reaches ``p × n``.
     """
     ev = load_table(spark, sf_dir, "events")
-    binned = ev.select(
-        "event_type",
-        F.least(
-            F.greatest(
-                F.floor(F.col("value") / F.lit(HIST_BIN_W)), F.lit(0)
-            ),
-            F.lit(HIST_NBINS - 1),
-        )
-        .cast("bigint")
-        .alias("bin"),
-    )
+    binned = hist_bin_col(ev).select("event_type", "bin")
     counts = binned.groupBy("event_type", "bin").agg(
         F.count(F.lit(1)).alias("c")
     )
@@ -715,13 +737,9 @@ def sk_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     ).localCheckpoint()  # feeds both sketch paths AND the exact count
-    rest = F.expr(f"x div {HLL_M}")
-    rho = F.instr(F.lpad(F.bin(rest), _REST_BITS, "0"), "1")
-    rho_c = F.when(rho == 0, F.lit(_REST_BITS + 1)).otherwise(rho)
+    coords = hll_bucket_cols(rel)
     per_source = (
-        rel.select(
-            "source", (F.col("x") % HLL_M).alias("bucket"), rho_c.alias("rho")
-        )
+        coords.select("source", "bucket", "rho")
         .groupBy("source", "bucket")
         .agg(F.max("rho").alias("mj"))
     )
@@ -729,7 +747,7 @@ def sk_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = per_source.groupBy("bucket").agg(F.max("mj").alias("mj"))
     # direct = one global sketch over the globally-distinct grams
     direct = (
-        rel.select((F.col("x") % HLL_M).alias("bucket"), rho_c.alias("rho"))
+        coords.select("bucket", "rho")
         .distinct()
         .groupBy("bucket")
         .agg(F.max("rho").alias("mj"))

@@ -165,5 +165,12 @@ def get_spark(
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
+    # The JVM starts the Python data-source planner as its own process,
+    # which addPyFile does not reach: a wire-source stream started from
+    # outside the repo needs the package on the PYTHONPATH it inherits.
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = os.environ.get("PYTHONPATH", "")
+    if root not in path.split(os.pathsep):
+        os.environ["PYTHONPATH"] = root + (os.pathsep + path if path else "")
     spark = builder.getOrCreate()
     return spark

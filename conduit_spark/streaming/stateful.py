@@ -11,13 +11,11 @@ Scale: state is partitioned by key; per-key state here is a single
 boolean presence marker (a seen-set sharded across the cluster), with
 optional TTL via timeout to bound it in long-running streams.
 
-Spark 4's newer ``transformWithStateInPandas`` API was evaluated and
-does not run in this image: its driver↔worker state protocol requires
-the ``protobuf`` Python package (verified: the streaming runner dies
-with ``ImportError: cannot import name 'descriptor' from
-'google.protobuf'``). ``applyInPandasWithState`` covers the same
-custom-stateful extension point without that dependency; migrate when
-the runtime image ships protobuf.
+This is the engine's single custom-stateful API. State that merges by
+an associative, commutative operation — the HLL register max and the
+histogram bin sum of ``streaming.sketches`` — needs no custom
+operator: it runs as a native streaming aggregation in the JVM state
+store, with no Python worker.
 """
 
 from __future__ import annotations

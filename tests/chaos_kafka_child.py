@@ -5,6 +5,11 @@ commit-log write — the kafka analog of chaos_cdc_child's
 mid-position-write crash point. Per-batch output dirs are rewritten
 idempotently on replay; writes.log records every delivery so the
 parent can prove the replay happened.
+
+The parent starts it from a scratch directory with no ``PYTHONPATH``,
+the way a deployment starts a driver script: the child finds the
+package through its own ``sys.path`` only, so the data-source planner
+process the JVM starts must get the package path from ``get_spark``.
 """
 
 from __future__ import annotations
@@ -12,6 +17,8 @@ from __future__ import annotations
 import os
 import sys
 import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:

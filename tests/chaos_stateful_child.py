@@ -1,9 +1,9 @@
-"""Chaos-test child for the v2 stateful API: stream JSON files through
-``running_dedup_state_v2`` (transformWithStateInPandas + RocksDB state
-store), one file per micro-batch, writing each batch's EMITTED dedup
-rows to ``out/batch_id=N`` and sleeping after each commit so the
-parent can SIGKILL mid-stream. The parent asserts the reference's
-DBZ-2 invariant-6 analog: after restart, state recovers from the
+"""Chaos-test child for the custom-stateful API: stream JSON files
+through ``running_dedup_state`` (applyInPandasWithState), one file per
+micro-batch, writing each batch's EMITTED dedup rows to
+``out/batch_id=N`` and sleeping after each commit so the parent can
+SIGKILL mid-stream. The parent asserts the reference's DBZ-2
+invariant-6 analog: after restart, state recovers from the
 checkpointed store — keys emitted before the kill never re-emit, keys
 never seen still emit, each key exactly once overall."""
 
@@ -18,14 +18,10 @@ def main() -> None:
     import pyspark.sql.functions as F
 
     from conduit_spark import get_spark
-    from conduit_spark.streaming.tws import (
-        running_dedup_state_v2,
-        use_rocksdb_state_store,
-    )
+    from conduit_spark.streaming.stateful import running_dedup_state
 
-    spark = get_spark("chaos-tws-child", shuffle_partitions=2)
+    spark = get_spark("chaos-stateful-child", shuffle_partitions=2)
     spark.sparkContext.setLogLevel("ERROR")
-    use_rocksdb_state_store(spark)
 
     stream = (
         spark.readStream.schema("k string, p string")
@@ -36,7 +32,7 @@ def main() -> None:
             F.col("p").alias("payload_after_json"),
         )
     )
-    deduped = running_dedup_state_v2(stream)
+    deduped = running_dedup_state(stream)
 
     def pb(batch_df, bid: int) -> None:
         batch_df.select("dedup_key", "first_payload").write.mode(

@@ -60,6 +60,36 @@ def test_connected_components_multihop(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
 
 
+def test_failed_queries_release_their_caches(spark, sf_dir, monkeypatch):
+    """A query that raises mid-way leaves the CacheManager empty: the
+    shingle cache of d_ngram_jaccard / d_containment_pairs and the
+    persisted edges of connected_components are released on the error
+    path too, not only after a successful materialization."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # entries other tests left behind
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta"),
+         (2, "alpha beta gamma delta epsilon zeta eta")],
+        "doc_id long, text string",
+    )
+    monkeypatch.setattr(dedup, "load_table", lambda *_a, **_k: docs)
+
+    def boom(*_a, **_k):
+        raise RuntimeError("injected")
+
+    monkeypatch.setattr(dedup, "ordered_result", boom)
+    for query in (dedup.d_ngram_jaccard, dedup.d_containment_pairs):
+        with pytest.raises(RuntimeError, match="injected"):
+            query(spark, sf_dir)
+        assert cache.isEmpty(), query.__name__
+
+    monkeypatch.setattr(dedup, "iteration_barrier", boom)
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="injected"):
+        dedup.connected_components(pairs)
+    assert cache.isEmpty()
+
+
 def test_rag_end_to_end(spark, sf_dir):
     from conduit_spark.analytics import rag
 

@@ -108,7 +108,9 @@ def test_stateful_dedup_across_batches(spark, tmp_path):
     q.awaitTermination()
     assert sorted(r.dedup_key for r in results) == ["a", "b"]
     dropped = {r.dedup_key: r.n_duplicates_dropped for r in results}
-    assert dropped["a"] == 1  # one dup of 'a' in batch 1
+    assert dropped["a"] == 1 and dropped["b"] == 0  # one dup of 'a' in batch 1
+    payloads = {r.dedup_key: r.first_payload for r in results}
+    assert payloads == {"a": "va", "b": "vb"}  # first occurrence wins
 
     # second run: same keys again → all suppressed by state
     (src / "batch2.json").write_text(json.dumps({"k": "a", "p": "v-again"}))

@@ -8,7 +8,13 @@ holds the engine's query library: the TPC-H-ish relational suite
 (``multimodal``).
 """
 
+import contextlib
+import math
+import threading
+
 from pyspark.sql import Column, DataFrame
+
+from conduit_spark.plans import barrier, barriers_suspended
 
 # Results at or below this materialized size take the single-task
 # presentation sort (one narrow job); larger results keep the
@@ -25,7 +31,7 @@ def ordered_result(df: DataFrame, *cols: "Column | str") -> DataFrame:
     A bare ``orderBy`` on an expensive subtree executes it TWICE: the
     range partitioner's sampling job runs the full child once to pick
     split points, then the sort stage runs it again (measured 5.7s →
-    3.8s on the SemDeDup pair join at sf0.1). A ``localCheckpoint``
+    3.8s on the SemDeDup pair join at sf0.1). A checkpoint
     pins the subtree's result on first execution so the sort re-reads
     executor-local blocks.
 
@@ -46,14 +52,12 @@ def ordered_result(df: DataFrame, *cols: "Column | str") -> DataFrame:
     reduced), not the input — output-sized executor memory, freed when
     the DataFrame is GC'd. Use only as the outermost presentation step.
     """
-    from conduit_spark.plans import barriers_suspended
-
     if barriers_suspended():
         return df.orderBy(*cols)
     try:
         jsc = df.sparkSession.sparkContext._jsc
         before = {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
-        chk = df.localCheckpoint(eager=True)
+        chk = barrier(df)
         new_ids = {
             int(k) for k in jsc.getPersistentRDDs().keySet().toArray()
         } - before
@@ -65,9 +69,15 @@ def ordered_result(df: DataFrame, *cols: "Column | str") -> DataFrame:
             return chk.coalesce(1).sortWithinPartitions(*cols)
         return chk.orderBy(*cols)
     except Exception:  # noqa: BLE001 — introspection must never break a query
-        return df.localCheckpoint(eager=False).orderBy(*cols)
+        return barrier(df, eager=False).orderBy(*cols)
 
 
+# Serializes tiny_loop_aqe_off blocks: overlapping ones would restore
+# each other's saved session conf out of order and can leave AQE off.
+_LOOP_CONF_LOCK = threading.RLock()
+
+
+@contextlib.contextmanager
 def tiny_loop_aqe_off(spark, n_rows: "int | None" = None, cap: int = 4_000_000):
     """Context manager: disable AQE around an EAGERLY-executed
     iteration loop whose per-round shuffle state is tiny.
@@ -95,16 +105,13 @@ def tiny_loop_aqe_off(spark, n_rows: "int | None" = None, cap: int = 4_000_000):
     This is the size-derived partitioning AQE would have picked, made
     static for the loop; it scales with the data, not the core count,
     and a corpus-sized loop never reaches here (the ``cap`` gate keeps
-    AQE on).
+    AQE on). Overlapping loops on other threads wait for this one to
+    finish (``_LOOP_CONF_LOCK``).
     """
-    import contextlib
-    import math
-
-    @contextlib.contextmanager
-    def _ctx():
-        if n_rows is not None and n_rows > cap:
-            yield
-            return
+    if n_rows is not None and n_rows > cap:
+        yield
+        return
+    with _LOOP_CONF_LOCK:
         prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
         prev_sp = spark.conf.get("spark.sql.shuffle.partitions", "200")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -116,8 +123,6 @@ def tiny_loop_aqe_off(spark, n_rows: "int | None" = None, cap: int = 4_000_000):
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", prev)
             spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-
-    return _ctx()
 
 
 def combination_pairs(

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from conduit_spark.sources.tables import load_table
 from conduit_spark.analytics import ordered_result
+from conduit_spark.plans import barrier
 
 CHUNK_SIZE = 32  # tokens per chunk
 CHUNK_OVERLAP = 8  # tokens shared between consecutive chunks
@@ -98,11 +99,11 @@ def c_pack_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by the bucket size at any corpus scale.
     """
     docs = load_table(spark, sf_dir, "documents")
-    per_doc = docs.select(
+    per_doc = barrier(docs.select(
         "doc_id",
         F.size(F.split(F.col("text"), " ")).cast("bigint").alias("n_tokens"),
         F.expr(f"doc_id div {PACK_BUCKET}").alias("bucket"),
-    ).localCheckpoint()  # feeds the bucket sums AND the join back
+    ))  # feeds the bucket sums AND the join back
     from pyspark.sql import Window
 
     bsums = per_doc.groupBy("bucket").agg(F.sum("n_tokens").alias("bt"))
@@ -203,12 +204,12 @@ def c_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (st, en) cut-list struct — each computed array is captured into a
     # 1-element array lambda so Catalyst cannot inline it per
     # reference site
-    per_doc = docs.select(
+    per_doc = barrier(docs.select(
         "doc_id", F.expr(s_expr).alias("s")
-    ).localCheckpoint()  # feeds the chunk relation AND the stats join
-    rel = per_doc.select(
+    ))  # feeds the chunk relation AND the stats join
+    rel = barrier(per_doc.select(
         "doc_id", F.explode(F.col("s.hashes")).alias("ch")
-    ).localCheckpoint()
+    ))
     shared = (
         rel.groupBy("ch")
         .agg(F.count_distinct("doc_id").alias("nd"))

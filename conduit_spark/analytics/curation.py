@@ -29,6 +29,7 @@ from conduit_spark.analytics.sampling import DEFAULT_RATE, RATES, _SCALE
 from conduit_spark.analytics.text import STOPWORDS
 from conduit_spark.functions.hashing import md5_int32, sql_md5_int32
 from conduit_spark.analytics import ordered_result
+from conduit_spark.plans import barrier
 from conduit_spark.sources.tables import load_table
 
 QUALITY_MIN = 0.35  # min composite quality score (see text.t_quality)
@@ -65,12 +66,12 @@ def cur_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
 
     # one corpus pass: id, lang, text hash, quality flag
-    base = docs.select(
+    base = barrier(docs.select(
         "doc_id",
         "lang",
         F.md5(F.col("text")).alias("h"),
         (F.round(_quality_score(), 9) >= QUALITY_MIN).alias("q_ok"),
-    ).localCheckpoint()
+    ))
 
     # exact-dedup keepers among quality survivors (min doc_id per hash)
     keepers = (
@@ -625,7 +626,7 @@ def cur_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("bigint"),
         lambda acc, x: acc + x,
     )
-    per_doc = docs.select(
+    per_doc = barrier(docs.select(
         "doc_id",
         F.size(toks).cast("bigint").alias("n_tokens"),
         wsum.alias("__wsum"),
@@ -633,7 +634,7 @@ def cur_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n_tokens",
         F.expr("(__wsum * 1000000) div n_tokens").alias("quality"),
-    ).localCheckpoint()  # feeds the count, band sums, total, and join back
+    ))  # feeds the count, band sums, total, and join back
     n_docs = per_doc.count()
     n_fine = max(1, n_docs // BUDGET_BAND_DOCS)
     w2 = max(1, _QUALITY_DOMAIN // n_fine)  # fine band width
@@ -644,9 +645,9 @@ def cur_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = per_doc.agg(F.sum("n_tokens").alias("__total")).select(
         F.expr(f"(__total * {BUDGET_PCT}) div 100").alias("budget")
     )
-    fsums = per_doc.groupBy("coarse", "fine").agg(
+    fsums = barrier(per_doc.groupBy("coarse", "fine").agg(
         F.sum("n_tokens").alias("ft")
-    ).localCheckpoint()  # feeds the coarse rollup AND the fine offsets
+    ))  # feeds the coarse rollup AND the fine offsets
     csums = fsums.groupBy("coarse").agg(F.sum("ft").alias("ct"))
     wc = Window.orderBy(F.desc("coarse")).rowsBetween(
         Window.unboundedPreceding, -1
@@ -774,9 +775,7 @@ def cur_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round((F.col("rb") + F.col("off")) / F.col("w"), 9).alias("vt"),
         )
     )
-    pool = vt.orderBy("vt", "doc_id").limit(SCHED_N).localCheckpoint(
-        eager=False
-    )
+    pool = barrier(vt.orderBy("vt", "doc_id").limit(SCHED_N), eager=False)
     a, b = pool.alias("a"), pool.alias("b")
     better = (F.col("b.vt") < F.col("a.vt")) | (
         (F.col("b.vt") == F.col("a.vt"))

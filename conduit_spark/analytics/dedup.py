@@ -28,11 +28,13 @@ oracle.
 
 from __future__ import annotations
 
+import contextlib
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from conduit_spark.analytics import combination_pairs, ordered_result
-from conduit_spark.plans import iteration_barrier
+from conduit_spark.plans import barrier, iteration_barrier, scoped_cache
 from conduit_spark.functions.hashing import (
     MINHASH_PRIME,
     md5_int32,
@@ -205,16 +207,16 @@ def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # feeds signature building, per-doc counts and the verify — all
     # three are duplicate-insensitive in-row folds, so the corpus-wide
     # groupBy(doc_id) exchanges of the r1-r13 shapes disappear.
-    # localCheckpoint, not persist: CacheManager entries outlive the
+    # a checkpoint, not persist: CacheManager entries outlive the
     # query (the cur_boilerplate leak class, ADVICE r7) while
     # checkpoint blocks free with the DataFrame
-    garr = _doc_grams_df(docs).localCheckpoint()
+    garr = barrier(_doc_grams_df(docs))
     sigs = garr.select("doc_id", *_sig_cols())
     # checkpoint the small (doc_id, band, bucket) relation so the
     # hot-bucket agg and both sides of the candidate self-join read the
     # materialization instead of re-running the signature pipeline
     # (self-referencing plans recompute, they don't reuse)
-    bb = _band_buckets(sigs).localCheckpoint()
+    bb = barrier(_band_buckets(sigs))
     hot = (
         bb.groupBy("band", "bucket")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -303,7 +305,7 @@ def connected_components(pairs: DataFrame) -> DataFrame:
 
     Iterative min-label propagation: per round one keyed join (edge →
     neighbor label), one groupBy(min), one keyed update — all shuffles
-    on node id. ``localCheckpoint`` truncates lineage so the plan stays
+    on node id. A per-round checkpoint truncates lineage so the plan stays
     constant-size across rounds; the loop exits when a round changes no
     label (the per-round ``count`` is a scalar aggregate, not a data
     collect). Converges in O(component diameter) rounds.
@@ -311,19 +313,16 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     # materialize the (small) pair relation once — the symmetric union
     # below references it twice, and without this the upstream pair plan
     # (LSH candidate generation + verify) would evaluate twice
-    pairs = pairs.localCheckpoint()
-    edges = pairs.union(
-        pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
-    ).persist()
-    try:
+    pairs = barrier(pairs)
+    flipped = pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
+    with scoped_cache(pairs.union(flipped)) as edges:
         # init = round 0 for free: every node's label starts at
         # min(node, min neighbor) — one aggregation instead of a
         # distinct + a full propagation round
-        labels = (
+        labels = barrier(
             edges.groupBy(F.col("id_a").alias("node"))
             .agg(F.min("id_b").alias("m"))
             .select("node", F.least(F.col("node"), F.col("m")).alias("lbl"))
-            .localCheckpoint()
         )
         for _ in range(MAX_CC_ITERS):
             nbr_min = (
@@ -350,8 +349,6 @@ def connected_components(pairs: DataFrame) -> DataFrame:
             labels = upd.select("node", F.col("new_lbl").alias("lbl"))
             if changed == 0:
                 break
-    finally:
-        edges.unpersist()
     return labels
 
 
@@ -379,9 +376,7 @@ def d_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.selectExpr("id_a AS src", "id_b AS dst").unionAll(
         pairs.selectExpr("id_b AS src", "id_a AS dst")
     )
-    nodes = (
-        edges.select(F.col("src").alias("node")).distinct().localCheckpoint()
-    )
+    nodes = barrier(edges.select(F.col("src").alias("node")).distinct())
     n_nodes = nodes.count()  # scalar driver state, like k-means centroids
     if n_nodes == 0:
         # no near-dup pairs at all → empty result, not a divide-by-zero
@@ -392,7 +387,7 @@ def d_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = (1.0 - PAGERANK_D) / n_nodes
     rank = nodes.select("node", F.lit(1.0 / n_nodes).alias("r"))
     # r15: the power iterations materialize eagerly (per-round
-    # localCheckpoint), and each round's exchanges carry the node-sized
+    # checkpoint), and each round's exchanges carry the node-sized
     # rank relation — on the 4096x-reduced near-dup graph AQE's
     # per-stage jobs triple the round's job count for nothing. Gated on
     # the known n_nodes so a billion-node graph keeps AQE skew/coalesce
@@ -421,7 +416,7 @@ def d_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             # (the 4096x-reduced output of the LSH pipeline), and without
             # the cut each iteration's plan re-nests the previous one —
             # Catalyst analysis triples while the data stays tiny
-            rank = nodes.join(
+            rank = barrier(nodes.join(
                 summed, nodes.node == summed.dst, "left"
             ).select(
                 "node",
@@ -429,7 +424,7 @@ def d_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.lit(base)
                     + F.lit(PAGERANK_D) * F.coalesce(F.col("s"), F.lit(0.0))
                 ).alias("r"),
-            ).localCheckpoint()
+            ))
     return ordered_result(
         rank.select(
             F.col("node").alias("doc_id"), F.round("r", 9).alias("pagerank")
@@ -447,7 +442,7 @@ def d_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spark-first shape: iterative min-label propagation — per round one
     keyed join (edge → neighbor label) + one groupBy(min) + one keyed
-    label update, all shuffles on doc_id. ``localCheckpoint`` truncates
+    label update, all shuffles on doc_id. A checkpoint truncates
     lineage each round so the plan stays constant-size. Convergence in
     O(component diameter) rounds; near-dup components are shallow
     (chains of mutually-similar docs), and the loop exits as soon as a
@@ -508,12 +503,12 @@ def d_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@contextlib.contextmanager
 def _capped_shingle_stats(docs: DataFrame):
-    """``(counts, inter, sh_cache)`` over the DF-capped shingle space —
-    callers MUST ``sh_cache.unpersist()`` once their result is
-    materialized, and in a ``finally`` (both consumers do, right after
-    ``ordered_result``'s eager checkpoint; the helper releases it
-    itself if it fails before returning) —
+    """Context manager yielding ``(counts, inter)`` over the DF-capped
+    shingle space; the shingle cache under both lives until the
+    ``with`` block exits, so consumers materialize their result
+    (``ordered_result``'s eager checkpoint) inside it —
     the shared engine of :func:`d_ngram_jaccard` and
     :func:`d_containment_pairs` (r14 restructure, guide §2.4 + the
     ``_banded_hamming_pairs`` precedent measured 2.0→1.1s in r12):
@@ -539,7 +534,7 @@ def _capped_shingle_stats(docs: DataFrame):
       b.doc_id`` predicate. With ``counts`` in-row, ``grouped`` has a
       single consumer and needs no checkpoint of its own.
     """
-    garr = _doc_grams_df(docs).localCheckpoint()
+    garr = barrier(_doc_grams_df(docs))
     # r15: ONE explode, ONE exchange over the gram relation. The r14
     # shape exploded ``garr`` twice — once under the hot-count
     # aggregation, once under ``grouped`` — and each pass paid the
@@ -547,28 +542,23 @@ def _capped_shingle_stats(docs: DataFrame):
     # 11.6 + 13.6 core-s, the query's two dominant stages). The
     # exploded relation is now hash-repartitioned by shingle ONCE and
     # cached; a cached repartition PRESERVES its output partitioning
-    # (unlike localCheckpoint), so both the hot count and the
+    # (unlike a checkpoint), so both the hot count and the
     # collect_list grouping aggregate in place with no further
     # exchange and no second explode. The repartition width is left to
     # AQE (the explicit-width variant measured slower at fixture scale
     # and a constant would be wrong at cluster scale). Cache posture:
     # MEMORY_AND_DISK of the same bytes the r14 shape wrote through
-    # its second exchange; the bench frees the blocks synchronously
-    # after each run and other consumers free via the ContextCleaner.
-    # Same-window A/B d_containment_pairs 2.35 -> 1.85s, rows
+    # its second exchange, released when the consumer's ``with`` block
+    # exits. Same-window A/B d_containment_pairs 2.35 -> 1.85s, rows
     # identical; hot keeps its eager checkpoint (two consumers).
-    raw_sh = (
-        garr.select("doc_id", F.explode("hs").alias("x"))
-        .repartition("x")
-        .persist()
-    )
-    try:
-        hot = (
+    with scoped_cache(
+        garr.select("doc_id", F.explode("hs").alias("x")).repartition("x")
+    ) as raw_sh:
+        hot = barrier(
             raw_sh.groupBy("x")
             .agg(F.count(F.lit(1)).alias("df"))
             .filter(F.col("df") > NGRAM_DF_CAP)
             .select("x")
-            .localCheckpoint()
         )
         # r15 scale guard (VERDICT r14 item 5 / ADVICE r14): the in-row
         # ``size(hs) − |hs ∩ hot|`` fast path folds the ENTIRE hot-shingle
@@ -577,7 +567,7 @@ def _capped_shingle_stats(docs: DataFrame):
         # boilerplate-heavy corpus the hot set grows ∝ corpus/cap and a
         # single million-entry array row plus an O(|hot|)-per-document
         # in-row intersect is the wrong shape. ``hot`` is already
-        # materialized (eager localCheckpoint above), so sizing it is one
+        # materialized (eager barrier above), so sizing it is one
         # tiny job over checkpoint blocks; above the cap, fall back to the
         # exploded anti-join + groupBy(doc_id) count — the pre-r14 shape
         # whose per-task state is bounded regardless of |hot| — and let
@@ -616,10 +606,7 @@ def _capped_shingle_stats(docs: DataFrame):
             .groupBy("id_a", "id_b")
             .agg(F.count(F.lit(1)).alias("n_inter"))
         )
-    except BaseException:
-        raw_sh.unpersist()  # the caller never receives it
-        raise
-    return counts, inter, raw_sh
+        yield counts, inter
 
 
 def d_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -638,8 +625,7 @@ def d_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared :func:`_capped_shingle_stats` group-and-combine shape (r14)
     — no shingle self-join."""
     docs = load_table(spark, sf_dir, "documents", fanout=True)
-    counts, inter, sh_cache = _capped_shingle_stats(docs)
-    try:
+    with _capped_shingle_stats(docs) as (counts, inter):
         joined = (
             inter.join(counts.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n", "n_a"), "id_a")
             .join(counts.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n", "n_b"), "id_b")
@@ -656,13 +642,6 @@ def d_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("jaccard") >= 0.05)
             .transform(ordered_result, "id_a", "id_b")
         )
-    finally:
-        # ordered_result materialized the result eagerly (or raised),
-        # so release the shingle cache NOW rather than pin a
-        # corpus-gram-sized CacheManager entry for the session (the
-        # ADVICE-r7 leak class). Under a plan audit the sort is lazy
-        # and a re-execution merely recomputes the cache.
-        sh_cache.unpersist()
 
 
 # Asymmetric containment threshold: c(A,B) = |S_A ∩ S_B| / |S_A| (Broder's
@@ -691,8 +670,7 @@ def d_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     two broadcast-sized count joins. The only delta is the final ratio
     arithmetic — containment adds no new shuffle."""
     docs = load_table(spark, sf_dir, "documents", fanout=True)
-    counts, inter, sh_cache = _capped_shingle_stats(docs)
-    try:
+    with _capped_shingle_stats(docs) as (counts, inter):
         joined = inter.join(
             counts.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n", "n_a"),
             "id_a",
@@ -712,8 +690,6 @@ def d_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .transform(ordered_result, "id_a", "id_b")
         )
-    finally:
-        sh_cache.unpersist()  # see d_ngram_jaccard — freed post-materialization
 
 
 def d_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -832,9 +808,9 @@ def d_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 64-bit fingerprint with 16-bit bands so bucket cardinality
     scales, keeping this plan shape unchanged.
     """
-    fps = _simhash_fps(
+    fps = barrier(_simhash_fps(
         load_table(spark, sf_dir, "documents", fanout=True)
-    ).localCheckpoint()
+    ))
     bands = F.array(
         *[
             F.struct(
@@ -944,14 +920,14 @@ def contamination_scores(docs: DataFrame) -> DataFrame:
     ``_contamination_from_grams(contam_grams_cached(...))`` so the
     gram relation materializes once."""
     n = F.size(F.split(F.col("text"), " "))
-    rel = docs.filter(n >= CONTAM_K).select(
+    rel = barrier(docs.filter(n >= CONTAM_K).select(
         "doc_id",
         F.explode(
             F.array_distinct(
                 F.transform(word_grams(CONTAM_K), lambda g: md5_int32(g))
             )
         ).alias("x"),  # in-row hash-level dedup — zero shuffles
-    ).localCheckpoint()
+    ))
     return _contamination_from_grams(rel)
 
 
@@ -1033,7 +1009,7 @@ def d_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" j -> array_join(slice(toks, (j - 1) * {SPAN_W} + 1,"
         f" {SPAN_W}), ' ')))[0]"
     )
-    occ = (
+    occ = barrier(  # feeds the winner agg AND the join back
         docs.filter(F.size(F.split(F.col("text"), " ")) >= SPAN_W)
         .select("doc_id", F.posexplode(spans).alias("span_idx", "span"))
         .select(
@@ -1042,7 +1018,6 @@ def d_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             md5_int32(F.col("span")).alias("h"),
             (F.col("doc_id") * _SPAN_ENC + F.col("span_idx")).alias("occ_key"),
         )
-        .localCheckpoint()  # feeds the winner agg AND the join back
     )
     winners = occ.groupBy("h").agg(F.min("occ_key").alias("win_key"))
     return (
@@ -1118,13 +1093,13 @@ def d_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(old_hash, "th")
         .select("doc_id", "exact_match_id")
     )
-    # both roles read the same relation; localCheckpoint (not
+    # both roles read the same relation; a checkpoint (not
     # persist) so the blocks free with the DataFrame. r14: per-doc
     # distinct-hash ARRAYS — signatures, counts and the verify are all
     # in-row folds (see :func:`_doc_grams_df`), no groupBy(doc_id).
-    garr = _doc_grams_df(docs).localCheckpoint()
+    garr = barrier(_doc_grams_df(docs))
     sigs = garr.select("doc_id", *_sig_cols())
-    bb = _band_buckets(sigs).withColumn("is_new", _is_new()).localCheckpoint()
+    bb = barrier(_band_buckets(sigs).withColumn("is_new", _is_new()))
     hot = (
         bb.filter(~F.col("is_new"))
         .groupBy("band", "bucket")
@@ -1279,10 +1254,9 @@ def d_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(F.split(F.col("text"), " ")).cast("bigint").alias("n_tokens"),
     )
-    occ = (
+    occ = barrier(  # feeds the corpus count AND the join back
         base.select("doc_id", F.posexplode(grams).alias("j", "gram"))
         .select("doc_id", "j", md5_int32(F.col("gram")).alias("h"))
-        .localCheckpoint()  # feeds the corpus count AND the join back
     )
     dup_h = occ.groupBy("h").agg(F.count(F.lit(1)).alias("c")).filter(
         F.col("c") >= 2

@@ -43,6 +43,7 @@ from pyspark.sql.types import (
 )
 
 from conduit_spark.analytics import combination_pairs, ordered_result
+from conduit_spark.plans import barrier
 from conduit_spark.sources.tables import load_table
 
 MEDIA_SCHEMA = StructType(
@@ -1344,9 +1345,9 @@ def m_ahash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would otherwise run single-worker; a round-robin repartition of
     # the slim doc_id relation is ~free. At corpus scale the scan is
     # already thousands of partitions and the branch is skipped.
-    fps = docs.mapInPandas(
+    fps = barrier(docs.mapInPandas(
         run, "media_id long, fp_hi long, fp_lo long"
-    ).localCheckpoint()
+    ))
     # Banding + capped pair generation + hamming verify: the shared
     # tail (r12 restructure: groupBy + in-codegen combination explode
     # replaces the r11 bucket self-join — two shuffle legs + join down
@@ -1484,9 +1485,9 @@ def a_fp_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    fps = docs.mapInPandas(
+    fps = barrier(docs.mapInPandas(
         run, "media_id long, fp_hi long, fp_lo long"
-    ).localCheckpoint()
+    ))
     return _banded_hamming_pairs(
         fps, A_FP_BANDS, A_FP_BUCKET_CAP, A_FP_MAX_HAMMING
     )
@@ -1603,9 +1604,9 @@ def m_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out["fp_lo"].append(bits & 0xFFFFFFFF)
             yield pd.DataFrame(out)
 
-    fps = docs.mapInPandas(
+    fps = barrier(docs.mapInPandas(
         run, "media_id long, fp_hi long, fp_lo long"
-    ).localCheckpoint()
+    ))
     return _banded_hamming_pairs(
         fps, PHASH_BANDS, PHASH_BUCKET_CAP, PHASH_MAX_HAMMING
     )
@@ -1677,9 +1678,9 @@ def m_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out["fp_lo"].append(bits & 0xFFFFFFFF)
             yield pd.DataFrame(out)
 
-    fps = docs.mapInPandas(
+    fps = barrier(docs.mapInPandas(
         run, "media_id long, fp_hi long, fp_lo long"
-    ).localCheckpoint()
+    ))
     return _banded_hamming_pairs(
         fps, DHASH_BANDS, DHASH_BUCKET_CAP, DHASH_MAX_HAMMING
     )

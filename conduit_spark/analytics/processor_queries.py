@@ -52,7 +52,7 @@ def _materialized_fixture(name: str, spark: SparkSession, sf_dir: str, build) ->
     to_json envelope-synthesis scaffolding re-run every repetition; and
     the parquet scan doubles as the CollapseProject barrier that keeps
     the synthesis from inlining into every downstream JSON-parse
-    reference (the old per-query ``localCheckpoint``). Correctness is
+    reference (the old per-query checkpoint). Correctness is
     unaffected — the first call builds and writes exactly the rows the
     inline plan produced."""
     import tempfile

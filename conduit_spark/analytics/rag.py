@@ -31,6 +31,7 @@ from conduit_spark.analytics.chunking import (
 )
 from conduit_spark.analytics.similarity import cosine
 from conduit_spark.operators.enrich import HASH_EMBED_DIM
+from conduit_spark.plans import barrier
 from conduit_spark.sources.tables import load_table
 
 TOP_K = 5
@@ -110,7 +111,7 @@ def _rank_topn(df: DataFrame, score_col: str, n: int) -> DataFrame:
     rank is an in-row count over that array. n is a constant (20), so
     the array is bounded by construction at any corpus size — the
     global-window smell never appears. r14: this replaced a
-    checkpointed n x n rank self-join — ``localCheckpoint`` (even
+    checkpointed n x n rank self-join — a checkpoint (even
     lazy) forces full Catalyst planning of the scoring subtree at
     construction, ~0.9s per leg for the embed pipeline, and the
     self-join added two more plan copies. Same (doc_id, rank) rows."""
@@ -308,10 +309,9 @@ def _hn_scored(docs: DataFrame) -> DataFrame:
     see bm25_scores_multi)."""
     from conduit_spark.analytics.text import bm25_scores_multi
 
-    return (
+    return barrier(
         bm25_scores_multi(docs, HN_QUERIES)
         .select("query_id", "doc_id", "bm25")
-        .localCheckpoint()
     )
 
 
@@ -325,7 +325,7 @@ def rag_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline (|q|-row broadcast relations, no windows) ended by
     orderBy+limit — TakeOrdered, never a global sort. The three
     (1+HN_K)-row legs union into an 18-row pool, materialized once
-    (``localCheckpoint``) and ranked by a count-of-better self-join —
+    (one barrier) and ranked by a count-of-better self-join —
     a broadcast join on a constant-size relation, the same shape the
     plan audit whitelists for s_mmr_rerank's bounded pool; no
     single-partition window anywhere. At 100 TB the legs are the only
@@ -346,7 +346,7 @@ def rag_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("query_id", "doc_id", "bm25")
         )
         pool = leg if pool is None else pool.unionByName(leg)
-    pool = pool.localCheckpoint()  # 18 rows; feeds both rank-join sides
+    pool = barrier(pool)  # 18 rows; feeds both rank-join sides
     a, b = pool.alias("a"), pool.alias("b")
     better = (F.col("b.bm25") > F.col("a.bm25")) | (
         (F.col("b.bm25") == F.col("a.bm25"))
@@ -460,10 +460,9 @@ def rag_context_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("query_id", "doc_id", "bm25")
         )
         pool = leg if pool is None else pool.unionByName(leg)
-    pool = (
+    pool = barrier(  # 3 x PACK_POOL rows; feeds both rank sides
         pool.join(ntok, "doc_id")
         .select("query_id", "doc_id", "bm25", "n_tokens")
-        .localCheckpoint()  # 3 x PACK_POOL rows; feeds both rank sides
     )
     a, b = pool.alias("a"), pool.alias("b")
     better = (F.col("b.bm25") > F.col("a.bm25")) | (

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from conduit_spark.sources.tables import load_events_raw, load_table
 from conduit_spark.analytics import ordered_result
+from conduit_spark.plans import barrier
 
 
 def _dec(col, scale: int = 2):
@@ -662,7 +663,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``agg(max)`` broadcast back as an equi-join — NOT a
     ``Window.partitionBy()`` over the aggregate, which would funnel
     every supplier row (10M at sf1000) into a single WindowExec task.
-    The aggregate is localCheckpoint-ed so the scalar max and the join
+    The aggregate is checkpointed so the scalar max and the join
     probe both read the materialized relation: exactly ONE lineitem
     scan (a naive self-reference re-evaluates the agg, and plan-level
     exchange reuse is not guaranteed under AQE replanning).
@@ -672,14 +673,14 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1996-04-01 00:00:00").cast("timestamp"))
     )
     supp = load_table(spark, sf_dir, "supplier")
-    rev = li.groupBy("l_suppkey").agg(
+    rev = barrier(li.groupBy("l_suppkey").agg(
         F.sum(
             _dec(F.col("l_extendedprice"))
             * (F.lit(1).cast("decimal(18,2)") - _dec(F.col("l_discount")))
         )
         .cast("double")
         .alias("total_revenue")
-    ).localCheckpoint(eager=True)
+    ))
     max_rev = rev.agg(F.max("total_revenue").alias("max_rev"))
     return (
         rev.join(
@@ -834,7 +835,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     (never a window over all offers — that single-tasks per-part data
     at scale). nation/region are SF-constant and broadcast; the two
     offer aggregations shuffle on (partkey[, suppkey]) only, and both
-    probe sides read ONE localCheckpoint-materialized offer relation,
+    probe sides read ONE checkpoint-materialized offer relation,
     so lineitem is scanned once. Unit price is an IEEE double division
     (double/double), bit-identical in Spark and DuckDB, so the
     min-equality join is exact.
@@ -843,31 +844,28 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast builds (the offers pre-filter and the final join) and,
     # as with q15's agg, exchange/subtree reuse is not guaranteed
     # across them under AQE — both relations re-scanned and re-joined
-    # once per consumer. One localCheckpoint each runs them once
+    # once per consumer. One barrier each runs them once
     # (calm-box A/B 1.04 → 0.88s, rows proven equal).
-    part = (
+    part = barrier(
         load_table(spark, sf_dir, "part")
         .filter((F.col("p_type") == "STANDARD") & (F.col("p_size") <= 10))
-        .localCheckpoint()
     )
     nat = load_table(spark, sf_dir, "nation")
     reg = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    supp = (
+    supp = barrier(
         load_table(spark, sf_dir, "supplier")
         .join(F.broadcast(nat), F.col("s_nationkey") == nat.n_nationkey)
         .join(F.broadcast(reg), F.col("n_regionkey") == reg.r_regionkey)
         .select("s_suppkey", "s_name", "s_acctbal", "n_name")
-        .localCheckpoint()
     )
     li = load_table(spark, sf_dir, "lineitem")
-    offers = (
+    offers = barrier(
         li.join(part.select("p_partkey"), li.l_partkey == F.col("p_partkey"))
         .join(supp.select("s_suppkey"), li.l_suppkey == F.col("s_suppkey"))
         .groupBy("l_partkey", "l_suppkey")
         .agg(
             F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("unit_cost")
         )
-        .localCheckpoint(eager=True)
     )
     best = offers.groupBy(F.col("l_partkey").alias("bk")).agg(
         F.min("unit_cost").alias("min_cost")
@@ -907,11 +905,10 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     value_expr = _dec(F.col("l_extendedprice")) * (
         F.lit(1).cast("decimal(18,2)") - _dec(F.col("l_discount"))
     )
-    per_part = (
+    per_part = barrier(
         li.join(supp.select("s_suppkey"), li.l_suppkey == F.col("s_suppkey"))
         .groupBy("l_partkey")
         .agg(F.sum(value_expr).alias("value_dec"))
-        .localCheckpoint(eager=True)
     )
     # Threshold compare stays in exact decimal end-to-end — a
     # double-rounded boundary could flip a borderline part between
@@ -951,14 +948,13 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_shipdate")
         > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
     ).cast("int")
-    pair = (
+    pair = barrier(
         li.join(
             orders.select("o_orderkey", "o_orderdate"),
             li.l_orderkey == F.col("o_orderkey"),
         )
         .groupBy("l_orderkey", "l_suppkey")
         .agg(F.sum(late).alias("late_lines"))
-        .localCheckpoint(eager=True)
     )
     ostats = pair.groupBy(F.col("l_orderkey").alias("ok")).agg(
         F.count(F.lit(1)).alias("n_supp"),
@@ -999,6 +995,17 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``pmod(xxhash64(key, linenumber), S)`` — deterministic, no RNG, so
     retried tasks produce identical output (speculative execution
     safe). Everything stays whole-stage-codegen column algebra.
+
+    Memory bound: the ShuffledHashJoin builds each task's hash relation
+    from the replicated orders side entirely in memory and does not
+    spill, so one task holds about ``|orders| x SALT_BUCKETS / P`` rows
+    (orders keys are unique, so there is no build-side skew). With AQE
+    on, P is the coalesced partition count, which aims each partition
+    at ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` of shuffle
+    data (64 MB by default); with AQE off it is
+    ``spark.sql.shuffle.partitions``, which must then grow with SF
+    (sf1000: 1.5e9 orders x 8 / 2000 partitions = 6M build rows per
+    task).
     """
     li = load_table(spark, sf_dir, "lineitem").withColumn(
         "__salt",
@@ -1158,7 +1165,8 @@ def bloom_runtime_filter(build_df: DataFrame, key: str):
     (the same state Spark's own ``InjectRuntimeFilter`` coordinates)
     and ships to executors as ONE ARRAY<BIGINT> literal; the probe is
     ``getbit(element_at(words, pos div 64), pos % 64)`` — pure column
-    algebra, K probes per row, inside WholeStageCodegen.
+    algebra, K probes per row (see the note in ``might_contain`` on
+    how it is evaluated).
 
     History (round 7): the original probe read a HEX-STRING literal
     with substr+conv. At m=2^18 that literal is 65,536+ chars — past
@@ -1178,7 +1186,7 @@ def bloom_runtime_filter(build_df: DataFrame, key: str):
     # distinct set is the part both need, and it is checkpoint-sized by
     # construction). Bits from distinct keys equal bits from raw keys:
     # OR-ing a key's positions twice is idempotent.
-    keys = build_df.select(key).distinct().localCheckpoint()
+    keys = barrier(build_df.select(key).distinct())
     n_keys = keys.count()
     m = BLOOM_RF_MIN_M
     while m < min(BLOOM_RF_MAX_M, n_keys * BLOOM_RF_BITS_PER_KEY):
@@ -1220,7 +1228,12 @@ def bloom_runtime_filter(build_df: DataFrame, key: str):
         # collect and the probe job. With the capture, the literal is
         # one subtree and the probes reference the lambda variable.
         # Identical probe semantics: same xxhash64/pmod positions, same
-        # getbit word/bit test, evaluated in the same codegen.
+        # getbit word/bit test. NOT the same evaluation: ``transform``
+        # is a higher-order function (CodegenFallback), so
+        # ``explain("codegen")`` shows the probing Filter outside
+        # WholeStageCodegen (no ``*(n)`` marker; the scan under it
+        # becomes its own ColumnarToRow stage) and the transform
+        # subtree runs through its interpreted ``eval`` per row.
         def probe(ws):
             out = None
             for j in range(BLOOM_RF_K):

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from conduit_spark.functions.hashing import md5_int32, sql_md5_int32
 from conduit_spark.sources.tables import load_table
 from conduit_spark.analytics import ordered_result
+from conduit_spark.plans import barrier
 
 # per-language keep rates (the stratification config)
 RATES = {"en": 0.5, "de": 0.25, "fr": 0.25, "es": 0.1}
@@ -185,10 +186,10 @@ def smp_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (bounded by 512 buckets/doc — far smaller than the gram stream),
     # materialized once so the histogram and the per-doc scoring don't
     # each recompute the corpus-wide explode
-    pdb = (
+    pdb = barrier(
         grams.groupBy("doc_id", "source", "tgt", "b")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=False)
+        .agg(F.count(F.lit(1)).alias("n")),
+        eager=False,
     )
     hist = pdb.groupBy("b").agg(
         F.sum(F.when(F.col("tgt"), F.col("n")).otherwise(0)).alias("ct"),
@@ -385,9 +386,9 @@ def smp_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (warm A/B below in OPTIMIZATION_r15.md); unconditional because a
     # scalar agg's exchange is O(partitions) rows at ANY corpus size.
     with tiny_loop_aqe_off(spark):
-        vecs = emb.select(
+        vecs = barrier(emb.select(
             "vec_id", F.expr(_QUANT_EXPR).alias("q")
-        ).localCheckpoint()
+        ))
         first = (
             vecs.orderBy("vec_id").limit(1).select("vec_id", "q").collect()[0]
         )

@@ -25,6 +25,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from conduit_spark.analytics import combination_pairs, ordered_result
+from conduit_spark.plans import barrier
 from conduit_spark.functions.hashing import (
     hyperplanes,
     md5_int32,
@@ -206,10 +207,9 @@ def s_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hot-bucket agg, the anti-join, and BOTH sides of the candidate
     # self-join — without this the 24-hyperplane bucket expression
     # (24 × 64-element fold per row) evaluates ~4×
-    bb = (
+    bb = barrier(
         emb.select("vec_id", F.explode(bands).alias("bb"))
         .select("vec_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-        .localCheckpoint()
     )
     hot = (
         bb.groupBy("band", "bucket")
@@ -265,7 +265,7 @@ def s_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # materialize the bucket assignment once: both join sides use it,
     # and the 8-plane expression is ~8 × 64-element folds per row
-    be = emb.withColumn("bucket", lsh_bucket("embedding")).localCheckpoint()
+    be = barrier(emb.withColumn("bucket", lsh_bucket("embedding")))
     a = be.select(F.col("vec_id").alias("src"), "bucket", F.col("embedding").alias("ea"))
     b = be.select(F.col("vec_id").alias("dst"), "bucket", F.col("embedding").alias("eb"))
     scored = (
@@ -767,7 +767,7 @@ def _lloyd_cached(spark: SparkSession, sf_dir: str):
     iterations are unchanged).
 
     Round 14: the cache holds TEMP-PARQUET paths, not live
-    localCheckpoint handles (the ``_materialized_fixture`` treatment).
+    checkpoint handles (the ``_materialized_fixture`` treatment).
     The checkpointed blocks a cached DataFrame pinned for the rest of
     the session were the leading suspect for the r13 in-suite
     inflation window (VERDICT r13 item 1), and a parquet
@@ -812,9 +812,9 @@ def _lloyd(emb: DataFrame):
     and the final centroid relation — so the trainer query and
     consumers (semantic dedup's assignment) share one loop and cannot
     drift from the SQL oracle's unrolled iterations."""
-    vecs = emb.select(
+    vecs = barrier(emb.select(
         "vec_id", F.expr(_QUANT_EXPR).alias("q")
-    ).localCheckpoint()
+    ))
     k = _kmeans_k(vecs.count())
     cents = [
         (r["vec_id"], list(r["q"]))
@@ -911,9 +911,9 @@ def s_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = [
         (r["cl"], list(r["carr"])) for r in cents_df.orderBy("cl").collect()
     ]
-    assigned = vecs.select(
+    assigned = barrier(vecs.select(
         "vec_id", _assign_udf(cents)(F.col("q")).alias("cluster_id")
-    ).localCheckpoint()
+    ))
     a, b = assigned.alias("a"), assigned.alias("b")
     cand = a.join(
         b,
@@ -993,9 +993,9 @@ def d_semantic_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = [
         (r["cl"], list(r["carr"])) for r in cents_df.orderBy("cl").collect()
     ]
-    assigned = vecs.select(
+    assigned = barrier(vecs.select(
         "vec_id", _assign_udf(cents)(F.col("q")).alias("cluster_id")
-    ).localCheckpoint()
+    ))
     is_bench = F.col("vec_id") % SEM_CONTAM_MOD == 0
     bench = assigned.filter(is_bench).select(
         F.col("cluster_id"), F.col("vec_id").alias("bench_id")
@@ -1329,9 +1329,9 @@ def s_pq_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     PQ_M × 16 × 16 ints.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    vecs = emb.select(
+    vecs = barrier(emb.select(
         "vec_id", F.expr(_QUANT_EXPR).alias("fq")
-    ).localCheckpoint()
+    ))
     # ALL subspaces ride one (m, vec_id, q) relation (narrow slice
     # explode off the shared checkpoint): r14 fused the PQ_M sequential
     # per-subspace loops — 8 driver collects + a 4-branch union whose

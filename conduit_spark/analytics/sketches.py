@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from conduit_spark.analytics import ordered_result
 from conduit_spark.analytics.dedup import SHINGLE_W, word_grams
 from conduit_spark.functions.hashing import md5_int32, sql_md5_int32
+from conduit_spark.plans import barrier
 from conduit_spark.sources.tables import load_table
 
 KMV_K = 64
@@ -397,10 +398,9 @@ def sk_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents", fanout=True)
     n = F.size(F.split(F.col("text"), " "))
-    per_doc = (
+    per_doc = barrier(  # one scan feeds the filter AND the exact count
         docs.filter(n >= SHINGLE_W)
         .select("source", F.array_distinct(word_grams(SHINGLE_W)).alias("gs"))
-        .localCheckpoint()  # one scan feeds the filter AND the exact count
     )
     grams = per_doc.select("source", F.explode("gs").alias("gram"))
     seeds = F.array(*[F.lit(j) for j in range(BLOOM_K)])
@@ -521,12 +521,11 @@ def sk_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical to the SQL oracle here.
     """
     docs = load_table(spark, sf_dir, "documents", fanout=True)
-    counts = (
+    counts = barrier(  # feeds both the sketch build and the probe
         docs.select(F.explode(F.split(F.col("text"), " ")).alias("token"))
         .filter(F.col("token") != "")
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n_exact"))
-        .localCheckpoint()  # feeds both the sketch build and the probe
     )
     rows = F.explode(F.array(*[F.lit(r) for r in range(CMS_D)])).alias("r")
     keyed = counts.select(
@@ -599,10 +598,9 @@ def sk_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("x"),
     )
-    byhash = (
+    byhash = barrier(
         raw.groupBy("x")
         .agg(F.sort_array(F.collect_set("source")).alias("ss"))
-        .localCheckpoint()
     )
     # two-phase k-min (the _kmv_sketch shape) over the re-exploded
     # (source, x) orientation — already distinct by construction; the
@@ -614,12 +612,12 @@ def sk_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.slice(F.array_sort(F.collect_list("x")), 1, KMV_K).alias("mins"),
         F.count(F.lit(1)).alias("cnt"),
     )
-    sk = p1.groupBy("source").agg(
+    sk = barrier(p1.groupBy("source").agg(
         F.slice(
             F.array_sort(F.flatten(F.collect_list("mins"))), 1, KMV_K
         ).alias("hs"),
         F.sum("cnt").alias("n"),
-    ).localCheckpoint(eager=False)  # tiny; read by both pair legs
+    ), eager=False)  # tiny; read by both pair legs
     a, b = sk.alias("a"), sk.alias("b")
     pairs = a.join(b, F.col("a.source") < F.col("b.source")).select(
         F.col("a.source").alias("source_a"),
@@ -719,7 +717,7 @@ def sk_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     production run drops."""
     docs = load_table(spark, sf_dir, "documents", fanout=True)
     n = F.size(F.split(F.col("text"), " "))
-    rel = (
+    rel = barrier(  # feeds both sketch paths AND the exact count
         docs.filter(n >= SHINGLE_W)
         .select(
             "source",
@@ -736,7 +734,7 @@ def sk_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("x"),
         )
         .distinct()
-    ).localCheckpoint()  # feeds both sketch paths AND the exact count
+    )
     coords = hll_bucket_cols(rel)
     per_source = (
         coords.select("source", "bucket", "rho")

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from conduit_spark.functions.hashing import md5_int32, sql_md5_int32
 from conduit_spark.analytics import ordered_result
-from conduit_spark.plans import iteration_barrier
+from conduit_spark.plans import barrier, iteration_barrier
 from conduit_spark.sources.tables import load_table
 
 STOPWORDS = ("the", "a", "and", "of", "to", "in", "is", "it", "for", "on")
@@ -578,9 +578,9 @@ def _bpe_learn(spark: SparkSession, sf_dir: str):
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("wc"))
     )
-    w_rel = words.select(
+    w_rel = barrier(words.select(
         "w", F.regexp_replace(F.col("w"), "(.)", "($1)").alias("s"), "wc"
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     merges: list[tuple] = []
     with tiny_loop_aqe_off(spark):
         for t in range(1, BPE_MERGES + 1):
@@ -938,7 +938,7 @@ def t_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     from conduit_spark.analytics.dedup import _shingles_df
 
     docs = load_table(spark, sf_dir, "documents", fanout=True)
-    sh = _shingles_df(docs).localCheckpoint()
+    sh = barrier(_shingles_df(docs))
     first = sh.groupBy("x").agg(F.min("doc_id").alias("first_id"))
     out = (
         sh.join(first, "x")
@@ -1005,7 +1005,7 @@ def t_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("z")
     ).select(F.col("z.w1").alias("w1"), F.col("z.w2").alias("w2"))
-    bg = bg.localCheckpoint()  # feeds all four counts
+    bg = barrier(bg)  # feeds all four counts
     c12 = (
         bg.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c12"))

@@ -33,6 +33,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from conduit_spark.analytics import ordered_result
+from conduit_spark.plans import barrier
 from conduit_spark.analytics.dedup import word_grams
 from conduit_spark.analytics.text import STOPWORDS
 from conduit_spark.sources.tables import load_table
@@ -183,13 +184,13 @@ def cur_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in-row; the O(distinct x len) array scan cost MORE than the
     # exchange it saved — A/B'd and dropped, guide §1.1.)
     hs = F.transform(word_grams(BOILER_K), lambda g: md5_int60(g))
-    base = (
+    # a barrier, not persist: checkpoint blocks are freed when the
+    # DataFrame is GC'd, while the old persist() was never unpersisted
+    # and accumulated cached partitions across the
+    # gate+bench+scale_probe invocations of one session (ADVICE r7)
+    base = barrier(
         docs.filter(F.size(F.split(F.col("text"), " ")) >= BOILER_K)
         .select("doc_id", "source", hs.alias("hs"))
-        .localCheckpoint()  # not persist: checkpoint blocks are freed
-        # when the DataFrame is GC'd, while the old persist() was never
-        # unpersisted and accumulated cached partitions across the
-        # gate+bench+scale_probe invocations of one session (ADVICE r7)
     )
     boiler = (
         base.select(

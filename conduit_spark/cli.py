@@ -1484,7 +1484,7 @@ def _build_parser() -> argparse.ArgumentParser:
     p_plan.add_argument("--json", action="store_true", help="audit JSON only")
     p_plan.add_argument(
         "--as-executed", action="store_true",
-        help="audit the production plan WITH its localCheckpoint "
+        help="audit the production plan WITH its checkpoint "
         "barriers (default: barriers disabled so the audit sees the "
         "full upstream DAG)",
     )

@@ -92,6 +92,31 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
 
 
 _PYFILES_SENT: set[str] = set()
+_PKG_ZIP: str | None = None
+
+
+def _package_zip() -> str:
+    """This checkout's conduit_spark sources, zipped once per process
+    under a fresh temp name and removed at interpreter exit."""
+    global _PKG_ZIP
+    if _PKG_ZIP is None:
+        import atexit
+        import tempfile
+        import zipfile
+
+        pkg_dir = os.path.dirname(os.path.abspath(__file__))
+        fd, zpath = tempfile.mkstemp(prefix="conduit_spark_pkg_", suffix=".zip")
+        with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as zf:
+            for root, _dirs, files in os.walk(pkg_dir):
+                for fn in files:
+                    if fn.endswith(".py"):
+                        full = os.path.join(root, fn)
+                        zf.write(full, os.path.join(
+                            "conduit_spark", os.path.relpath(full, pkg_dir)
+                        ))
+        atexit.register(lambda: os.path.exists(zpath) and os.remove(zpath))
+        _PKG_ZIP = zpath
+    return _PKG_ZIP
 
 
 def _ensure_package_on_executors(spark: SparkSession) -> None:
@@ -100,30 +125,12 @@ def _ensure_package_on_executors(spark: SparkSession) -> None:
     Pandas-UDF closures reference this package by name; when the
     driver process was launched from outside the repo (the harness
     does), Python workers can't import it unless the package rides the
-    job. One zip per session, cached."""
+    job. One zip per process, added once per application."""
     app_id = spark.sparkContext.applicationId
     if app_id in _PYFILES_SENT:
         return
-    import tempfile
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"conduit_spark_pkg_{os.getpid()}.zip"
-    )
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fn in files:
-                    if not fn.endswith(".py"):
-                        continue
-                    full = os.path.join(root, fn)
-                    arc = os.path.join(
-                        "conduit_spark", os.path.relpath(full, pkg_dir)
-                    )
-                    zf.write(full, arc)
     try:
-        spark.sparkContext.addPyFile(zpath)
+        spark.sparkContext.addPyFile(_package_zip())
     except Exception:  # noqa: BLE001 — e.g. already added under this name
         pass
     _PYFILES_SENT.add(app_id)
@@ -151,7 +158,7 @@ def get_spark(
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or int(cpus))
     # Local mode runs driver AND all executor threads in one JVM whose
     # default heap is 1 GiB — far too small for 32 cores' shuffle +
-    # localCheckpoint blocks (measured: accumulated checkpoint blocks
+    # checkpoint blocks (measured: accumulated checkpoint blocks
     # from a 50-query batch thrash a 1 GiB heap into 5× slowdowns).
     # Only effective at JVM launch; ignored when attaching to an
     # existing session or a real cluster (where executors size it).

@@ -31,6 +31,8 @@ from typing import Callable
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from conduit_spark.plans import barrier, iteration_barrier
+
 WIN_COL = "win_start_us"  # partition column: window start in epoch micros
 
 # Upper bound on DISTINCT windows one micro-batch may touch. The merge
@@ -77,7 +79,7 @@ def merge_rollup_batch(
     rewritten."""
     from pyspark.errors import AnalysisException
 
-    batch_df = batch_df.localCheckpoint()  # small: changed windows only
+    batch_df = barrier(batch_df)  # small: changed windows only
     wins_df = batch_df.select(WIN_COL).distinct()
     wins = [
         r[WIN_COL] for r in wins_df.limit(MAX_WINDOWS_PER_BATCH + 1).collect()
@@ -100,8 +102,9 @@ def merge_rollup_batch(
         )
         # cut lineage to the target's files BEFORE overwriting them —
         # a lazy self-read-then-overwrite would race its own input.
-        # Materialized size = the touched windows' rows only.
-        merged = keep.unionByName(batch_df).localCheckpoint()
+        # Materialized size = the touched windows' rows only. Needed
+        # for correctness, so it stays real under a plan audit too.
+        merged = iteration_barrier(keep.unionByName(batch_df))
     except AnalysisException:  # first batch: target doesn't exist yet
         pass
     (

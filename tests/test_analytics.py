@@ -90,6 +90,42 @@ def test_failed_queries_release_their_caches(spark, sf_dir, monkeypatch):
     assert cache.isEmpty()
 
 
+def test_overlapping_tiny_loops_leave_aqe_on(spark):
+    """Two threads run tiny_loop_aqe_off blocks that would overlap as
+    A enters, B enters, A exits, B exits. Unserialized, B saves A's
+    "false" and restores it last, leaving AQE off for the session; the
+    loops must instead run one after the other and restore "true"."""
+    import threading
+
+    from conduit_spark.analytics import tiny_loop_aqe_off
+
+    key = "spark.sql.adaptive.enabled"
+    assert spark.conf.get(key) == "true"
+    a_in, b_in, a_out = threading.Event(), threading.Event(), threading.Event()
+
+    def loop_a():
+        with tiny_loop_aqe_off(spark):
+            a_in.set()
+            b_in.wait(2)  # B enters here only if the loops overlap
+        a_out.set()
+
+    def loop_b():
+        a_in.wait(60)
+        with tiny_loop_aqe_off(spark):
+            b_in.set()
+            a_out.wait(60)
+
+    threads = [threading.Thread(target=f) for f in (loop_a, loop_b)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(120)
+    try:
+        assert spark.conf.get(key) == "true"
+    finally:
+        spark.conf.set(key, "true")
+
+
 def test_rag_end_to_end(spark, sf_dir):
     from conduit_spark.analytics import rag
 

@@ -223,6 +223,58 @@ def test_audit_sees_through_checkpoint_barriers(spark, sf):
     assert seeing["smells"] == []
 
 
+def test_audit_mode_is_local_to_the_auditing_thread(spark):
+    """barriers_disabled() suspends barriers only for the thread that
+    entered it. While one thread builds a query for an audit, another
+    thread (an HTTP-control-plane pipeline, a streaming foreachBatch
+    callback) must still get a real checkpoint from barrier()."""
+    import threading
+
+    from conduit_spark.plans import barrier, barriers_disabled, barriers_suspended
+
+    entered, release = threading.Event(), threading.Event()
+    seen = {}
+
+    def auditor():
+        with barriers_disabled():
+            df = spark.range(10)
+            seen["suspended"] = barrier(df) is df
+            entered.set()
+            release.wait(60)
+
+    t = threading.Thread(target=auditor)
+    t.start()
+    try:
+        assert entered.wait(60)
+        assert not barriers_suspended()
+        plan = plan_of(barrier(spark.range(10)))
+    finally:
+        release.set()
+        t.join(60)
+    assert seen["suspended"]
+    assert "ExistingRDD" in plan
+
+
+def test_checkpoints_only_through_plans():
+    """Every lineage cut goes through conduit_spark.plans (barrier /
+    iteration_barrier): no other library module touches
+    ``.localCheckpoint``, so audit mode cannot miss a barrier."""
+    import ast
+    import pathlib
+
+    import conduit_spark
+
+    pkg = pathlib.Path(conduit_spark.__file__).parent
+    offenders = [
+        f"{path.relative_to(pkg)}:{node.lineno}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.name != "plans.py" or path.parent != pkg
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.Attribute) and node.attr == "localCheckpoint"
+    ]
+    assert not offenders, offenders
+
+
 def test_pack_blocks_global_window_is_bucket_level(spark, sf):
     """The only partition-less window in c_pack_blocks consumes the
     bucket aggregate (input already reduced by the groupBy), and the

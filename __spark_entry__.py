@@ -65,7 +65,7 @@ _REGISTRIES = [
 ]
 
 # Queries beyond the gate cap: 14 relational queries driver-green in
-# round 1 (CORRECTNESS_r01) plus round-2 additions that didn't fit the
+# round 1 plus round-2 additions that didn't fit the
 # 50 slots. All remain pytest/gate_check-verified against the same
 # DuckDB oracles every round, and bench.py times them.
 _EXTENDED = (

@@ -6,7 +6,8 @@ The driver records only the LAST ~2000 characters of stdout, so the
 final JSON line must stay small: the printed ``queries`` map holds the
 50-entry driver gate only (compact separators, 2-decimal timings —
 ~1.3 KB). The full suite (gate + extended relational) is still timed
-every run and written to ``BENCH_DETAIL.json`` next to this script.
+every run and written to ``BENCH_DETAIL.json`` next to this script,
+with the session's ``cpus``, as a wall-time trend.
 
 Gate queries are timed FIRST (best-of-``BENCH_GATE_RUNS``, default 2)
 so the scored numbers are steady-state and don't absorb GC/codegen
@@ -22,18 +23,26 @@ Each query executes fully on the cluster via the ``noop`` sink (no
 driver-side collect), so timings measure scan+shuffle+compute, not
 result transfer.
 
-Regression gate: full runs compare each query against its best-ever
-time in ``BENCH_HISTORY.json`` and exit 3 when any query is both
->1.3x slower AND >0.75s absolutely slower with no ``bench-waiver:
-<name>`` line in PERF.md (the absolute floor keeps the documented
-+/-8-14 pct contention band on sub-second queries from tripping it).
-The record JSON line is ALWAYS printed before exiting, so the
-driver's stdout-tail capture survives a failing gate. Set
-``BENCH_REGRESSION_STRICT=0`` to warn without failing.
+Counter gate: wall time on a shared host drifts 1.2-3x for hours, so
+the exit code reads only deterministic counters. For every query the
+run records the Spark jobs it launches and the distinct stages those
+jobs ran (skipped stages excluded), counted on a run after the query already ran once in this
+session (the last timed run, or one extra untimed run), so session
+artifacts built by a first run never enter the count and a
+``BENCH_QUERIES`` subset counts like a full run. The counts are
+compared exactly with ``BENCH_COUNTERS.json``, keyed by scale factor;
+the run exits 3 when any query's jobs or stages rise above its
+baseline. A key or query missing from the file is written into it and
+does not fail the run; an existing entry is never rewritten. A change
+that moves counts edits ``BENCH_COUNTERS.json`` in its own diff, where
+review sees it. The record JSON line is ALWAYS printed before
+exiting, so the driver's stdout-tail capture survives a failing gate.
 """
 
 from __future__ import annotations
 
+import contextlib
+import gc
 import json
 import os
 import sys
@@ -41,6 +50,9 @@ import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
+
+COUNTERS_PATH = os.path.join(REPO, "BENCH_COUNTERS.json")
+COUNTERS = ("jobs", "stages")
 
 
 def _persisted_rdd_ids(spark) -> set[int]:
@@ -55,17 +67,15 @@ def _persisted_rdd_ids(spark) -> set[int]:
 def _free_persisted_since(spark, before: set[int]) -> None:
     """Synchronously unpersist every RDD persisted since ``before``.
 
-    Round-14 fix for the r13 in-suite inflation window (VERDICT r13
-    item 1): ``del df; gc.collect()`` only drops DRIVER refs and leaves
-    the actual block frees to the asynchronous ContextCleaner (py4j
+    ``del df; gc.collect()`` only drops DRIVER refs and leaves the
+    actual block frees to the asynchronous ContextCleaner (py4j
     finalizer → JVM GC → cleaner queue), so localCheckpoint blocks from
     dozens of queries could pile up mid-suite and squeeze the unified
-    memory pool under the d_*/dq_* neighborhood. Explicitly
-    unpersisting the query's own blocks right after its timing is
-    deterministic and happens OUTSIDE the timed region. Cross-query
-    session state (``_materialized_fixture``, the Lloyd trainer cache)
-    lives in temp parquet, not persisted RDDs, so nothing freed here is
-    ever reused by a later query."""
+    memory pool. Explicitly unpersisting the query's own blocks right
+    after its timing is deterministic and happens OUTSIDE the timed
+    region. Cross-query session state (``_materialized_fixture``, the
+    Lloyd trainer cache) lives in temp parquet, not persisted RDDs, so
+    nothing freed here is ever reused by a later query."""
     try:
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
         for e in jmap.entrySet().toArray():
@@ -75,17 +85,63 @@ def _free_persisted_since(spark, before: set[int]) -> None:
         pass
 
 
-def _time_query(spark, fn, sf_dir: str, runs: int) -> float:
-    import gc
+@contextlib.contextmanager
+def new_jobs(spark):
+    """Yield a dict that is filled on exit with ``{job id: ids of the
+    stages that ran tasks}`` for every Spark job launched inside the
+    block.
 
+    Jobs are the status tracker's job-id delta. The listener bus that
+    feeds the tracker is asynchronous, so it is drained on both sides:
+    otherwise a job's start event can still be queued when the action
+    returns and the count would depend on timing. Skipped stages are
+    left out for the same reason: a job that reads a shuffle an earlier
+    job wrote lists it as a skipped stage under a NEW id when that
+    earlier job had already finished, and the same id when it had not,
+    so skipped ids vary from run to run while the stages that ran do
+    not."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(st.getJobIdsForGroup(None) or [])
+    jobs: dict[int, list[int]] = {}
+    yield jobs
+    bus.waitUntilEmpty()
+    for j in sorted(set(st.getJobIdsForGroup(None) or []) - before):
+        info = st.getJobInfo(j)
+        jobs[j] = [
+            int(s)
+            for s in (info.stageIds if info is not None else [])
+            if (si := st.getStageInfo(s)) is not None and si.numCompletedTasks
+        ]
+
+
+def _counters(jobs: dict[int, list[int]]) -> dict[str, int]:
+    """The gate's counters: jobs, and the distinct stages they ran."""
+    return {
+        "jobs": len(jobs),
+        "stages": len({s for ids in jobs.values() for s in ids}),
+    }
+
+
+def _time_query(spark, fn, sf_dir: str, runs: int, counts=None) -> float:
+    """Best-of-``runs`` wall time of ``fn`` written to the noop sink.
+
+    When ``counts`` is a dict, the jobs and stages of the LAST run are
+    stored in it; a single timed run then gets one extra untimed run,
+    so the count never sees a first run's session-artifact builds."""
     best = None
-    for _ in range(runs):
+    total = runs if counts is None else max(runs, 2)
+    for i in range(total):
         persisted_before = _persisted_rdd_ids(spark)
-        t0 = time.monotonic()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        dt = time.monotonic() - t0
-        best = dt if best is None else min(best, dt)
+        with new_jobs(spark) as jobs:
+            t0 = time.monotonic()
+            df = fn(spark, sf_dir)
+            df.write.format("noop").mode("overwrite").save()
+            dt = time.monotonic() - t0
+        if i < runs:
+            best = dt if best is None else min(best, dt)
         # Free this run's checkpoint/cache blocks NOW (outside the
         # timed region): the DataFrame ref drop + gc only queues the
         # blocks for the async ContextCleaner, which let 50+ queries'
@@ -93,162 +149,97 @@ def _time_query(spark, fn, sf_dir: str, runs: int) -> float:
         _free_persisted_since(spark, persisted_before)
         del df
         gc.collect()
+    if counts is not None:
+        counts.update(_counters(jobs))
     return best
 
 
-def _regression_report(
-    timings: dict[str, float], aa: dict | None = None
-) -> list[str]:
-    """Compare a FULL run against per-query best-ever history and
-    return human-readable lines for unwaived >1.3x && >0.75s
-    regressions; updates BENCH_HISTORY.json with new bests.
+def _warm_worker(batches):
+    # Import the heavyweight worker-side dependencies of the media/
+    # fingerprint and wire families once per pooled worker, so the
+    # first query of those families doesn't pay numpy + codec import
+    # in every worker inside its timed run.
+    try:  # fail-soft: warmup must never depend on pyfile shipping
+        import numpy  # noqa: F401
 
-    Persistence rule: a query only ALARMS when it exceeded the
-    threshold in TWO consecutive full runs. Best-ever captures each
-    query's luckiest run, and the variance-heavy mapInPandas queries
-    sit 1.5-3x above their best on ordinary machine jitter — measured
-    across four solo full runs, a DIFFERENT handful tripped every
-    time, while a real regression (a plan change) reproduces in every
-    run. First-time suspects are reported as warnings, not failures."""
-    hist_path = os.path.join(REPO, "BENCH_HISTORY.json")
-    try:
-        with open(hist_path) as f:
-            hist = json.load(f)
-    except (OSError, ValueError):
-        hist = {}
-    prev_suspects = set(hist.pop("__suspects__", []))
-    # __rebaselined__: audit trail for best-times that were RESET after
-    # a measurement-contamination fix (e.g. the round-8 persist-leak
-    # closures made several leak-assisted bests unreachable by honest
-    # runs). Each entry records {prev_best, floor, reason, round}; the
-    # query's live best in this file was reset to `floor` at marking
-    # time, so regression detection compares against the honest floor —
-    # a later genuinely-faster run still lowers the best normally.
-    rebaselined = hist.pop("__rebaselined__", {})
-    waived = set()
-    try:
-        with open(os.path.join(REPO, "PERF.md")) as f:
-            for ln in f:
-                if "bench-waiver:" in ln:
-                    tail = ln.split("bench-waiver:", 1)[1].strip()
-                    waived.add(tail.split()[0].strip("`,") if tail else "")
-    except OSError:
-        pass
-    # A/A control (VERDICT r9 item 3, BASELINE.md's own methodology):
-    # each full session times one fixed query twice under identical
-    # conditions; the measured delta is this session's noise band.
-    # ALARMS must clear BOTH the static 1.3x AND twice the session's
-    # own A/A noise — a session measuring 20% A/A jitter has no
-    # business alarming (or rebaselining a floor) on a 1.35x read.
-    # Two guards on the widening itself:
-    # - capped at 2.0x: a single bad A/A pair (transient stall on the
-    #   control query) must not grant the whole session a blank check;
-    # - SUSPECT STREAKS use the static threshold: a query that trips
-    #   1.3x during a noisy session stays suspect (no alarm), so a
-    #   persistent regression interleaved with noisy sessions still
-    #   alarms on its next quiet-session trip instead of cycling
-    #   warn/clear forever.
-    aa_frac = (aa or {}).get("delta_pct", 0.0) / 100.0
-    factor = max(1.3, min(2.0, 1.0 + 2.0 * aa_frac))
-    # Environment-shift detector (round-10, made SHIFT-IMMUNE in
-    # round-11 per VERDICT r10 item 2): the A/A pair bounds
-    # WITHIN-session jitter, but the r9/r10 drift class is a
-    # CROSS-session level shift — the whole box runs 1.3-1.7x slower
-    # for hours on identical code (verified r10 by running the
-    # morning-commit tree side-by-side on the slow box: same slow
-    # numbers; single- and 32-proc CPU microbenchmarks meanwhile
-    # normal). A real regression is sparse — one query, one plan; a
-    # box shift moves the whole fleet. The MEDIAN t/best ratio across
-    # the full run (queries with best >= 0.3s, sample >= 10) measures
-    # the shift. Round 10 demoted ALL alarms to watches when the
-    # median exceeded 1.25x — which left the gate blind inside shifted
-    # windows (two rounds running, the common case). Round-11 fix:
-    # every query's ratio is NORMALIZED by the session median
-    # (t / max(1, median)) and the alarm fires on the normalized
-    # value — weather multiplies the whole fleet and cancels out of
-    # the normalized ratio; a real 1.5x single-query regression reads
-    # ~1.5x normalized even inside a 1.45x shifted window and still
-    # alarms on its second consecutive trip. Suspect STREAKS stay on
-    # the raw static threshold so noisy sessions never silently clear
-    # a pending streak.
-    ratios = sorted(
-        t / hist[n]
-        for n, t in timings.items()
-        if isinstance(hist.get(n), (int, float)) and hist[n] >= 0.3
-    )
-    env_shift = ratios[len(ratios) // 2] if len(ratios) >= 10 else 1.0
-    env_slow = env_shift > 1.25
-    # normalization applies ONLY inside a declared shift — below the
-    # 1.25 trip the raw thresholds stand unchanged (a sub-trip median
-    # must not silently raise the alarm bar), and a fast box (median
-    # < 1) must never make alarms easier
-    eff = env_shift if env_slow else 1.0
-    if env_slow:
-        print(
-            f"bench-environment: median t/best across {len(ratios)} "
-            f"queries is {env_shift:.2f}x — box-level shift; alarms "
-            "judged on median-normalized ratios (streaks kept)"
+        from conduit_spark.analytics import media_codecs  # noqa: F401
+        from conduit_spark.functions import minis3  # noqa: F401
+        from conduit_spark.sources import (  # noqa: F401
+            postgres_wal,
+            s3_wire,
         )
+    except Exception:  # noqa: BLE001
+        pass
+    for b in batches:
+        yield b
+
+
+def warmup(spark, sf_dir: str, names) -> None:
+    """Pay a session's one-time costs before any timed query runs.
+
+    - JVM/codegen, so the first timed query doesn't absorb ~5s of
+      session start;
+    - the Python/Arrow worker pool: the first ``mapInPandas`` stage of
+      a session forks the daemon and one worker per core and pays the
+      worker imports in each (~3-4s);
+    - first scans of lineitem, documents and embeddings (footer reads);
+    - wire endpoints (``g_*``) and processor envelope fixtures
+      (``p_*``), which queries seed at construction time — only when
+      ``names`` selects such a query, so a one-query relational run
+      doesn't pay multi-second seeding it never reads."""
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(1).collect()
+    spark.range(32, numPartitions=32).mapInPandas(
+        _warm_worker, "id long"
+    ).write.format("noop").mode("overwrite").save()
+    spark.read.parquet(f"{sf_dir}/documents.parquet").limit(1).collect()
+    spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(1).collect()
+    if any(n.startswith("g_") for n in names):
+        from conduit_spark.analytics.pipeline_queries import (
+            warm_wire_endpoints,
+        )
+
+        warm_wire_endpoints(spark, sf_dir)
+    if any(n.startswith("p_") for n in names):
+        from conduit_spark.analytics.processor_queries import (
+            warm_processor_fixtures,
+        )
+
+        warm_processor_fixtures(spark, sf_dir)
+
+
+def gate(record_line: str, counts: dict, key: str,
+         path: str = COUNTERS_PATH) -> None:
+    """Compare ``counts`` ({query: {"jobs": n, "stages": m}}) with the
+    baseline entry ``key`` of ``path``; print one line per query whose
+    jobs or stages rose, then ``record_line``, and exit 3 if any rose.
+
+    Queries (or a whole key) missing from the baseline are added and
+    the file rewritten; existing entries are never changed."""
+    try:
+        with open(path) as f:
+            baseline = json.load(f)
+    except FileNotFoundError:
+        baseline = {}
+    entry = baseline.setdefault(key, {})
     bad = []
-    suspects = []
-    for name, t in timings.items():
-        best = hist.get(name)
-        if (
-            best is not None
-            and t > 1.3 * best
-            and t - best > 0.75
-            and name not in waived
-        ):
-            suspects.append(name)
-            t_norm = t / eff
-            line = (
-                f"{name} {t:.2f}s vs best {best:.2f}s ({t / best:.2f}x"
-                + (f", {t_norm / best:.2f}x median-normalized" if env_slow
-                   else "")
-                + ")"
-            )
-            if t <= factor * best:
-                print(f"bench-watch: {line} — inside the session A/A "
-                      f"band ({factor:.2f}x); streak kept, no alarm")
-            elif env_slow and (
-                t_norm <= max(1.3, factor) * best
-                or t_norm - best <= max(0.25, 0.3 * best)
-            ):
-                # The excess is fully explained by the fleet-wide shift.
-                # ADVICE r11: the normalized comparison honors the
-                # session's A/A-derived factor (a high-jitter shifted
-                # session must not alarm inside its own noise band), and
-                # the absolute slack scales with `best` (max(0.25,
-                # 0.3*best)) instead of a fixed 0.75s — a sub-second
-                # query with a large NORMALIZED regression is no longer
-                # unconditionally demoted during shifts, while multi-
-                # second queries keep a proportional jitter allowance.
-                print(f"bench-watch: {line} — inside the box-level "
-                      f"shift (median {env_shift:.2f}x); streak kept, "
-                      "no alarm")
-            elif name in prev_suspects:
-                bad.append(
-                    f"bench-regression: {line} — second consecutive run "
-                    f"over threshold; add 'bench-waiver: {name}' to "
-                    "PERF.md with a reason, or fix it"
-                )
-            else:
-                print(f"bench-watch: {line} — alarms if it repeats")
-        hist[name] = t if best is None else round(min(best, t), 4)
-    # Suspects for queries NOT in this run's timings carry over: a
-    # partial/subset-shaped full run must not erase prior suspect
-    # state, or the two-consecutive-runs alarm never fires (this wiped
-    # real suspects once in round 9 — ADVICE r9).
-    carried = {n for n in prev_suspects if n not in timings}
-    hist["__suspects__"] = sorted(set(suspects) | carried)
-    if aa is not None:
-        hist["__aa_control__"] = aa
-    hist["__env_shift__"] = round(env_shift, 4)
-    if rebaselined:
-        hist["__rebaselined__"] = rebaselined
-    with open(hist_path, "w") as f:
-        json.dump(hist, f, indent=1, sort_keys=True)
-    return bad
+    missing = {n: c for n, c in counts.items() if n not in entry}
+    for name, c in sorted(counts.items()):
+        ref = entry.get(name, c)
+        rose = [f"{k} {ref[k]} -> {c[k]}" for k in COUNTERS if c[k] > ref[k]]
+        if rose:
+            bad.append(f"bench-counter-regression: {name} "
+                       f"{', '.join(rose)} (baseline {key})")
+    if missing:
+        entry.update(missing)
+        with open(path, "w") as f:
+            json.dump(baseline, f, indent=1, sort_keys=True)
+            f.write("\n")
+    for ln in bad:
+        print(ln)
+    print(record_line)
+    if bad:
+        sys.exit(3)
 
 
 def main() -> None:
@@ -262,46 +253,6 @@ def main() -> None:
 
     spark = get_spark("conduit-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    # JVM/codegen warmup so the alphabetically-first query doesn't
-    # absorb ~5s of one-time session cost
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(1).collect()
-    # Python/Arrow worker-pool warmup: the first mapInPandas stage of a
-    # session forks the daemon + one worker per core and pays Arrow
-    # import in each — ~3-4s that round-6's gate charged to whichever
-    # mapInPandas query ran first (p_cdc_upsert: 5.52s driver vs 1.41s
-    # solo; VERDICT r6 item 3). One no-op pass over 32 partitions
-    # spins the whole pool up before any timed query runs.
-    def _noop(batches):
-        # Import the heavyweight worker-side dependencies of the media/
-        # fingerprint family once per pooled worker: the alphabetically
-        # FIRST gate query (a_fp_pairs) otherwise pays numpy + codec
-        # import in all 32 workers inside its timed run — the r14
-        # baseline read it 2.5x over its floor in-suite while
-        # warm-isolated it sits at 1.0x (same class as the r6
-        # mapInPandas pool spin-up this warmup already absorbs).
-        try:  # fail-soft: warmup must never depend on pyfile shipping
-            import numpy  # noqa: F401
-
-            from conduit_spark.analytics import media_codecs  # noqa: F401
-            from conduit_spark.functions import minis3  # noqa: F401
-            from conduit_spark.sources import (  # noqa: F401
-                postgres_wal,
-                s3_wire,
-            )
-        except Exception:  # noqa: BLE001
-            pass
-
-        for b in batches:
-            yield b
-
-    spark.range(32, numPartitions=32).mapInPandas(_noop, "id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
-    # The gate's first queries scan documents/embeddings, not lineitem —
-    # touch them too so first-scan footer reads don't land in a timed run.
-    spark.read.parquet(f"{sf_dir}/documents.parquet").limit(1).collect()
-    spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(1).collect()
     all_queries = entrymod.extended_queries()
     gate_names = set(entrymod.queries())
     subset = os.environ.get("BENCH_QUERIES")
@@ -310,61 +261,20 @@ def main() -> None:
         if subset
         else sorted(all_queries)
     )
-
-    # Wire-endpoint/fixture seeding happens at query CONSTRUCTION time
-    # (MiniS3/MiniKafka/MiniPG servers + capture files, cached per
-    # sf_dir). Seed them all before any timed query so wire-gate
-    # timings measure list+fetch+decode only — first-call seeding
-    # inside the timed path caused the drift that forced two r9
-    # rebaselines (VERDICT r9 item 4). Skipped when a BENCH_QUERIES
-    # subset selects no wire queries: a one-query relational run must
-    # not pay multi-second endpoint seeding it never reads.
-    if any(n.startswith("g_") for n in names):
-        from conduit_spark.analytics.pipeline_queries import (
-            warm_wire_endpoints,
-        )
-
-        warm_wire_endpoints(spark, sf_dir)
-    # Same treatment for the processor family's envelope fixtures
-    # (r12: the alphabetically-first extended p_* query is single-run
-    # timed and absorbed the whole family's 3-4s fixture synthesis —
-    # the p_avro_decode/encode watches; construction is eager on the
-    # fixture writes and runs no other actions).
-    if any(n.startswith("p_") for n in names):
-        from conduit_spark.analytics.processor_queries import (
-            warm_processor_fixtures,
-        )
-
-        warm_processor_fixtures(spark, sf_dir)
-
-    # History bests were recorded best-of-2 warm; a single extended run
-    # pays one-time costs (fixture materialization, first scan of a
-    # table, codegen) that read as 3-20x "regressions". Confirm before
-    # alarming: when a first run would trip the regression rule, re-run
-    # once and keep the min — a REAL regression reproduces, a one-time
-    # cost vanishes.
-    try:
-        with open(os.path.join(REPO, "BENCH_HISTORY.json")) as f:
-            hist_bests = json.load(f)
-    except (OSError, ValueError):
-        hist_bests = {}
-
-    def _timed(name: str, runs: int) -> float:
-        t = _time_query(spark, all_queries[name], sf_dir, runs)
-        best = hist_bests.get(name)
-        if best is not None and t > 1.3 * best and t - best > 0.75:
-            # two confirm runs: the first re-run of a heavy query often
-            # still carries its own first-run costs (pandas-UDF worker
-            # spin-up, shuffle-file page cache)
-            t = min(t, _time_query(spark, all_queries[name], sf_dir, 2))
-        return round(t, 4)
+    warmup(spark, sf_dir, names)
 
     timings: dict[str, float] = {}
+    counts: dict[str, dict] = {}
     # gate first (scored), extended after
-    for name in sorted(n for n in names if n in gate_names):
-        timings[name] = _timed(name, gate_runs)
-    for name in sorted(n for n in names if n not in gate_names):
-        timings[name] = _timed(name, ext_runs)
+    order = sorted(n for n in names if n in gate_names) + sorted(
+        n for n in names if n not in gate_names
+    )
+    for name in order:
+        counts[name] = {}
+        runs = gate_runs if name in gate_names else ext_runs
+        timings[name] = round(
+            _time_query(spark, all_queries[name], sf_dir, runs, counts[name]), 4
+        )
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
@@ -378,10 +288,12 @@ def main() -> None:
         "value": round(sum(timings.values()), 4),
         "unit": "sec",
         "queries": timings,
+        "counters": counts,
         "gate_total": round(sum(gate_timings.values()), 4),
         "gate_runs": gate_runs,
         "extended_runs": ext_runs,
         "sf": sf_val,
+        "cpus": spark.sparkContext.defaultParallelism,
     }
     # BENCH_QUERIES subset runs write a scratch file: the committed
     # BENCH_DETAIL.json must always be a FULL-suite record (a subset
@@ -392,63 +304,18 @@ def main() -> None:
 
     # Final stdout line: gate-only, compact, 2-decimal — must fit the
     # driver's 2000-char tail capture (full map is in BENCH_DETAIL.json).
-    line = json.dumps(
-        {
-            "metric": "conduit_spark_query_suite_total",
-            "value": round(sum(gate_timings.values()), 2),
-            "unit": "sec",
-            "queries": {n: round(t, 2) for n, t in sorted(gate_timings.items())},
-            "sf": sf_val,
-            "detail": detail_name,
-        },
-        separators=(",", ":"),
-    )
+    record = {
+        "metric": "conduit_spark_query_suite_total",
+        "value": round(sum(gate_timings.values()), 2),
+        "unit": "sec",
+        "queries": {n: round(t, 2) for n, t in sorted(gate_timings.items())},
+        "sf": sf_val,
+        "detail": detail_name,
+    }
+    line = json.dumps(record, separators=(",", ":"))
     if len(line) > 1800:  # hard guard: drop per-query map before overflowing
-        line = json.dumps(
-            {
-                "metric": "conduit_spark_query_suite_total",
-                "value": round(sum(gate_timings.values()), 2),
-                "unit": "sec",
-                "queries": {},
-                "sf": sf_val,
-                "detail": detail_name,
-            },
-            separators=(",", ":"),
-        )
-    # A/A noise control: time ONE fixed mid-weight pure-DataFrame gate
-    # query twice more, identically, at the end of the full run. The
-    # two same-code measurements bound this session's noise band
-    # (BASELINE.md measured +/-3% at 60s on an idle host); the
-    # regression gate widens its factor to 1 + 2*band, and floor
-    # rebaselines in BENCH_HISTORY.json are only legitimate when the
-    # observed regression exceeds the recorded band.
-    aa = None
-    if not subset:
-        aa_name = (
-            "q2_min_cost_supplier"
-            if "q2_min_cost_supplier" in all_queries
-            else sorted(gate_names)[0]
-        )
-        a = _time_query(spark, all_queries[aa_name], sf_dir, gate_runs)
-        b = _time_query(spark, all_queries[aa_name], sf_dir, gate_runs)
-        aa = {
-            "query": aa_name,
-            "a_sec": round(a, 4),
-            "b_sec": round(b, 4),
-            "delta_pct": round(abs(a - b) / max(min(a, b), 1e-9) * 100, 2),
-        }
-        print(f"bench-aa-control: {aa_name} {a:.2f}s/{b:.2f}s "
-              f"delta {aa['delta_pct']:.1f}%")
-
-    # Regression gate runs on FULL runs only (a subset run has no
-    # steady-state comparability) and reports BEFORE the record line
-    # so the driver tail always ends with the JSON.
-    bad = _regression_report(timings, aa) if not subset else []
-    for ln in bad:
-        print(ln)
-    print(line)
-    if bad and os.environ.get("BENCH_REGRESSION_STRICT", "1") != "0":
-        sys.exit(3)
+        line = json.dumps({**record, "queries": {}}, separators=(",", ":"))
+    gate(line, counts, f"sf{sf}")
 
 
 if __name__ == "__main__":

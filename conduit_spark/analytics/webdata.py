@@ -186,8 +186,8 @@ def cur_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     hs = F.transform(word_grams(BOILER_K), lambda g: md5_int60(g))
     # a barrier, not persist: checkpoint blocks are freed when the
     # DataFrame is GC'd, while the old persist() was never unpersisted
-    # and accumulated cached partitions across the
-    # gate+bench+scale_probe invocations of one session (ADVICE r7)
+    # and accumulated cached partitions across the repeated gate and
+    # bench invocations of one session
     base = barrier(
         docs.filter(F.size(F.split(F.col("text"), " ")) >= BOILER_K)
         .select("doc_id", "source", hs.alias("hs"))

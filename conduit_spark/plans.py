@@ -222,7 +222,15 @@ def audit_plan(df: DataFrame, query: str | None = None) -> dict:
             )
         )
     )
-    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
+    # One scan's list ends on its own line at the "]" before the next
+    # metadata key; Spark cuts a list longer than
+    # spark.sql.maxMetadataStringLength to "...", with no "]", and the
+    # cut stays visible in the result.
+    pushed = re.findall(
+        r"PushedFilters: \[(.*?)(?:\]|(?<=\.\.\.))(?=, [A-Z]\w*: |$)",
+        plan,
+        re.M,
+    )
     smells = []
     if _global_windows(plan):
         smells.append(SMELL_GLOBAL_WINDOW)

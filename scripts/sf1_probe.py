@@ -35,6 +35,11 @@ Exclusions (printed, not silent): the ``g_*`` connector-transport and
 cost is protocol work, not table scans, so an sf ratio is
 meaningless for them.
 
+Timing: ``bench.warmup`` (at SF_SMALL) runs before any timed query and
+each point is ``bench._time_query`` (min of SF1_RUNS), so the Python
+worker-pool spin-up and the sf0.1 first scans are outside every
+timing; sf1 first scans still land in each table's first sf1 read.
+
 Usage:
   python scripts/sf1_probe.py [names...]      # default: full suite
 Env: SF_SMALL (default /root/testdata/sf0.1), SF1_DIR
@@ -48,7 +53,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -156,6 +160,7 @@ def main() -> None:
     from conduit_spark import get_spark
 
     import __spark_entry__ as entrymod
+    from bench import _time_query, warmup
 
     runs = int(os.environ.get("SF1_RUNS", "1"))
     queries = entrymod.extended_queries()
@@ -177,25 +182,15 @@ def main() -> None:
     print(f"probing {len(names)} queries; skipping {len(skipped)} "
           f"fixture-bounded ({', '.join(skipped[:6])}, ...)", flush=True)
 
-    # codegen/worker-pool warmup (same rationale as bench.py)
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    def timed(fn, sf_dir: str) -> float:
-        best = None
-        for _ in range(runs):
-            t0 = time.monotonic()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.monotonic() - t0
-            best = dt if best is None else min(best, dt)
-        return best
+    warmup(spark, SF_SMALL, names)
 
     rows = []
     print(f"{'query':26} {'sf0.1':>8} {'sf1':>8} {'ratio':>6}", flush=True)
     for name in names:
         fn = queries[name]
         try:
-            small = timed(fn, SF_SMALL)
-            big = timed(fn, SF1_DIR)
+            small = _time_query(spark, fn, SF_SMALL, runs)
+            big = _time_query(spark, fn, SF1_DIR, runs)
         except Exception as e:  # keep probing; report at the end
             print(f"{name:26} ERROR {type(e).__name__}: {e}", flush=True)
             rows.append((name, None, None, None))
@@ -205,8 +200,8 @@ def main() -> None:
             # a 10x-data query reading >12x slower is either genuinely
             # super-linear or absorbed one-time costs (first scan of a
             # table, codegen) — confirm before reporting an alarm
-            small = min(small, timed(fn, SF_SMALL))
-            big = min(big, timed(fn, SF1_DIR))
+            small = min(small, _time_query(spark, fn, SF_SMALL, runs))
+            big = min(big, _time_query(spark, fn, SF1_DIR, runs))
             ratio = big / small if small > 0 else float("inf")
         rows.append((name, small, big, ratio))
         print(f"{name:26} {small:8.2f} {big:8.2f} {ratio:6.2f}", flush=True)

@@ -1,11 +1,11 @@
 """Per-stage breakdown of one query run — where the wall-clock goes.
 
-Runs each named query once warm (after the bench's standard warmups and
-one untimed priming run), then reads the Spark UI REST API for the jobs
-and stages of the timed run: per-stage executor-run time, shuffle
-read/write bytes, input bytes, task counts. This answers "is the time
-in the scan, an exchange, or the final agg" without screenshots
-(guide §1.1/§7.1).
+Runs each named query once warm (after ``bench.warmup`` and one untimed
+priming run), takes the timed run's jobs from ``bench.new_jobs``, then
+reads the Spark UI REST API for those jobs and the stages they ran:
+per-stage executor-run time, shuffle read/write bytes, input bytes,
+task counts. This answers "is the time in the scan, an exchange, or
+the final agg" without screenshots (guide §1.1/§7.1).
 
 Usage: python scripts/stage_profile.py name [name...]
 """
@@ -34,32 +34,15 @@ def main() -> None:
     from conduit_spark import get_spark
 
     import __spark_entry__ as entrymod
+    from bench import _time_query, new_jobs, warmup
 
     spark = get_spark("conduit-spark-stage-profile")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(1).collect()
-
-    def _noop(batches):
-        try:
-            import numpy  # noqa: F401
-
-            from conduit_spark.analytics import media_codecs  # noqa: F401
-        except Exception:  # noqa: BLE001
-            pass
-        for b in batches:
-            yield b
-
-    spark.range(32, numPartitions=32).mapInPandas(
-        _noop, "id long"
-    ).write.format("noop").mode("overwrite").save()
-    spark.read.parquet(f"{sf_dir}/documents.parquet").limit(1).collect()
-    spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(1).collect()
+    warmup(spark, sf_dir, names)
 
     ui = spark.sparkContext.uiWebUrl
     app_id = spark.sparkContext.applicationId
     all_queries = entrymod.extended_queries()
-    from bench import _time_query
 
     for name in names:
         if name not in all_queries:
@@ -67,28 +50,24 @@ def main() -> None:
             continue
         # priming run (untimed): codegen + page cache
         _time_query(spark, all_queries[name], sf_dir, 1)
-        st = spark.sparkContext.statusTracker()
-        jobs_before = set(st.getJobIdsForGroup(None) or [])
-        t0 = time.monotonic()
-        df = all_queries[name](spark, sf_dir)
-        t_build = time.monotonic() - t0
-        df.write.format("noop").mode("overwrite").save()
-        t_total = time.monotonic() - t0
-        jobs_after = set(st.getJobIdsForGroup(None) or [])
-        new_jobs = sorted(jobs_after - jobs_before)
-        stage_ids = []
+        with new_jobs(spark) as jobs:
+            t0 = time.monotonic()
+            df = all_queries[name](spark, sf_dir)
+            t_build = time.monotonic() - t0
+            df.write.format("noop").mode("overwrite").save()
+            t_total = time.monotonic() - t0
+        stage_ids = [s for ids in jobs.values() for s in ids]
         job_rows = []
-        for j in new_jobs:
+        for j in jobs:
             try:
                 ji = _rest(ui, f"applications/{app_id}/jobs/{j}")
-                stage_ids.extend(ji.get("stageIds", []))
                 job_rows.append((j, ji.get("submissionTime", ""),
                                  ji.get("completionTime", ""),
                                  ji.get("numTasks", 0)))
             except Exception as e:  # noqa: BLE001
                 print(f"  job {j}: REST error {e}")
         print(f"\n=== {name}: total {t_total:.3f}s (build {t_build:.3f}s), "
-              f"{len(new_jobs)} jobs, {len(set(stage_ids))} stages ===")
+              f"{len(jobs)} jobs, {len(set(stage_ids))} stages ===")
         # job timeline: wall duration of each job + the GAP since the
         # previous job finished (driver-side planning/py4j time)
         import datetime as _dt
@@ -114,9 +93,6 @@ def main() -> None:
             except Exception:  # noqa: BLE001
                 continue
             for si in infos:
-                if si.get("status") == "SKIPPED":
-                    rows.append((0.0, sid, 0, "SKIPPED", 0, 0, 0, si.get("name", "")))
-                    continue
                 rt = si.get("executorRunTime", 0) / 1000.0
                 rows.append((
                     rt, sid, si.get("numCompleteTasks", 0),

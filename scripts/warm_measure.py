@@ -1,19 +1,18 @@
 """Warm-isolated query timing for same-window A/B comparisons.
 
-The box this suite is tuned on runs 1.2-1.9x shifted for hours at a
-time (host-level noisy neighbor, documented in PERF.md since r10), so
+Wall time on this class of shared host drifts for hours at a time, so
 absolute readings across sessions are not comparable. This harness
-mirrors the bench's methodology exactly (same session defaults, same
-warmups, same ``_time_query`` min-of-N noop-sink timing) and times the
+uses the bench's own session defaults, ``bench.warmup`` and
+``bench._time_query`` (min-of-N noop-sink timing) and times the
 ``q2_min_cost_supplier`` anchor before AND after the requested
 queries, so every measurement ships with its own weather reading.
 
 Usage:
     python scripts/warm_measure.py [-n RUNS] [--jobs] name [name...]
 
-``--jobs`` additionally reports the statusTracker job-id delta for ONE
-extra (untimed) run of each query — the per-query Spark job count that
-bounds the suite floor at fixture scale (guide §1.2).
+``--jobs`` additionally reports the jobs and stages of the last timed
+run of each query (``bench.new_jobs``, the counts the bench gate
+compares).
 """
 
 from __future__ import annotations
@@ -21,7 +20,6 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -34,56 +32,19 @@ def main() -> None:
     ap.add_argument("--sf", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--jobs", action="store_true",
-                    help="report per-query Spark job counts too")
+                    help="report per-query Spark job and stage counts too")
     args = ap.parse_args()
 
     from conduit_spark import get_spark
 
     import __spark_entry__ as entrymod
-    from bench import _time_query
+    from bench import _time_query, warmup
 
     spark = get_spark("conduit-spark-warm-measure")
     spark.sparkContext.setLogLevel("ERROR")
     sf_dir = args.sf
-    # bench.py's warmup block, verbatim in spirit: JVM/codegen, the
-    # Arrow worker pool + heavyweight worker imports, first scans.
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(1).collect()
-
-    def _noop(batches):
-        try:
-            import numpy  # noqa: F401
-
-            from conduit_spark.analytics import media_codecs  # noqa: F401
-            from conduit_spark.functions import minis3  # noqa: F401
-            from conduit_spark.sources import (  # noqa: F401
-                postgres_wal,
-                s3_wire,
-            )
-        except Exception:  # noqa: BLE001
-            pass
-        for b in batches:
-            yield b
-
-    spark.range(32, numPartitions=32).mapInPandas(
-        _noop, "id long"
-    ).write.format("noop").mode("overwrite").save()
-    spark.read.parquet(f"{sf_dir}/documents.parquet").limit(1).collect()
-    spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(1).collect()
-
+    warmup(spark, sf_dir, args.names)
     all_queries = entrymod.extended_queries()
-    if any(n.startswith("g_") for n in args.names):
-        from conduit_spark.analytics.pipeline_queries import (
-            warm_wire_endpoints,
-        )
-
-        warm_wire_endpoints(spark, sf_dir)
-    if any(n.startswith("p_") for n in args.names):
-        from conduit_spark.analytics.processor_queries import (
-            warm_processor_fixtures,
-        )
-
-        warm_processor_fixtures(spark, sf_dir)
 
     anchor = "q2_min_cost_supplier"
     t_anchor0 = _time_query(spark, all_queries[anchor], sf_dir, 2)
@@ -93,15 +54,9 @@ def main() -> None:
         if name not in all_queries:
             print(f"{name}: NOT IN extended_queries()")
             continue
-        t = _time_query(spark, all_queries[name], sf_dir, args.runs)
-        extra = ""
-        if args.jobs:
-            st = spark.sparkContext.statusTracker()
-            before = set(st.getJobIdsForGroup(None) or [])
-            df = all_queries[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            after = set(st.getJobIdsForGroup(None) or [])
-            extra = f" jobs={len(after - before)}"
+        counts = {} if args.jobs else None
+        t = _time_query(spark, all_queries[name], sf_dir, args.runs, counts)
+        extra = "".join(f" {k}={v}" for k, v in (counts or {}).items())
         results[name] = t
         print(f"{name}: {t:.3f}s (min of {args.runs}){extra}", flush=True)
     t_anchor1 = _time_query(spark, all_queries[anchor], sf_dir, 2)

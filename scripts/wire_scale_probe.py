@@ -11,6 +11,11 @@ CONDUIT_PG_LIVE_N env overrides pipeline_queries reads at import),
 and prints the measured ratio per transport — the same evidence class
 the analytics suite got from the sf1 probe (PERF.md round-10 table).
 
+Each child runs ``bench.warmup`` first, which seeds the query's wire
+endpoint at the scaled constants; the timed region therefore covers
+list+fetch+decode only, as in the bench, and endpoint seeding is no
+longer part of the measured ratio.
+
 Each child also verifies its query against the DuckDB oracle AT THE
 SCALED N (the oracle SQL embeds the same env-scaled constants), so a
 transport that only "scales" by dropping records cannot pass.
@@ -62,12 +67,13 @@ def _child(name: str) -> None:
     import duckdb
 
     import __spark_entry__ as entrymod
+    from bench import warmup
     from conduit_spark import get_spark
 
     sf_dir = os.environ.get("WIRE_PROBE_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("wire-scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    warmup(spark, sf_dir, [name])
 
     queries = entrymod.extended_queries()
     oracles = entrymod.extended_oracle_sql()

@@ -1,7 +1,7 @@
-"""Driver-contract guards for bench.py: the final stdout line must stay
-within the driver's ~2000-char tail capture (the BENCH_r03 record was
-unparseable because 96 queries overflowed it), for the real gate names
-at realistic timing widths."""
+"""Contract guards for bench.py: the final stdout line must stay within
+the driver's ~2000-char tail capture (an early record was unparseable
+because 96 queries overflowed it), and the exit code follows the
+job/stage counter baseline and nothing else."""
 
 from __future__ import annotations
 
@@ -43,195 +43,103 @@ def test_every_gate_query_has_matching_oracle_columns():
         assert "select" in sql.lower(), name
 
 
-def _report_in_tmp(monkeypatch, tmp_path, hist: dict, timings: dict, aa=None):
-    """Run bench._regression_report against a THROWAWAY history dir —
-    never the repo's real BENCH_HISTORY.json (calling it ad hoc there
-    rewrites __suspects__; that wiped real suspects once in r9)."""
+RECORD = '{"metric":"conduit_spark_query_suite_total","value":1.0}'
+
+
+def _gate(tmp_path, baseline, counts, key="sf0.1"):
+    """Run bench.gate against a throwaway baseline file; return (exit
+    code, stdout lines, baseline after)."""
+    import contextlib
+    import io
+
     import bench
 
-    (tmp_path / "BENCH_HISTORY.json").write_text(json.dumps(hist))
-    (tmp_path / "PERF.md").write_text("")
-    monkeypatch.setattr(bench, "REPO", str(tmp_path))
-    bad = bench._regression_report(timings, aa)
-    return bad, json.loads((tmp_path / "BENCH_HISTORY.json").read_text())
+    path = tmp_path / "BENCH_COUNTERS.json"
+    if baseline is not None:
+        path.write_text(json.dumps(baseline))
+    out = io.StringIO()
+    code = 0
+    with contextlib.redirect_stdout(out):
+        try:
+            bench.gate(RECORD, counts, key, path=str(path))
+        except SystemExit as e:
+            code = e.code
+    return code, out.getvalue().splitlines(), json.loads(path.read_text())
 
 
-def test_aa_control_widens_regression_factor(monkeypatch, tmp_path):
-    """A session measuring 30% A/A jitter must not ALARM a 1.4x read
-    (factor widens to max(1.3, 1+2*0.30)=1.6, VERDICT r9 item 3) — but
-    the suspect STREAK is kept on the static 1.3x threshold, so a
-    persistent regression interleaved with noisy sessions still alarms
-    on its next quiet-session trip instead of cycling warn/clear."""
-    hist = {"q": 10.0, "__suspects__": []}
-    aa = {"query": "x", "a_sec": 1.0, "b_sec": 1.3, "delta_pct": 30.0}
-    bad, out = _report_in_tmp(
-        monkeypatch, tmp_path, dict(hist), {"q": 14.0}, aa
-    )
-    assert bad == [] and out["__suspects__"] == ["q"]  # streak kept
-    assert out["__aa_control__"] == aa
-    # quiet session, prior suspect, still 1.4x -> alarms now
-    hist2 = {"q": 10.0, "__suspects__": ["q"]}
-    bad, out = _report_in_tmp(monkeypatch, tmp_path, hist2, {"q": 14.0})
-    assert len(bad) == 1 and "q 14.00s" in bad[0]
-    # NOISY session with prior suspect: still no alarm, streak intact
-    bad, out = _report_in_tmp(monkeypatch, tmp_path, hist2, {"q": 14.0}, aa)
-    assert bad == [] and out["__suspects__"] == ["q"]
+BASE = {"sf0.1": {"q_a": {"jobs": 3, "stages": 4},
+                  "q_b": {"jobs": 5, "stages": 7}}}
 
 
-def test_aa_widening_is_capped(monkeypatch, tmp_path):
-    """A single bad A/A pair (100% jitter on the control query) must
-    not grant the session a blank check: the factor caps at 2.0, so a
-    2.8x regression with a prior streak still alarms."""
-    hist = {"q": 10.0, "__suspects__": ["q"]}
-    aa = {"query": "x", "a_sec": 1.0, "b_sec": 2.0, "delta_pct": 100.0}
-    bad, out = _report_in_tmp(monkeypatch, tmp_path, hist, {"q": 28.0}, aa)
-    assert len(bad) == 1 and "q 28.00s" in bad[0]
+def test_raised_job_count_exits_3_naming_the_query(tmp_path):
+    counts = {"q_a": {"jobs": 4, "stages": 4}, "q_b": {"jobs": 5, "stages": 7}}
+    code, lines, after = _gate(tmp_path, BASE, counts)
+    assert code == 3
+    assert lines[-1] == RECORD  # the record line still ends the tail
+    assert len(lines) == 2 and "q_a" in lines[0] and "jobs 3 -> 4" in lines[0]
+    assert after == BASE  # a regression never rewrites the baseline
 
 
-def test_suspects_survive_partial_runs(monkeypatch, tmp_path):
-    """ADVICE r9: a run missing a prior suspect must carry it over,
-    not erase it — otherwise the two-consecutive-runs alarm never
-    fires. A suspect that repeats in-run still alarms."""
-    hist = {"q": 10.0, "other": 5.0, "__suspects__": ["other", "q"]}
-    bad, out = _report_in_tmp(
-        monkeypatch, tmp_path, dict(hist), {"q": 14.0}
-    )
-    # "other" absent from timings -> carried; "q" re-tripped -> alarms
-    assert out["__suspects__"] == ["other", "q"]
-    assert len(bad) == 1 and "q 14.00s" in bad[0]
-    # a clean run of BOTH clears them
-    bad, out = _report_in_tmp(
-        monkeypatch, tmp_path, dict(hist), {"q": 10.1, "other": 5.1}
-    )
-    assert bad == [] and out["__suspects__"] == []
+def test_raised_stage_count_exits_3_naming_the_query(tmp_path):
+    counts = {"q_a": {"jobs": 3, "stages": 4}, "q_b": {"jobs": 5, "stages": 8}}
+    code, lines, after = _gate(tmp_path, BASE, counts)
+    assert code == 3
+    assert len(lines) == 2 and "q_b" in lines[0] and "stages 7 -> 8" in lines[0]
+    assert lines[-1] == RECORD and after == BASE
 
 
-def test_env_shift_demotes_alarms_to_watches(monkeypatch, tmp_path):
-    """When the MEDIAN t/best across the run shows the whole box
-    shifted (>1.25x on >=10 queries), a trip whose excess is fully
-    explained by the shift (median-normalized value back inside the
-    thresholds) is a watch, not an alarm — but the streak survives,
-    so a real regression still alarms on the next normal-level
-    session."""
-    hist = {f"q{i}": 1.0 for i in range(12)}
-    hist["__suspects__"] = ["q0"]
-    # whole fleet reads 1.5x: box shift; q0 at 1.875x raw = 1.25x
-    # median-normalized — back inside the 1.3x threshold (ADVICE r11
-    # tightened the normalized slack to max(0.25, 0.3*best), so the
-    # demotion now requires the NORMALIZED value to genuinely clear)
-    timings = {f"q{i}": 1.5 if i else 1.875 for i in range(12)}
-    bad, out = _report_in_tmp(monkeypatch, tmp_path, dict(hist), timings)
-    assert bad == []  # q0 normalizes to 1.25x: demoted
-    assert "q0" in out["__suspects__"]
-    assert out["__env_shift__"] == 1.5
-    # normal-level session, q0 still regressed -> alarms
-    hist2 = {f"q{i}": 1.0 for i in range(12)}
-    hist2["__suspects__"] = out["__suspects__"]
-    timings2 = {f"q{i}": 1.0 if i else 2.2 for i in range(12)}
-    bad, out = _report_in_tmp(monkeypatch, tmp_path, hist2, timings2)
-    assert len(bad) == 1 and "q0 2.20s" in bad[0]
-    assert out["__env_shift__"] == 1.0
+def test_equal_or_lower_counts_are_silent(tmp_path):
+    counts = {"q_a": {"jobs": 3, "stages": 4}, "q_b": {"jobs": 2, "stages": 3}}
+    code, lines, after = _gate(tmp_path, BASE, counts)
+    assert code == 0 and lines == [RECORD]
+    assert after == BASE  # a drop is recorded by editing the file, not here
 
 
-def test_env_shift_normalized_alarm_catches_sparse_regression(
-    monkeypatch, tmp_path
-):
-    """VERDICT r10 item 2 (shift-immune gate): a sparse REAL 1.5x
-    single-query regression must still ALARM inside a 1.45x
-    fleet-shifted window. Weather multiplies the whole fleet and
-    cancels out of the median-normalized ratio; a real regression is
-    sparse and survives normalization. Round 10's detector demoted
-    everything to watches inside a shift — two weather-dominated
-    rounds in a row meant a real regression rode free."""
-    hist = {f"q{i}": 3.0 for i in range(20)}
-    hist["q_reg"] = 3.0
-    hist["__suspects__"] = ["q_reg"]  # tripped last session too
-    timings = {f"q{i}": 4.35 for i in range(20)}  # fleet at 1.45x: weather
-    timings["q_reg"] = 3.0 * 1.45 * 1.5  # real 1.5x ON TOP of the weather
-    bad, out = _report_in_tmp(monkeypatch, tmp_path, dict(hist), timings)
-    assert len(bad) == 1 and "q_reg" in bad[0]
-    assert "median-normalized" in bad[0]
-    assert out["__env_shift__"] == 1.45
-    # the fleet-wide 1.45x is weather: watches only, streaks kept
-    assert all(f"q{i}" in out["__suspects__"] for i in range(20))
+def test_missing_query_or_key_is_written_and_does_not_fail(tmp_path):
+    new = {"q_new": {"jobs": 9, "stages": 9}}
+    code, lines, after = _gate(tmp_path, BASE, {**new, "q_a": BASE["sf0.1"]["q_a"]})
+    assert code == 0 and lines == [RECORD]
+    assert after["sf0.1"] == {**BASE["sf0.1"], **new}
+    code, lines, after = _gate(tmp_path, BASE, new, key="sf1")
+    assert code == 0 and lines == [RECORD]
+    assert after == {**BASE, "sf1": new}
+    (tmp_path / "BENCH_COUNTERS.json").unlink()
+    code, lines, after = _gate(tmp_path, None, new)  # no file at all
+    assert code == 0 and after == {"sf0.1": new}
 
 
-def test_quiet_box_aa_pair_stays_silent(monkeypatch, tmp_path):
-    """The flip side of the shift-immune alarm: a quiet-box A/A pair
-    (same code, timings at level) raises nothing and clears every
-    pending streak — normalization must not create alarms where
-    neither weather nor regression exists."""
-    hist = {f"q{i}": 3.0 for i in range(20)}
-    hist["__suspects__"] = [f"q{i}" for i in range(20)]
-    timings = {f"q{i}": 3.02 for i in range(20)}  # at level
-    bad, out = _report_in_tmp(monkeypatch, tmp_path, dict(hist), timings)
-    assert bad == [] and out["__suspects__"] == []
-    assert out["__env_shift__"] < 1.05
+def test_existing_entry_is_never_overwritten(tmp_path):
+    counts = {"q_a": {"jobs": 1, "stages": 1}, "q_new": {"jobs": 2, "stages": 2}}
+    code, lines, after = _gate(tmp_path, BASE, counts)
+    assert code == 0
+    assert after["sf0.1"]["q_a"] == BASE["sf0.1"]["q_a"]
+    assert after["sf0.1"]["q_new"] == {"jobs": 2, "stages": 2}
+    # a regressing run that also adds a query still leaves q_b's entry
+    counts = {"q_b": {"jobs": 6, "stages": 7}, "q_c": {"jobs": 1, "stages": 1}}
+    code, lines, after = _gate(tmp_path, BASE, counts)
+    assert code == 3 and after["sf0.1"]["q_b"] == BASE["sf0.1"]["q_b"]
+    assert after["sf0.1"]["q_c"] == {"jobs": 1, "stages": 1}
 
 
-def test_sub_trip_median_does_not_raise_alarm_bar(monkeypatch, tmp_path):
-    """Review r11: below the 1.25x environment trip the RAW thresholds
-    stand — a 1.20x fleet median must not normalize a repeat-suspect
-    1.55x regression down into a watch."""
-    hist = {f"q{i}": 3.0 for i in range(20)}
-    hist["q_reg"] = 3.0
-    hist["__suspects__"] = ["q_reg"]
-    timings = {f"q{i}": 3.60 for i in range(20)}  # fleet 1.20x: no trip
-    timings["q_reg"] = 3.0 * 1.55
-    bad, out = _report_in_tmp(monkeypatch, tmp_path, dict(hist), timings)
-    assert len(bad) == 1 and "q_reg" in bad[0]
-    assert "median-normalized" not in bad[0]  # no shift was declared
+def test_scripts_import_only_real_bench_names_and_share_its_warmup():
+    """No test imports scripts/; parse them so a script still calling a
+    deleted or renamed bench helper fails here, and so the worker-pool
+    warmup stays in bench.warmup instead of being copied again."""
+    import ast
+    import pathlib
 
-
-def test_shift_normalized_alarm_honors_aa_factor(monkeypatch, tmp_path):
-    """ADVICE r11: inside a declared shift the normalized comparison
-    uses max(1.3, factor), not a hard-coded 1.3x — a high-jitter
-    session (A/A 35% -> factor 1.7) must not ALARM a repeat-suspect
-    whose normalized ratio (1.6x) sits inside its own noise band."""
-    hist = {f"q{i}": 3.0 for i in range(20)}
-    hist["q_reg"] = 3.0
-    hist["__suspects__"] = ["q_reg"]
-    aa = {"query": "x", "a_sec": 1.0, "b_sec": 1.35, "delta_pct": 35.0}
-    timings = {f"q{i}": 4.35 for i in range(20)}  # fleet 1.45x shift
-    timings["q_reg"] = 3.0 * 1.45 * 1.6  # 1.6x normalized < factor 1.7
-    bad, out = _report_in_tmp(monkeypatch, tmp_path, dict(hist), timings, aa)
-    assert bad == [] and "q_reg" in out["__suspects__"]  # streak kept
-    # same session with a QUIET A/A pair (factor stays 1.3): alarms
-    bad, out = _report_in_tmp(monkeypatch, tmp_path, dict(hist), timings)
-    assert len(bad) == 1 and "q_reg" in bad[0]
-
-
-def test_shift_slack_scales_with_best_for_small_queries(
-    monkeypatch, tmp_path
-):
-    """ADVICE r11: the normalized absolute slack is max(0.25, 0.3*best)
-    — a 1-second query at 1.5x MEDIAN-NORMALIZED inside a shift (raw
-    excess small in absolute terms) is no longer unconditionally
-    demoted: with a prior streak it alarms."""
-    hist = {f"q{i}": 1.0 for i in range(20)}
-    hist["q_reg"] = 1.0
-    hist["__suspects__"] = ["q_reg"]
-    timings = {f"q{i}": 1.45 for i in range(20)}  # fleet 1.45x shift
-    timings["q_reg"] = 1.45 * 1.5  # 1.5x normalized on a 1s query
-    bad, out = _report_in_tmp(monkeypatch, tmp_path, dict(hist), timings)
-    assert len(bad) == 1 and "q_reg" in bad[0]
-    assert "median-normalized" in bad[0]
-
-
-def test_waived_query_never_suspects_or_alarms(monkeypatch, tmp_path):
-    """A PERF.md bench-waiver line must fully silence a query: no
-    alarm even on a second consecutive trip, and no suspect streak
-    (r12: the avro extended timings ride this against quiet-box
-    floors during shifted windows)."""
     import bench
 
-    hist = {"q_waived": 1.0, "other": 1.0, "__suspects__": ["q_waived"]}
-    (tmp_path / "BENCH_HISTORY.json").write_text(json.dumps(hist))
-    (tmp_path / "PERF.md").write_text(
-        "- bench-waiver: q_waived — floors from a quiet box\n"
-    )
-    monkeypatch.setattr(bench, "REPO", str(tmp_path))
-    bad = bench._regression_report({"q_waived": 5.0, "other": 1.01})
-    out = json.loads((tmp_path / "BENCH_HISTORY.json").read_text())
-    assert bad == []
-    assert "q_waived" not in out["__suspects__"]
+    scripts = sorted(pathlib.Path(bench.REPO, "scripts").glob("*.py"))
+    assert scripts
+    for path in scripts:
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.module == "bench":
+                for alias in node.names:
+                    assert hasattr(bench, alias.name), (path.name, alias.name)
+            if isinstance(node, ast.Attribute) and node.attr == "mapInPandas":
+                raise AssertionError(
+                    f"{path.name}:{node.lineno} runs its own mapInPandas "
+                    "warmup; call bench.warmup"
+                )

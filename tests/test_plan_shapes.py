@@ -426,3 +426,30 @@ def test_bucketed_join_is_shuffle_free(spark, sf):
     assert "Bucketed: true" in plan or "SelectedBucketsCount" in plan or (
         "bucket" in plan.lower()
     )
+
+
+def test_audit_pushed_filters_stop_at_a_truncated_list(spark, sf):
+    """Spark cuts a scan's PushedFilters list longer than its 100-char
+    metadata limit to "..." with no closing "]". The audit must report
+    that list still visibly cut, and nothing from the plan lines after
+    it (the old pattern ran on to the next "]" lines below, so the
+    field carried plan ids and differed between runs)."""
+    from pyspark.sql import functions as F
+
+    from conduit_spark.plans import audit_plan
+
+    part = spark.read.parquet(f"{sf}/part.parquet").filter(
+        (F.col("p_type") == "STANDARD POLISHED TIN")
+        & (F.col("p_size") <= 10)
+        & (F.col("p_brand") == "Brand#12")
+        & F.col("p_name").startswith("forest")
+    )
+    li = spark.read.parquet(f"{sf}/lineitem.parquet").filter("l_quantity > 1")
+    df = li.join(part, li.l_partkey == part.p_partkey)
+    pushed = audit_plan(df)["pushed_filters"]
+    assert all("\n" not in p and "ReadSchema" not in p for p in pushed), pushed
+    cut = [p for p in pushed if p.endswith("...")]
+    assert len(cut) == 1 and len(cut[0]) > 90, pushed
+    assert cut[0].startswith("IsNotNull(p_"), cut
+    assert "GreaterThan(l_quantity,1.0)" in " ".join(pushed)
+    assert audit_plan(df)["pushed_filters"] == pushed

@@ -26,13 +26,16 @@ result transfer.
 Counter gate: wall time on a shared host drifts 1.2-3x for hours, so
 the exit code reads only deterministic counters. For every query the
 run records the Spark jobs it launches and the distinct stages those
-jobs ran (skipped stages excluded), counted on a run after the query already ran once in this
-session (the last timed run, or one extra untimed run), so session
-artifacts built by a first run never enter the count and a
-``BENCH_QUERIES`` subset counts like a full run. The counts are
-compared exactly with ``BENCH_COUNTERS.json``, keyed by scale factor;
-the run exits 3 when any query's jobs or stages rise above its
-baseline. A key or query missing from the file is written into it and
+jobs ran (skipped stages excluded), counted on a run after the query
+already ran once in this session (the last timed run, or one extra
+untimed run), so session artifacts built by a first run never enter
+the count and a ``BENCH_QUERIES`` subset counts like a full run. The
+counts are compared exactly with ``BENCH_COUNTERS.json``, keyed by
+scale factor and cpus (``sf0.1/cpus32``: some counts follow the
+session's parallelism — ``d_pagerank`` launches 17 jobs at 2 and 4
+cpus, 16 at 8 and 32); the run exits 3 when any query's jobs or
+stages rise above its baseline, or when the baseline cannot be read.
+A key or query missing from the file is written into it and
 does not fail the run; an existing entry is never rewritten. A change
 that moves counts edits ``BENCH_COUNTERS.json`` in its own diff, where
 review sees it. The record JSON line is ALWAYS printed before
@@ -208,14 +211,11 @@ def warmup(spark, sf_dir: str, names) -> None:
         warm_processor_fixtures(spark, sf_dir)
 
 
-def gate(record_line: str, counts: dict, key: str,
-         path: str = COUNTERS_PATH) -> None:
-    """Compare ``counts`` ({query: {"jobs": n, "stages": m}}) with the
-    baseline entry ``key`` of ``path``; print one line per query whose
-    jobs or stages rose, then ``record_line``, and exit 3 if any rose.
-
-    Queries (or a whole key) missing from the baseline are added and
-    the file rewritten; existing entries are never changed."""
+def _compare(counts: dict, key: str, path: str) -> list[str]:
+    """Lines naming each query whose jobs or stages rose above the
+    baseline entry ``key`` of ``path``. Queries (or a whole key)
+    missing from the baseline are added and the file rewritten, after
+    every comparison succeeded; existing entries are never changed."""
     try:
         with open(path) as f:
             baseline = json.load(f)
@@ -235,6 +235,20 @@ def gate(record_line: str, counts: dict, key: str,
         with open(path, "w") as f:
             json.dump(baseline, f, indent=1, sort_keys=True)
             f.write("\n")
+    return bad
+
+
+def gate(record_line: str, counts: dict, key: str,
+         path: str = COUNTERS_PATH) -> None:
+    """Compare ``counts`` ({query: {"jobs": n, "stages": m}}) with the
+    baseline; print one line per query whose jobs or stages rose, then
+    ``record_line``, and exit 3 if any rose. A baseline that cannot be
+    read or checked (bad JSON, an entry without a counter) prints one
+    error line instead and also exits 3 — after ``record_line``."""
+    try:
+        bad = _compare(counts, key, path)
+    except Exception as e:  # noqa: BLE001 — the record line must print
+        bad = [f"bench-counter-baseline-error: {path}: {e!r}"[:300]]
     for ln in bad:
         print(ln)
     print(record_line)
@@ -282,6 +296,7 @@ def main() -> None:
     except ValueError:
         sf_val = sf
 
+    cpus = spark.sparkContext.defaultParallelism
     gate_timings = {n: t for n, t in timings.items() if n in gate_names}
     detail = {
         "metric": "conduit_spark_query_suite_total",
@@ -293,7 +308,7 @@ def main() -> None:
         "gate_runs": gate_runs,
         "extended_runs": ext_runs,
         "sf": sf_val,
-        "cpus": spark.sparkContext.defaultParallelism,
+        "cpus": cpus,
     }
     # BENCH_QUERIES subset runs write a scratch file: the committed
     # BENCH_DETAIL.json must always be a FULL-suite record (a subset
@@ -315,7 +330,7 @@ def main() -> None:
     line = json.dumps(record, separators=(",", ":"))
     if len(line) > 1800:  # hard guard: drop per-query map before overflowing
         line = json.dumps({**record, "queries": {}}, separators=(",", ":"))
-    gate(line, counts, f"sf{sf}")
+    gate(line, counts, f"sf{sf}/cpus{cpus}")
 
 
 if __name__ == "__main__":

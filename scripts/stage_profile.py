@@ -4,8 +4,11 @@ Runs each named query once warm (after ``bench.warmup`` and one untimed
 priming run), takes the timed run's jobs from ``bench.new_jobs``, then
 reads the Spark UI REST API for those jobs and the stages they ran:
 per-stage executor-run time, shuffle read/write bytes, input bytes,
-task counts. This answers "is the time in the scan, an exchange, or
-the final agg" without screenshots (guide §1.1/§7.1).
+task counts. Every stage of each job is listed, skipped ones (a
+shuffle an earlier job already wrote) as SKIPPED rows; the header's
+stage count is the bench gate's, which leaves them out. This answers
+"is the time in the scan, an exchange, or the final agg" without
+screenshots (guide §1.1/§7.1).
 
 Usage: python scripts/stage_profile.py name [name...]
 """
@@ -56,18 +59,20 @@ def main() -> None:
             t_build = time.monotonic() - t0
             df.write.format("noop").mode("overwrite").save()
             t_total = time.monotonic() - t0
-        stage_ids = [s for ids in jobs.values() for s in ids]
+        ran = {s for ids in jobs.values() for s in ids}
+        stage_ids = set()
         job_rows = []
         for j in jobs:
             try:
                 ji = _rest(ui, f"applications/{app_id}/jobs/{j}")
+                stage_ids.update(ji.get("stageIds", []))
                 job_rows.append((j, ji.get("submissionTime", ""),
                                  ji.get("completionTime", ""),
                                  ji.get("numTasks", 0)))
             except Exception as e:  # noqa: BLE001
                 print(f"  job {j}: REST error {e}")
         print(f"\n=== {name}: total {t_total:.3f}s (build {t_build:.3f}s), "
-              f"{len(jobs)} jobs, {len(set(stage_ids))} stages ===")
+              f"{len(jobs)} jobs, {len(ran)} stages ran ===")
         # job timeline: wall duration of each job + the GAP since the
         # previous job finished (driver-side planning/py4j time)
         import datetime as _dt
@@ -87,12 +92,16 @@ def main() -> None:
             except Exception:  # noqa: BLE001
                 pass
         rows = []
-        for sid in sorted(set(stage_ids)):
+        for sid in sorted(stage_ids):
             try:
                 infos = _rest(ui, f"applications/{app_id}/stages/{sid}")
             except Exception:  # noqa: BLE001
                 continue
             for si in infos:
+                if si.get("status") == "SKIPPED":
+                    rows.append((0.0, sid, 0, "SKIPPED", 0, 0, 0,
+                                 si.get("name", "")))
+                    continue
                 rt = si.get("executorRunTime", 0) / 1000.0
                 rows.append((
                     rt, sid, si.get("numCompleteTasks", 0),
@@ -105,7 +114,8 @@ def main() -> None:
         rows.sort(reverse=True)
         for rt, sid, nt, stt, inp, sr, sw, nm in rows[:14]:
             print(f"  stage {sid:4d} run={rt:7.2f}s tasks={nt:3d} "
-                  f"in={inp}MB sr={sr}MB sw={sw}MB  {nm[:70]}")
+                  f"in={inp}MB sr={sr}MB sw={sw}MB  "
+                  f"{'SKIPPED ' if stt == 'SKIPPED' else ''}{nm[:70]}")
 
 
 if __name__ == "__main__":

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 
 def test_gate_stdout_line_fits_tail_capture():
     import __spark_entry__ as m
@@ -49,14 +51,19 @@ RECORD = '{"metric":"conduit_spark_query_suite_total","value":1.0}'
 def _gate(tmp_path, baseline, counts, key="sf0.1"):
     """Run bench.gate against a throwaway baseline file; return (exit
     code, stdout lines, baseline after)."""
+    path = tmp_path / "BENCH_COUNTERS.json"
+    if baseline is not None:
+        path.write_text(json.dumps(baseline))
+    code, lines = _gate_raw(path, counts, key)
+    return code, lines, json.loads(path.read_text())
+
+
+def _gate_raw(path, counts, key="sf0.1"):
     import contextlib
     import io
 
     import bench
 
-    path = tmp_path / "BENCH_COUNTERS.json"
-    if baseline is not None:
-        path.write_text(json.dumps(baseline))
     out = io.StringIO()
     code = 0
     with contextlib.redirect_stdout(out):
@@ -64,7 +71,7 @@ def _gate(tmp_path, baseline, counts, key="sf0.1"):
             bench.gate(RECORD, counts, key, path=str(path))
         except SystemExit as e:
             code = e.code
-    return code, out.getvalue().splitlines(), json.loads(path.read_text())
+    return code, out.getvalue().splitlines()
 
 
 BASE = {"sf0.1": {"q_a": {"jobs": 3, "stages": 4},
@@ -119,6 +126,22 @@ def test_existing_entry_is_never_overwritten(tmp_path):
     code, lines, after = _gate(tmp_path, BASE, counts)
     assert code == 3 and after["sf0.1"]["q_b"] == BASE["sf0.1"]["q_b"]
     assert after["sf0.1"]["q_c"] == {"jobs": 1, "stages": 1}
+
+
+@pytest.mark.parametrize("text", [
+    '{"sf0.1": {"q_a": {"jobs": 3, "stages": 4}',  # cut JSON
+    '<<<<<<< HEAD\n{"sf0.1": {}}\n=======\n{}\n>>>>>>> b\n',  # merge markers
+    '{"sf0.1": {"q_a": {"stages": 4}}}',  # entry without "jobs"
+    '[]',  # not a map
+])
+def test_unreadable_baseline_still_prints_the_record_line_last(tmp_path, text):
+    path = tmp_path / "BENCH_COUNTERS.json"
+    path.write_text(text)
+    code, lines = _gate_raw(path, {"q_a": {"jobs": 3, "stages": 4}})
+    assert code == 3
+    assert lines[-1] == RECORD
+    assert len(lines) == 2 and "bench-counter-baseline-error" in lines[0]
+    assert path.read_text() == text  # a broken baseline is never rewritten
 
 
 def test_scripts_import_only_real_bench_names_and_share_its_warmup():

@@ -4,11 +4,11 @@ The reference counts records/bytes per connector with Prometheus
 counters threaded through MetricsNodes in the DAG
 (pkg/foundation/metrics/, pkg/lifecycle/service.go). Here the
 counters ride the existing delivery path: ``Pipeline._deliver``
-already observes per-destination counts and nacks, so each batch
-reports into a process-wide :class:`MetricsRegistry`; Structured
-Streaming progress lands in the same registry through a
-``StreamingQueryListener`` keyed by query name (one query per
-pipeline, named ``conduit-<pipeline-id>``).
+already observes per-destination counts and nacks and times each
+write, so each batch reports into a process-wide
+:class:`MetricsRegistry`; Structured Streaming progress lands in the
+same registry through a ``StreamingQueryListener`` keyed by query
+name (one query per pipeline, named ``conduit-<pipeline-id>``).
 
 Exposure: ``conduit_spark metrics`` CLI verb, the ``metrics`` field
 of ``list --json``, and ``GET /v1/metrics`` on the HTTP control
@@ -30,6 +30,9 @@ class PipelineMetrics:
     nacked: int = 0
     dlq_routed: int = 0
     dlq_bytes: int = 0  # payload bytes written to the DLQ (conduit_dlq_bytes analog)
+    # write milliseconds per destination id, plus "dlq": the writes of
+    # a batch overlap, so its duration no longer splits into them
+    write_ms: dict[str, float] = field(default_factory=dict)
     last_batch_duration_ms: float = 0.0
     total_duration_ms: float = 0.0
     # streaming-side (StreamingQueryListener progress)
@@ -46,6 +49,7 @@ class PipelineMetrics:
             "nacked": self.nacked,
             "dlq_routed": self.dlq_routed,
             "dlq_bytes": self.dlq_bytes,
+            "write_ms": {k: round(v, 3) for k, v in self.write_ms.items()},
             "last_batch_duration_ms": round(self.last_batch_duration_ms, 3),
             "total_duration_ms": round(self.total_duration_ms, 3),
             "stream_batches": self.stream_batches,
@@ -74,6 +78,7 @@ class MetricsRegistry:
         nacked: int = 0,
         dlq_routed: int = 0,
         dlq_bytes: int = 0,
+        write_ms: dict[str, float] | None = None,
         duration_ms: float = 0.0,
         failed: bool = False,
     ) -> None:
@@ -87,6 +92,8 @@ class MetricsRegistry:
             m.nacked += nacked
             m.dlq_routed += dlq_routed
             m.dlq_bytes += dlq_bytes
+            for dest, ms in (write_ms or {}).items():
+                m.write_ms[dest] = m.write_ms.get(dest, 0.0) + ms
             m.last_batch_duration_ms = duration_ms
             m.total_duration_ms += duration_ms
 
@@ -153,6 +160,20 @@ _PROM_SPECS = [
     ),
 ]
 
+# per-destination counters: (metric suffix, help, attribute)
+_PROM_CONNECTOR_SPECS = [
+    (
+        "connector_records_total",
+        "Records delivered per destination connector",
+        "delivered",
+    ),
+    (
+        "connector_write_ms_total",
+        "Cumulative write wall-clock per destination connector in milliseconds",
+        "write_ms",
+    ),
+]
+
 
 def prometheus_text(snapshot: dict) -> str:
     """Render a ``MetricsRegistry.snapshot()`` in the Prometheus text
@@ -160,7 +181,8 @@ def prometheus_text(snapshot: dict) -> str:
     promhttp endpoint — pkg/foundation/metrics/prometheus.go).
 
     Counter families carry a ``pipeline_id`` label; per-destination
-    delivery counts add a ``destination`` label.
+    delivery counts and write times add a ``destination`` label (the
+    DLQ's write time is ``destination="dlq"``).
     """
     lines: list[str] = []
     pids = sorted(snapshot)
@@ -173,16 +195,17 @@ def prometheus_text(snapshot: dict) -> str:
             lines.append(
                 f'{name}{{pipeline_id="{_prom_label(pid)}"}} {v}'
             )
-    name = "conduit_connector_records_total"
-    lines.append(f"# HELP {name} Records delivered per destination connector")
-    lines.append(f"# TYPE {name} counter")
-    for pid in pids:
-        for dest in sorted(snapshot[pid].get("delivered", {})):
-            n = snapshot[pid]["delivered"][dest]
-            lines.append(
-                f'{name}{{pipeline_id="{_prom_label(pid)}",'
-                f'destination="{_prom_label(dest)}"}} {n}'
-            )
+    for suffix, help_text, attr in _PROM_CONNECTOR_SPECS:
+        name = f"conduit_{suffix}"
+        lines.append(f"# HELP {name} {help_text}")
+        lines.append(f"# TYPE {name} counter")
+        for pid in pids:
+            per_dest = snapshot[pid].get(attr, {})
+            for dest in sorted(per_dest):
+                lines.append(
+                    f'{name}{{pipeline_id="{_prom_label(pid)}",'
+                    f'destination="{_prom_label(dest)}"}} {per_dest[dest]}'
+                )
     return "\n".join(lines) + "\n"
 
 

@@ -9,6 +9,7 @@ transports) and returns a ``DataFrame -> DataFrame``.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 from typing import Any
 
@@ -1139,43 +1140,61 @@ def apply_s3_conf(spark: SparkSession, settings: dict[str, Any]) -> dict[str, st
     return applied
 
 
+# apply_s3_conf writes the session-wide Hadoop conf, and s3a builds
+# (and caches per bucket) its FileSystem from that conf when a write
+# first touches the bucket. A JVM-transport s3 write holds this lock
+# from its conf to its last job, so the concurrent writes of one batch
+# (Pipeline._deliver) never open a bucket under another write's
+# endpoint or keys.
+_S3A_CONF_LOCK = threading.Lock()
+
+
+def _file_write(df: DataFrame, settings: dict[str, Any]) -> None:
+    from conduit_spark import sinks
+
+    sinks.file_sink(
+        df,
+        settings["path"],
+        fmt=settings.get("format", "json"),
+        mode=settings.get("mode", "append"),
+        partition_by_collection=bool(settings.get("partitionByCollection", False)),
+        record_format=(
+            str(settings["sdk.record.format"])
+            if "sdk.record.format" in settings else None
+        ),
+        record_format_options=(
+            str(settings["sdk.record.format.options"])
+            if "sdk.record.format.options" in settings else None
+        ),
+    )
+
+
 def write_destination(
     df: DataFrame, plugin: str, settings: dict[str, Any]
 ) -> None:
     """Execute a destination write for one (micro-)batch."""
     from conduit_spark import sinks
 
-    if plugin in ("builtin:file", "builtin:s3"):
-        if plugin == "builtin:s3":
-            if str(settings.get("transport", "jvm")) == "wire":
-                from conduit_spark.sources.s3_wire import s3_wire_sink
+    if plugin == "builtin:file":
+        _file_write(df, settings)
+        return
+    if plugin == "builtin:s3":
+        if str(settings.get("transport", "jvm")) == "wire":
+            from conduit_spark.sources.s3_wire import s3_wire_sink
 
-                s3_wire_sink(
-                    df,
-                    str(settings["aws.url"]),
-                    str(settings["aws.bucket"]),
-                    str(settings.get("prefix", "")),
-                    fmt=str(settings.get("format", "json")),
-                    buffer_size=int(settings.get("bufferSize", 1000)),
-                    creds=_s3_creds(settings),
-                )
-                return
+            s3_wire_sink(
+                df,
+                str(settings["aws.url"]),
+                str(settings["aws.bucket"]),
+                str(settings.get("prefix", "")),
+                fmt=str(settings.get("format", "json")),
+                buffer_size=int(settings.get("bufferSize", 1000)),
+                creds=_s3_creds(settings),
+            )
+            return
+        with _S3A_CONF_LOCK:
             apply_s3_conf(df.sparkSession, settings)
-        sinks.file_sink(
-            df,
-            settings["path"],
-            fmt=settings.get("format", "json"),
-            mode=settings.get("mode", "append"),
-            partition_by_collection=bool(settings.get("partitionByCollection", False)),
-            record_format=(
-                str(settings["sdk.record.format"])
-                if "sdk.record.format" in settings else None
-            ),
-            record_format_options=(
-                str(settings["sdk.record.format.options"])
-                if "sdk.record.format.options" in settings else None
-            ),
-        )
+            _file_write(df, settings)
         return
     if plugin == "builtin:log":
         sinks.log_sink(

@@ -56,6 +56,10 @@ def test_batch_metrics_match_batch_result(spark, tmp_path):
     assert m["dlq_routed"] == res.dlq_routed == 1
     assert m["last_batch_duration_ms"] > 0
     assert m["total_duration_ms"] >= m["last_batch_duration_ms"]
+    # each write is timed on its own: the destination and the DLQ
+    assert set(res.write_ms) == {"d", "dlq"}
+    assert all(ms > 0 for ms in res.write_ms.values())
+    assert m["write_ms"] == {k: round(v, 3) for k, v in res.write_ms.items()}
 
     # second run accumulates
     p.run_batch()
@@ -178,9 +182,11 @@ def test_prometheus_exposition_format():
     reg = MetricsRegistry()
     reg.record_batch(
         'pipe"a', delivered={"d1": 3, "d2": 2}, nacked=1, dlq_routed=1,
-        duration_ms=2.5,
+        write_ms={"d1": 1.25, "d2": 0.5, "dlq": 0.75}, duration_ms=2.5,
     )
-    reg.record_batch('pipe"a', delivered={"d1": 4}, duration_ms=1.5)
+    reg.record_batch(
+        'pipe"a', delivered={"d1": 4}, write_ms={"d1": 1.0}, duration_ms=1.5
+    )
     reg.record_stream_progress("other", input_rows=7)
     text = prometheus_text(reg.snapshot())
 
@@ -195,6 +201,12 @@ def test_prometheus_exposition_format():
         in text
     )
     assert 'conduit_pipeline_nacked_total{pipeline_id="pipe\\"a"} 1' in text
+    # per-destination write time, the DLQ under destination="dlq"
+    for dest, ms in (("d1", 2.25), ("d2", 0.5), ("dlq", 0.75)):
+        assert (
+            f'conduit_connector_write_ms_total{{pipeline_id="pipe\\"a",'
+            f'destination="{dest}"}} {ms}'
+        ) in text
     assert 'conduit_stream_input_rows_total{pipeline_id="other"} 7' in text
     assert 'conduit_pipeline_last_batch_duration_ms{pipeline_id="pipe\\"a"} 1.5' in text
     # every sample line's family has HELP+TYPE headers preceding it

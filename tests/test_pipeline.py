@@ -157,6 +157,9 @@ pipelines:
     assert all(
         r["metadata"]["conduit.dlq.error"] == "trial record rejected" for r in dlq_rows
     )
+    # a pipeline-scope breach touches no destination
+    out = tmp_path / "out"
+    assert not out.exists() or not os.listdir(out)
 
 
 def test_dlq_below_threshold_continues(spark, tmp_path):
@@ -235,6 +238,281 @@ pipelines:
     assert all(
         r["metadata"]["conduit.dlq.scope"] == "destination:d" for r in dlq_rows
     )
+
+
+def _fan_out_yaml(tmp_path, *, reject: str) -> str:
+    """One generator, a pipeline-scope ``error`` processor firing on
+    ``reject``, a file DLQ and two file destinations."""
+    return f"""
+version: "2.2"
+pipelines:
+  - id: fan
+    connectors:
+      - id: g
+        type: source
+        plugin: builtin:generator
+        settings: {{recordCount: 20, format.options: {{id: int, trial: bool}}}}
+      - id: da
+        type: destination
+        plugin: builtin:file
+        settings: {{path: "{tmp_path / 'a'}", format: json, mode: overwrite}}
+      - id: db
+        type: destination
+        plugin: builtin:file
+        settings: {{path: "{tmp_path / 'b'}", format: parquet, mode: overwrite}}
+    processors:
+      - id: reject
+        plugin: error
+        settings: {{message: rejected}}
+        condition: "{reject}"
+    dead-letter-queue:
+      plugin: builtin:file
+      settings: {{path: "{tmp_path / 'dlq'}", format: json, mode: append}}
+      window-size: 100
+      window-nack-threshold: 100
+"""
+
+
+def _jobs_in_group(spark, fn) -> tuple[set[int], set[int]]:
+    """(every job ``fn`` started, the ones in the caller's job group),
+    from the status tracker's job ids before and after."""
+    import uuid
+
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    group = f"deliver-shape-{uuid.uuid4().hex}"
+
+    def all_ids() -> set[int]:
+        bus.waitUntilEmpty()
+        return set(st.getJobIdsForGroup(None) or []) | set(
+            st.getJobIdsForGroup(group) or []
+        )
+
+    before = all_ids()
+    sc.setJobGroup(group, "deliver job shape")
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    new = all_ids() - before
+    return new, set(st.getJobIdsForGroup(group) or [])
+
+
+def test_deliver_job_shape(spark, tmp_path):
+    """One job fills the cache and counts the nacks; then one job per
+    write. The writes run on pool threads, and every job stays in the
+    caller's job group (what keeps a micro-batch's jobs attributed to
+    its foreachBatch)."""
+    trials = "{{ eq .Payload.After.trial true }}"
+    errored = Pipeline(spark, parse_yaml(_fan_out_yaml(tmp_path / "e", reject=trials))[0])
+    new, grouped = _jobs_in_group(spark, lambda: errored.run_batch())
+    assert len(new) == 4  # fill+count, DLQ, json, parquet
+    assert new == grouped
+
+    never = "{{ eq .Payload.After.id -1 }}"
+    clean = Pipeline(spark, parse_yaml(_fan_out_yaml(tmp_path / "c", reject=never))[0])
+    new, grouped = _jobs_in_group(spark, lambda: clean.run_batch())
+    assert len(new) == 3  # fill+count, json, parquet
+    assert new == grouped
+
+
+def test_clean_batch_writes_no_dlq_file(spark, tmp_path):
+    cfg = parse_yaml(_fan_out_yaml(tmp_path, reject="{{ eq .Payload.After.id -1 }}"))[0]
+    res = Pipeline(spark, cfg).run_batch()
+    assert res.nacked == 0 and res.delivered == {"da": 20, "db": 20}
+    dlq = tmp_path / "dlq"
+    assert not dlq.exists() or not os.listdir(dlq)
+
+
+def test_destination_scope_breach_with_two_destinations(spark, tmp_path):
+    """A destination-scope breach writes its rows to the DLQ, raises,
+    and never writes that destination. The destinations run
+    concurrently, so the OTHER destination ``da`` may or may not have
+    been written when the failure surfaces (a serial fan-out wrote
+    every destination before the failing one in config order): it
+    holds either nothing or the whole batch, never a part of it."""
+    dlq = str(tmp_path / "dlq")
+    cfg = parse_yaml(f"""
+version: "2.2"
+pipelines:
+  - id: fan-breach
+    connectors:
+      - id: g
+        type: source
+        plugin: builtin:generator
+        settings: {{recordCount: 20, format.options: {{id: int, trial: bool}}}}
+      - id: da
+        type: destination
+        plugin: builtin:file
+        settings: {{path: "{tmp_path / 'a'}", format: json, mode: overwrite}}
+      - id: db
+        type: destination
+        plugin: builtin:file
+        settings: {{path: "{tmp_path / 'b'}", format: json, mode: overwrite}}
+        processors:
+          - id: fail-trials
+            plugin: error
+            settings: {{message: "dest rejected"}}
+            condition: "{{{{ eq .Payload.After.trial true }}}}"
+    dead-letter-queue:
+      plugin: builtin:file
+      settings: {{path: "{dlq}", format: json, mode: overwrite}}
+      window-size: 20
+      window-nack-threshold: 5
+""")[0]
+    p = Pipeline(spark, cfg)
+    with pytest.raises(PipelineFailure):
+        p.run_batch()  # 10 trial records > threshold 5, all in db's chain
+    assert p.status == "degraded"
+    dlq_rows = read_json_dir(dlq)
+    assert len(dlq_rows) == 10
+    assert {r["metadata"]["conduit.dlq.scope"] for r in dlq_rows} == {"destination:db"}
+    b = tmp_path / "b"
+    assert not b.exists() or not os.listdir(b)
+    assert len(read_json_dir(str(tmp_path / "a"))) in (0, 20)
+
+
+def test_concurrent_destination_nacks_add_up(spark, tmp_path):
+    """Six destinations, more than the cores, each nacking in its own
+    chain on its own pool thread: the shared counters lose no update
+    and the DLQ appends (serialized; they share one output directory)
+    all land."""
+    import sys
+
+    dests = "".join(
+        f"""
+      - id: d{i}
+        type: destination
+        plugin: builtin:file
+        settings: {{path: "{tmp_path / f'd{i}'}", format: json, mode: overwrite}}
+        processors:
+          - id: reject-{i}
+            plugin: error
+            settings: {{message: "d{i} rejected"}}
+            condition: "{{{{ eq .Payload.After.trial true }}}}"
+"""
+        for i in range(6)
+    )
+    cfg = parse_yaml(f"""
+version: "2.2"
+pipelines:
+  - id: fan-six
+    connectors:
+      - id: g
+        type: source
+        plugin: builtin:generator
+        settings: {{recordCount: 20, format.options: {{id: int, trial: bool}}}}{dests}
+    dead-letter-queue:
+      plugin: builtin:file
+      settings: {{path: "{tmp_path / 'dlq'}", format: json, mode: append}}
+      window-size: 1000
+      window-nack-threshold: 1000
+""")[0]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        res = Pipeline(spark, cfg).run_batch()
+    finally:
+        sys.setswitchinterval(old)
+    assert res.delivered == {f"d{i}": 10 for i in range(6)}
+    assert res.nacked == res.dlq_routed == 60
+    assert set(res.write_ms) == {f"d{i}" for i in range(6)} | {"dlq"}
+    dlq_rows = read_json_dir(str(tmp_path / "dlq"))
+    scopes = sorted(r["metadata"]["conduit.dlq.scope"] for r in dlq_rows)
+    assert scopes == sorted(f"destination:d{i}" for i in range(6) for _ in range(10))
+
+
+def test_concurrent_s3_writes_keep_their_own_endpoint(spark, tmp_path, monkeypatch):
+    """A JVM-transport s3 write sets the session-wide s3a conf, then
+    writes. The DLQ and both destinations of this batch run at once,
+    each with its own ``aws.url``: every write must see its own
+    endpoint from its first job to its last (s3a opens and caches a
+    bucket's FileSystem under the conf it finds), and every bucket
+    gets its rows. Local paths stand in for the buckets: the sandbox
+    has no hadoop-aws, and the conf is what races."""
+    import time
+
+    from conduit_spark import sinks
+
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    seen = []
+    real_file_sink = sinks.file_sink
+
+    def observed_file_sink(df, path, **kw):
+        before = conf.get("fs.s3a.endpoint")
+        time.sleep(0.3)  # hold the write open while the others start
+        real_file_sink(df, path, **kw)
+        seen.append((os.path.basename(path), before, conf.get("fs.s3a.endpoint")))
+
+    monkeypatch.setattr(sinks, "file_sink", observed_file_sink)
+    s3 = "{{path: \"{p}\", format: json, mode: append, aws.url: \"http://{ep}\"}}"
+    cfg = parse_yaml(f"""
+version: "2.2"
+pipelines:
+  - id: fan-s3
+    connectors:
+      - id: g
+        type: source
+        plugin: builtin:generator
+        settings: {{recordCount: 20, format.options: {{id: int, trial: bool}}}}
+      - id: da
+        type: destination
+        plugin: builtin:s3
+        settings: {s3.format(p=tmp_path / 'a', ep='ep-a')}
+      - id: db
+        type: destination
+        plugin: builtin:s3
+        settings: {s3.format(p=tmp_path / 'b', ep='ep-b')}
+    processors:
+      - id: reject
+        plugin: error
+        settings: {{message: rejected}}
+        condition: "{{{{ eq .Payload.After.trial true }}}}"
+    dead-letter-queue:
+      plugin: builtin:s3
+      settings: {s3.format(p=tmp_path / 'dlq', ep='ep-dlq')}
+      window-size: 100
+      window-nack-threshold: 100
+""")[0]
+    old = conf.get("fs.s3a.endpoint")
+    try:
+        res = Pipeline(spark, cfg).run_batch()
+    finally:
+        if old is None:
+            conf.unset("fs.s3a.endpoint")
+        else:
+            conf.set("fs.s3a.endpoint", old)
+    assert res.delivered == {"da": 10, "db": 10} and res.dlq_routed == 10
+    assert sorted(seen) == [
+        ("a", "http://ep-a", "http://ep-a"),
+        ("b", "http://ep-b", "http://ep-b"),
+        ("dlq", "http://ep-dlq", "http://ep-dlq"),
+    ]
+    for name in ("a", "b", "dlq"):
+        assert len(read_json_dir(str(tmp_path / name))) == 10
+
+
+def test_raising_tap_frees_batch_and_records_failure(spark, tmp_path):
+    """A streaming-path inspector tap that raises must still unpersist
+    the batch and report one failed batch."""
+    from conduit_spark.pipeline.metrics import MetricsRegistry
+
+    class Boom:
+        def tap_batch(self, df):
+            raise RuntimeError("tap failed")
+
+    reg = MetricsRegistry()
+    cfg = parse_yaml(_fan_out_yaml(tmp_path, reject="{{ eq .Payload.After.id -1 }}"))[0]
+    p = Pipeline(spark, cfg, metrics=reg, inspectors={"probe": Boom()})
+    df = p.build_batch()
+    with pytest.raises(RuntimeError, match="tap failed"):
+        p._deliver(df, batch_id=0)
+    level = df.storageLevel
+    assert not (level.useMemory or level.useDisk)  # no CacheManager entry
+    m = reg.snapshot("fan")
+    assert m["batches"] == 1 and m["failures"] == 1
 
 
 def test_destination_scoped_errors_fail_without_dlq(spark, tmp_path):

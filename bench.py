@@ -76,9 +76,10 @@ def _free_persisted_since(spark, before: set[int]) -> None:
     dozens of queries could pile up mid-suite and squeeze the unified
     memory pool. Explicitly unpersisting the query's own blocks right
     after its timing is deterministic and happens OUTSIDE the timed
-    region. Cross-query session state (``_materialized_fixture``, the
-    Lloyd trainer cache) lives in temp parquet, not persisted RDDs, so
-    nothing freed here is ever reused by a later query."""
+    region. Cross-query session state (``plans.session_artifact``: the
+    envelope fixtures, captures, pair relations and trained state)
+    lives in parquet files, not persisted RDDs, so nothing freed here
+    is ever reused by a later query."""
     try:
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
         for e in jmap.entrySet().toArray():

@@ -31,22 +31,17 @@ def ordered_result(df: DataFrame, *cols: "Column | str") -> DataFrame:
     A bare ``orderBy`` on an expensive subtree executes it TWICE: the
     range partitioner's sampling job runs the full child once to pick
     split points, then the sort stage runs it again (measured 5.7s →
-    3.8s on the SemDeDup pair join at sf0.1). A checkpoint
-    pins the subtree's result on first execution so the sort re-reads
-    executor-local blocks.
+    3.8s on the SemDeDup pair join at sf0.1). An eager checkpoint pins
+    the result on first execution so the sort re-reads its blocks.
 
-    r15 (VERDICT r14 item 3 — the per-query job floor): the checkpoint
-    is now EAGER, and when the materialized result is small (≤
-    ``SMALL_SORT_BYTES``, read from the block manager — no extra job)
-    the global sort becomes ``coalesce(1).sortWithinPartitions`` — ONE
-    narrow task over the checkpoint blocks, no range-sampling job, no
-    range exchange. Identical rows in the identical global order (a
-    single sorted partition IS a total order; tie order is as
-    undefined as the range sort's). Large results keep the
-    distributed range sort — the size gate is read per execution, so
-    the same code picks the scalable shape at cluster scale. Under a
-    plan audit (barriers suspended) the plain ``orderBy`` form is
-    built, as before.
+    When those blocks are small (≤ ``SMALL_SORT_BYTES``, read from the
+    block manager — no extra job) the sort is
+    ``coalesce(1).sortWithinPartitions``: ONE narrow task, no sampling
+    job, no range exchange, the same rows in the same total order (tie
+    order is as undefined as the range sort's). Larger results keep
+    the distributed range sort; the size is read per execution, so the
+    same code picks the scalable shape at cluster scale. Under a plan
+    audit the plain ``orderBy`` is built.
 
     Scale note: the checkpointed relation is the query RESULT (already
     reduced), not the input — output-sized executor memory, freed when
@@ -54,22 +49,19 @@ def ordered_result(df: DataFrame, *cols: "Column | str") -> DataFrame:
     """
     if barriers_suspended():
         return df.orderBy(*cols)
-    try:
-        jsc = df.sparkSession.sparkContext._jsc
-        before = {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
-        chk = barrier(df)
-        new_ids = {
-            int(k) for k in jsc.getPersistentRDDs().keySet().toArray()
-        } - before
-        size = 0
-        for ri in jsc.sc().getRDDStorageInfo():
-            if int(ri.id()) in new_ids:
-                size += int(ri.memSize()) + int(ri.diskSize())
-        if new_ids and size <= SMALL_SORT_BYTES:
-            return chk.coalesce(1).sortWithinPartitions(*cols)
-        return chk.orderBy(*cols)
-    except Exception:  # noqa: BLE001 — introspection must never break a query
-        return barrier(df, eager=False).orderBy(*cols)
+    chk = barrier(df)
+    # The checkpoint's logical plan is a LogicalRDD over exactly the
+    # persisted RDD: read that one RDD's blocks, so a checkpoint another
+    # thread makes meanwhile never counts toward this result's size.
+    rdd_id = chk._jdf.queryExecution().logical().rdd().id()
+    size = sum(
+        int(ri.memSize()) + int(ri.diskSize())
+        for ri in df.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo()
+        if ri.id() == rdd_id
+    )
+    if size <= SMALL_SORT_BYTES:
+        return chk.coalesce(1).sortWithinPartitions(*cols)
+    return chk.orderBy(*cols)
 
 
 # Serializes tiny_loop_aqe_off blocks: overlapping ones would restore

@@ -281,11 +281,11 @@ def lsh_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle→signature→band→verify pipeline — 4 of the 5 slowest gate
     rows shared that one upstream (VERDICT r6 item 4). The pair
     relation is the 4096×-reduced OUTPUT of the pipeline (near-dup
-    rate × corpus, not corpus-sized), so it gets the
-    ``_materialized_fixture`` treatment: temp-parquet once, every
-    consumer reads the materialization. ``d_minhash_lsh_pairs`` stays
-    on the live pipeline — it is the timing anchor for the LSH build
-    itself. At 100 TB this is exactly the production shape too: a
+    rate × corpus, not corpus-sized), so it is a session artifact
+    (``plans.session_artifact``, via ``_materialized_fixture``):
+    parquet once, every consumer reads the materialization.
+    ``d_minhash_lsh_pairs`` stays on the live pipeline — it is the
+    timing anchor for the LSH build itself. At 100 TB this is exactly the production shape too: a
     curation DAG computes pairs once and fans out to
     cluster/rank/prune/audit consumers, rather than re-shingling the
     corpus per consumer."""
@@ -723,9 +723,7 @@ def d_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the same audit runs on a SAMPLE of the corpus (the
     truth side is the expensive leg, exactly like IVF recall audits
     sample queries)."""
-    from conduit_spark.analytics.processor_queries import (
-        _materialized_fixture,
-    )
+    from conduit_spark.analytics.processor_queries import _materialized_fixture
 
     truth = _materialized_fixture(
         "ngram_jaccard_pairs",

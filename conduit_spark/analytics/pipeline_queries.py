@@ -13,6 +13,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from conduit_spark.pipeline import Pipeline, parse_yaml
+from conduit_spark.plans import session_artifact
 from conduit_spark.sources.generator import generator_source
 from conduit_spark.sources.tables import load_table
 
@@ -318,6 +319,18 @@ def g_kafka_wire_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _text_capture(spark: SparkSession, name: str, sf_dir: str, build) -> str:
+    """The session's capture directory holding ``build()``'s one string
+    column as text lines, spread across the session's cores."""
+
+    def write(path: str) -> None:
+        build().repartition(
+            spark.sparkContext.defaultParallelism
+        ).write.mode("overwrite").text(path)
+
+    return session_artifact(spark, name, sf_dir, write)
+
+
 def g_pg_wal_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``builtin:postgres`` CDC path under the DuckDB oracle: a
     wal2json-v2 changelog (one JSON line per action, the exact
@@ -393,18 +406,7 @@ def g_pg_wal_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return ev.select(F.explode(lines).alias("value"))
 
-    import tempfile
-
-    from conduit_spark.analytics.processor_queries import _FIXTURE_CACHE
-
-    key = ("wal2json_capture", sf_dir)
-    path = _FIXTURE_CACHE.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="conduit_fixture_wal2json_") + "/cap"
-        build_capture().repartition(
-            spark.sparkContext.defaultParallelism
-        ).write.mode("overwrite").text(path)
-        _FIXTURE_CACHE[key] = path
+    path = _text_capture(spark, "wal2json_capture", sf_dir, build_capture)
 
     env = wal2json_source(spark, path, key_cols=["event_id"])
     final = cdc_apply(
@@ -526,12 +528,7 @@ def g_pg_live_wal_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from conduit_spark.operators.cdc import cdc_apply
     from conduit_spark.sources.postgres_wal import lsn_to_long, wal2json_source
 
-    from conduit_spark.analytics.processor_queries import _FIXTURE_CACHE
-
-    key = ("pg_live_wal_capture", sf_dir)
-    path = _FIXTURE_CACHE.get(key)
-    if path is None:
-        import tempfile
+    def write(path: str) -> None:
         import time as _time
 
         from conduit_spark.functions.minipg import MiniPGServer, lsn_text
@@ -569,7 +566,6 @@ def g_pg_live_wal_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             return _json.dumps(doc)
 
         cert_pem, key_pem = generate_self_signed()
-        path = tempfile.mkdtemp(prefix="conduit_fixture_pglive_") + "/cap"
         with MiniPGServer(
             keepalive_s=0.05,
             users={"conduit": "gate-pw"},
@@ -601,7 +597,8 @@ def g_pg_live_wal_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             tail.stop()
             if srv.confirmed_flush_lsn < srv.current_lsn:
                 raise RuntimeError("live WAL tail never confirmed the feed")
-        _FIXTURE_CACHE[key] = path
+
+    path = session_artifact(spark, "pg_live_wal_capture", sf_dir, write)
 
     env = wal2json_source(spark, path, key_cols=["event_id"])
     final = cdc_apply(
@@ -643,19 +640,10 @@ def g_pg_pgoutput_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     task and writes it atomically under a group-derived name (retries
     rewrite identical bytes), so no capture bytes ever pass through
     the driver."""
-    import os as _os
-
-    from conduit_spark.analytics.processor_queries import _FIXTURE_CACHE
     from conduit_spark.operators.cdc import cdc_apply
     from conduit_spark.sources.postgres_wal import pgoutput_source
 
-    key = ("pgoutput_capture", sf_dir)
-    path = _FIXTURE_CACHE.get(key)
-    if path is None:
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="conduit_fixture_pgoutput_") + "/cap"
-        _os.makedirs(path, exist_ok=True)
+    def write(path: str) -> None:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "value", (F.col("event_id") % 32).alias("grp")
         )
@@ -725,7 +713,8 @@ def g_pg_pgoutput_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy("grp").applyInPandas(
             write_group, "grp int, n long"
         ).count()  # materialize the side-effect writes
-        _FIXTURE_CACHE[key] = path
+
+    path = session_artifact(spark, "pgoutput_capture", sf_dir, write)
 
     env = pgoutput_source(spark, path, source_id="pg")
     final = cdc_apply(
@@ -760,23 +749,17 @@ def g_file_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     line, a mangled charset, or a broken raw→structured upgrade cannot
     match (r8 gate candidate; closes `builtin:file`'s pytest-only
     status, VERDICT r6 §2.2)."""
-    import tempfile
-
     from conduit_spark import operators as ops
-    from conduit_spark.analytics.processor_queries import _FIXTURE_CACHE
     from conduit_spark.sources.file_source import file_source
 
-    key = ("file_roundtrip_lines", sf_dir)
-    path = _FIXTURE_CACHE.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="conduit_fixture_filesrc_") + "/lines"
-        docs = load_table(spark, sf_dir, "documents")
-        docs.select(
+    path = _text_capture(
+        spark,
+        "file_roundtrip_lines",
+        sf_dir,
+        lambda: load_table(spark, sf_dir, "documents").select(
             F.to_json(F.struct("doc_id", "text")).alias("value")
-        ).repartition(spark.sparkContext.defaultParallelism).write.mode(
-            "overwrite"
-        ).text(path)
-        _FIXTURE_CACHE[key] = path
+        ),
+    )
 
     env = file_source(spark, path, fmt="text", source_id="gatefile")
     dec = ops.json_decode(env)
@@ -797,7 +780,8 @@ def warm_wire_endpoints(spark: SparkSession, sf_dir: str) -> None:
     harness can charge queries for list+fetch+decode ONLY (VERDICT r9
     item 4: seeding inside the timed path caused rebaseline-forcing
     drift). Construction is discarded — no Spark action runs here, and
-    the per-``sf_dir`` caches make repeat calls free."""
+    the per-``sf_dir`` endpoint caches and the session's captures
+    (``plans.session_artifact``) make repeat calls free."""
     for fn in (
         g_s3_wire_snapshot,
         g_s3_wire_secure_snapshot,

@@ -42,34 +42,23 @@ EVENTS_PAYLOAD_SCHEMA = StructType(
 )
 
 
-_FIXTURE_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _materialized_fixture(name: str, spark: SparkSession, sf_dir: str, build) -> DataFrame:
-    """Synthesize a fixture relation ONCE per session into temp parquet
-    and re-read it afterwards. Two reasons (both from the r3 verdict):
-    benchmark timings should measure the operator under test, not the
-    to_json envelope-synthesis scaffolding re-run every repetition; and
-    the parquet scan doubles as the CollapseProject barrier that keeps
-    the synthesis from inlining into every downstream JSON-parse
-    reference (the old per-query checkpoint). Correctness is
-    unaffected — the first call builds and writes exactly the rows the
-    inline plan produced."""
-    import tempfile
-
-    from conduit_spark.plans import barriers_suspended
+    """Synthesize a fixture relation ONCE per session into parquet
+    (:func:`conduit_spark.plans.session_artifact`) and re-read it
+    afterwards. Two reasons (both from the r3 verdict): benchmark
+    timings should measure the operator under test, not the to_json
+    envelope-synthesis scaffolding re-run every repetition; and the
+    parquet scan doubles as the CollapseProject barrier that keeps the
+    synthesis from inlining into every downstream JSON-parse reference
+    (the old per-query checkpoint). Correctness is unaffected — the
+    first call builds and writes exactly the rows the inline plan
+    produced."""
+    from conduit_spark.plans import barriers_suspended, session_artifact
 
     if barriers_suspended():
-        # plan-audit mode (plans.barriers_disabled): inline the build
-        # plan instead of materializing, so the audit sees the full
-        # upstream DAG; the cache is neither read nor populated, so a
-        # later non-audit run in the same session still materializes.
-        return build()
+        return build()  # plan audit: show the full upstream DAG
 
-    key = (name, sf_dir)
-    path = _FIXTURE_CACHE.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix=f"conduit_fixture_{name}_") + "/data"
+    def write(path: str) -> None:
         # Spread across the session's cores: the source tables at test
         # SF fit one parquet split, so without this every fixture lands
         # in ONE file and every downstream envelope query runs its JSON
@@ -78,8 +67,8 @@ def _materialized_fixture(name: str, spark: SparkSession, sf_dir: str, build) ->
         build().repartition(
             spark.sparkContext.defaultParallelism
         ).write.mode("overwrite").parquet(path)
-        _FIXTURE_CACHE[key] = path
-    return spark.read.parquet(path)
+
+    return spark.read.parquet(session_artifact(spark, name, sf_dir, write))
 
 
 def _events_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -136,6 +136,13 @@ def _ensure_package_on_executors(spark: SparkSession) -> None:
     _PYFILES_SENT.add(app_id)
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, at most 16g: the heap must
+    leave room for the Python workers on the same host."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 << 10, phys >> 21)}m"
+
+
 def get_spark(
     app_name: str = "conduit-spark",
     *,
@@ -163,7 +170,8 @@ def get_spark(
     # Only effective at JVM launch; ignored when attaching to an
     # existing session or a real cluster (where executors size it).
     conf.setdefault(
-        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+        "spark.driver.memory",
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
     )
     # Nudge the ContextCleaner so dropped DataFrames' checkpoint/cache
     # blocks are actually freed between queries in long sessions.

@@ -275,6 +275,95 @@ def test_checkpoints_only_through_plans():
     assert not offenders, offenders
 
 
+def test_no_temp_files_in_analytics():
+    """Cross-query files in the query library go through
+    ``plans.session_artifact``, which owns and removes them: no module
+    under conduit_spark/analytics calls ``tempfile.mkdtemp`` or
+    ``mkstemp`` (each such directory outlived its process)."""
+    import ast
+    import pathlib
+
+    import conduit_spark.analytics
+
+    pkg = pathlib.Path(conduit_spark.analytics.__file__).parent
+    offenders = [
+        f"{path.relative_to(pkg)}:{node.lineno}"
+        for path in sorted(pkg.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        if isinstance(node, ast.Call)
+        and (
+            getattr(node.func, "attr", None) in ("mkdtemp", "mkstemp")
+            or getattr(node.func, "id", None) in ("mkdtemp", "mkstemp")
+        )
+    ]
+    assert not offenders, offenders
+
+
+def test_failed_session_artifact_leaves_nothing(spark):
+    """A ``write`` that raises (the live-WAL capture's "never confirmed
+    the feed") removes its directory and records no entry, so the next
+    call builds again; a finished artifact is then returned unchanged
+    without another build."""
+    import os
+
+    from conduit_spark import plans
+
+    tried = []
+
+    def failing(path):
+        tried.append(path)
+        with open(os.path.join(path, "part-0"), "w") as f:
+            f.write("half a capture")
+        raise RuntimeError("never confirmed the feed")
+
+    with pytest.raises(RuntimeError, match="never confirmed"):
+        plans.session_artifact(spark, "t_failing", "k", failing)
+    assert not os.path.exists(tried[0])
+    assert not [k for k in plans._ARTIFACTS if k[1] == "t_failing"]
+
+    built = []
+
+    def writing(path):
+        built.append(path)
+        with open(os.path.join(path, "part-0"), "w") as f:
+            f.write("whole")
+
+    path = plans.session_artifact(spark, "t_failing", "k", writing)
+    assert built == [path] and os.path.exists(os.path.join(path, "part-0"))
+    assert plans.session_artifact(spark, "t_failing", "k", writing) == path
+    assert built == [path]
+
+
+def test_session_artifact_builds_once_across_threads(spark):
+    """Threads that ask for the same artifact at once (HTTP-control-
+    plane queries share one session) get one build and one path."""
+    import sys
+    import threading
+
+    from conduit_spark import plans
+
+    builds, paths = [], []
+
+    def write(path):
+        builds.append(path)
+
+    def ask():
+        paths.append(plans.session_artifact(spark, "t_threads", "k", write))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=ask) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert len(builds) == 1 and paths == builds * 16
+
+
 def test_pack_blocks_global_window_is_bucket_level(spark, sf):
     """The only partition-less window in c_pack_blocks consumes the
     bucket aggregate (input already reduced by the groupBy), and the
@@ -397,6 +486,39 @@ def test_ordered_result_large_result_keeps_range_sort(spark):
     plan = executed_plan(out)
     assert "rangepartitioning" in plan
     assert "Coalesce 1" not in plan
+
+
+def test_ordered_result_sizes_only_its_own_checkpoint(spark, monkeypatch):
+    """The small-sort choice reads the size of this result's own
+    checkpoint: a larger RDD that something else persists while the
+    checkpoint is being made does not count toward it."""
+    import os
+
+    from conduit_spark import analytics
+    from conduit_spark.plans import executed_plan
+
+    real_barrier = analytics.barrier
+    others = []
+
+    def barrier_with_company(df, eager=True):
+        rows = [os.urandom(1024) for _ in range(2048)]
+        other = spark.sparkContext.parallelize(rows, 4).persist()
+        other.count()  # ~2 MB in blocks, persisted inside the window
+        others.append(other)
+        return real_barrier(df, eager)
+
+    monkeypatch.setattr(analytics, "barrier", barrier_with_company)
+    monkeypatch.setattr(analytics, "SMALL_SORT_BYTES", 1 << 20)
+    try:
+        df = spark.range(100).selectExpr("id * 37 % 101 AS k")
+        out = analytics.ordered_result(df, "k")
+        plan = executed_plan(out)
+        assert "Coalesce 1" in plan
+        assert "rangepartitioning" not in plan
+    finally:
+        for o in others:
+            o.unpersist()
+    assert others
 
 
 def test_bucketed_join_is_shuffle_free(spark, sf):

@@ -170,7 +170,7 @@ def _warm_worker(batches):
         from conduit_spark.functions import minis3  # noqa: F401
         from conduit_spark.sources import (  # noqa: F401
             postgres_wal,
-            s3_wire,
+            pyds,
         )
     except Exception:  # noqa: BLE001
         pass

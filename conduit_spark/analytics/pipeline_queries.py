@@ -140,19 +140,19 @@ def g_s3_wire_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: the first ``SNAP_N`` documents (by doc_id) are PUT into an
     in-process :class:`MiniS3Server` over real loopback TCP (driver
     side, bounded — metadata+bytes for 300 small objects), then
-    ``s3_wire_source_df`` snapshot-reads them back: paginated
-    ListObjectsV2 on the driver (metadata only), size-balanced
-    executor tasks each GETting their own objects over their own
-    connection. The output re-derives (doc_id, byte length, server
-    ETag, text) from the FETCHED BYTES, so a corrupted wire transfer,
+    a batch read of the ``conduit-s3-wire`` DataSource reads them
+    back: paginated ListObjectsV2 on the driver (metadata only),
+    size-balanced executor tasks each GETting their own objects over
+    their own connection. The output re-derives (doc_id, byte length,
+    server ETag, text) from the FETCHED BYTES, so a corrupted wire transfer,
     a wrong Range reassembly, or a bad listing cannot hash-match the
     oracle, which recomputes the same columns from the parquet table
     (S3 ETag IS md5, so ``md5(text)`` is the oracle-side ETag).
 
     Scale: the bounded seed loop is test scaffolding; the read path
     under test is the production one — listing paginates, object
-    bytes move executor-side only (s3_wire.py module docstring)."""
-    from conduit_spark.sources.s3_wire import s3_wire_source_df
+    bytes move executor-side only (pyds.py module docstring)."""
+    from conduit_spark.sources import pyds
 
     if sf_dir not in _S3_SNAP_CACHE:
         import atexit
@@ -177,7 +177,10 @@ def g_s3_wire_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         _S3_SNAP_CACHE[sf_dir] = (srv, srv.endpoint)
     endpoint = _S3_SNAP_CACHE[sf_dir][1]
 
-    obj = s3_wire_source_df(spark, endpoint, "gate", "snap/")
+    obj = pyds.load(
+        spark, "conduit-s3-wire",
+        {"aws.url": endpoint, "aws.bucket": "gate", "prefix": "snap/"},
+    )
     return obj.select(
         F.col("key"),
         F.substring("key", 6, 8).cast("bigint").alias("doc_id"),
@@ -207,7 +210,7 @@ def g_s3_wire_secure_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, byte length, md5-ETag, text) from the parquet table, so a
     signing failure (403 → task error), a mis-encoded key, or
     corrupted TLS framing cannot hash-match (r9 rotation candidate)."""
-    from conduit_spark.sources.s3_wire import s3_wire_source_df
+    from conduit_spark.sources import pyds
 
     if sf_dir not in _S3_SECURE_CACHE:
         import atexit
@@ -242,10 +245,18 @@ def g_s3_wire_secure_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"se c/{int(r['doc_id']):08d}+v 1",
                 r["text"].encode(),
             )
-        _S3_SECURE_CACHE[sf_dir] = (srv, srv.endpoint, creds)
-    _, endpoint, creds = _S3_SECURE_CACHE[sf_dir]
+        _S3_SECURE_CACHE[sf_dir] = (srv, srv.endpoint, cert_pem)
+    _, endpoint, cert_pem = _S3_SECURE_CACHE[sf_dir]
 
-    obj = s3_wire_source_df(spark, endpoint, "gate", "se c/", creds=creds)
+    obj = pyds.load(
+        spark, "conduit-s3-wire",
+        {
+            "aws.url": endpoint, "aws.bucket": "gate", "prefix": "se c/",
+            "aws.accessKeyId": "AKIDGATE",
+            "aws.secretAccessKey": "gate-secret",
+            "tls.caCert": cert_pem,
+        },
+    )
     return obj.select(
         F.col("key"),
         F.substring("key", 6, 8).cast("bigint").alias("doc_id"),
@@ -267,15 +278,16 @@ def g_kafka_wire_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition topic on an in-process :class:`MiniKafkaBroker` over
     real loopback TCP, routed by the REAL default-partitioner hash
     (murmur2 of the doc_id key) and stamped with a deterministic
-    timestamp (doc_id, not wall time). ``kafka_wire_source_df`` then
-    snapshot-reads the topic: driver resolves offset ranges with
-    Metadata+ListOffsets (O(partitions) control traffic), one task per
-    topic-partition Fetches its range over its own connection. The
+    timestamp (doc_id, not wall time). A batch read of the
+    ``conduit-kafka-wire`` DataSource then reads the topic: the driver
+    resolves offset ranges with Metadata+ListOffsets (O(partitions)
+    control traffic), one task per topic-partition Fetches its range
+    over its own connection. The
     output re-derives (doc_id, byte length, text, timestamp) from the
     FETCHED RecordBatch v2 bytes (CRC32C-verified in decode), so a
     corrupt wire transfer or a missed offset range cannot hash-match
     the parquet-side oracle."""
-    from conduit_spark.pipeline.registry import kafka_wire_source_df
+    from conduit_spark.sources import pyds
 
     if sf_dir not in _KAFKA_SNAP_CACHE:
         import atexit
@@ -310,7 +322,10 @@ def g_kafka_wire_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         _KAFKA_SNAP_CACHE[sf_dir] = (broker, broker.bootstrap)
     bootstrap = _KAFKA_SNAP_CACHE[sf_dir][1]
 
-    raw = kafka_wire_source_df(spark, bootstrap, "gate-docs")
+    raw = pyds.load(
+        spark, "conduit-kafka-wire",
+        {"servers": bootstrap, "topic": "gate-docs"},
+    )
     return raw.select(
         F.col("key").cast("string").cast("bigint").alias("doc_id"),
         F.length("value").cast("bigint").alias("n_bytes"),
@@ -444,7 +459,7 @@ def g_kafka_wire_sasl_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot hash-match. Until round 8 the SASL_SSL path was
     pytest-only (tests/test_wire_tls.py); this gives it an oracle row
     (r9 rotation candidate)."""
-    from conduit_spark.pipeline.registry import kafka_wire_source_df
+    from conduit_spark.sources import pyds
 
     if sf_dir not in _KAFKA_SASL_CACHE:
         import atexit
@@ -492,9 +507,15 @@ def g_kafka_wire_sasl_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         _KAFKA_SASL_CACHE[sf_dir] = (broker, broker.bootstrap, sasl, cert_pem)
     _, bootstrap, sasl, cert_pem = _KAFKA_SASL_CACHE[sf_dir]
 
-    raw = kafka_wire_source_df(
-        spark, bootstrap, "gate-docs-sec",
-        sasl=sasl, tls={"tls_ca": cert_pem},
+    raw = pyds.load(
+        spark, "conduit-kafka-wire",
+        {
+            "servers": bootstrap, "topic": "gate-docs-sec",
+            "saslMechanism": sasl["mechanism"],
+            "saslUsername": sasl["username"],
+            "saslPassword": sasl["password"],
+            "tls.caCert": cert_pem,
+        },
     )
     return raw.select(
         F.col("key").cast("string").cast("bigint").alias("doc_id"),

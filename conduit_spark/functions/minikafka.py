@@ -37,7 +37,7 @@ protocol guide without KIP-482 compact encodings:
   and adds mTLS: ``MiniKafkaBroker(client_ca=...)`` REQUIRES client
   certificates, ``MiniKafkaClient(client_cert=, client_key=)``
   presents one — the reference's ``clientCert``/``clientKey``
-  settings, mapped from YAML by ``registry._kafka_tls``.
+  settings, mapped from YAML by ``sources.pyds.kafka_tls``.
 
 Record payloads are RecordBatch v2 via ``kafka_wire`` (CRC32C
 verified both directions). The broker restamps ``baseOffset`` on

@@ -514,61 +514,26 @@ def build_source(
         if plugin == "builtin:s3":
             if str(settings.get("transport", "jvm")) == "wire":
                 # jar-free S3 REST path (no hadoop-aws needed): list +
-                # parallel GET through the engine's own protocol client
-                if streaming:
-                    # continuous tailing: Python DataSource stream —
-                    # LastModified watermark offsets in the checkpoint,
-                    # one CDC polling cycle per micro-batch
-                    from conduit_spark.sources import pyds
-                    from conduit_spark.sources.s3_wire import envelope_from_s3
+                # parallel GET through the engine's own protocol
+                # client. Batch reads the range cdc.since (default:
+                # everything) up to the current listing; streaming
+                # tails it, one CDC polling cycle per micro-batch with
+                # the LastModified watermark in the checkpoint.
+                from conduit_spark.sources import pyds
+                from conduit_spark.sources.s3_wire import envelope_from_s3
 
-                    pyds.register(spark)
-                    df = (
-                        spark.readStream.format("conduit-s3-wire")
-                        .option("endpoint", str(settings["aws.url"]))
-                        .option("bucket", str(settings["aws.bucket"]))
-                        .option("prefix", str(settings.get("prefix", "")))
-                        .load()
-                    )
-                    return envelope_from_s3(
-                        df,
-                        source_id,
-                        str(settings["aws.bucket"]),
-                        operation="create",
-                    )
-                from conduit_spark.sources.s3_wire import (
-                    envelope_from_s3,
-                    s3_wire_cdc_df,
-                    s3_wire_source_df,
-                )
-
-                if "cdc.since" in settings:
-                    # one CDC polling cycle: objects modified strictly
-                    # after the marker; the caller advances the marker
-                    # to max(metadata['s3.lastModified']) of the batch
-                    objs, _pos = s3_wire_cdc_df(
-                        spark,
-                        str(settings["aws.url"]),
-                        str(settings["aws.bucket"]),
-                        str(settings.get("prefix", "")),
-                        since=str(settings["cdc.since"]),
-                        creds=_s3_creds(settings),
-                    )
-                    return envelope_from_s3(
-                        objs,
-                        source_id,
-                        str(settings["aws.bucket"]),
-                        operation="create",
-                    )
-                objs = s3_wire_source_df(
-                    spark,
-                    str(settings["aws.url"]),
-                    str(settings["aws.bucket"]),
-                    str(settings.get("prefix", "")),
-                    creds=_s3_creds(settings),
+                df = pyds.load(
+                    spark, "conduit-s3-wire", settings, streaming=streaming
                 )
                 return envelope_from_s3(
-                    objs, source_id, str(settings["aws.bucket"])
+                    df,
+                    source_id,
+                    str(settings["aws.bucket"]),
+                    operation=(
+                        "create"
+                        if streaming or "cdc.since" in settings
+                        else "snapshot"
+                    ),
                 )
             apply_s3_conf(spark, settings)
         ropts = {}
@@ -799,45 +764,14 @@ def build_source(
         )
     if plugin == "builtin:kafka":
         if str(settings.get("transport", "jvm")) == "wire":
-            if streaming:
-                # continuous tailing: Python DataSource stream with
-                # per-topic-partition offset ranges in the checkpoint
-                # (the JVM kafka source's offset model, jar-free)
-                from conduit_spark.sources import pyds
+            # jar-free kafka wire client: per-topic-partition offset
+            # ranges (the JVM kafka source's offset model); batch reads
+            # one range up to the log end, streaming keeps the offsets
+            # in the checkpoint
+            from conduit_spark.sources import pyds
 
-                pyds.register(spark)
-                reader = (
-                    spark.readStream.format("conduit-kafka-wire")
-                    .option("servers", str(settings["servers"]))
-                    .option(
-                        "topic",
-                        str(settings.get("topics", settings.get("topic"))),
-                    )
-                )
-                if "startingOffsets" in settings:
-                    reader = reader.option(
-                        "startingOffsets", str(settings["startingOffsets"])
-                    )
-                if "groupId" in settings:
-                    reader = reader.option(
-                        "groupId", str(settings["groupId"])
-                    )
-                df = reader.load()
-                return envelope_from_kafka(df, source_id)
-            df = kafka_wire_source_df(
-                spark,
-                str(settings["servers"]),
-                str(settings.get("topics", settings.get("topic"))),
-                group_id=(
-                    str(settings["groupId"]) if "groupId" in settings else None
-                ),
-                read_from_beginning=(
-                    str(settings.get("readFromBeginning", "true")).lower()
-                    in ("1", "true", "yes")
-                ),
-                client_id=str(settings.get("clientID", "conduit-spark")),
-                sasl=_kafka_sasl(settings),
-                tls=_kafka_tls(settings),
+            df = pyds.load(
+                spark, "conduit-kafka-wire", settings, streaming=streaming
             )
             return envelope_from_kafka(df, source_id)
         reader = spark.readStream if streaming else spark.read
@@ -859,211 +793,6 @@ def _duration_ms(v, *, default_ms: int) -> int:
     if t.endswith("m"):
         return int(float(t[:-1]) * 60_000)
     return int(float(t) * 1000)
-
-
-def _kafka_tls(settings: dict) -> dict:
-    """Map the reference kafka connector's TLS settings onto
-    MiniKafkaClient kwargs: tls.enabled / caCert / clientCert /
-    clientKey (conduit-connector-kafka's parameter names, accepted
-    bare or under the ``tls.`` namespace the engine's YAML uses).
-    clientCert+clientKey turn on mTLS — the client presents its
-    certificate during the handshake (round 9; previously descoped)."""
-
-    def get(name: str):
-        v = settings.get(f"tls.{name}", settings.get(name))
-        return str(v) if v is not None else None
-
-    enabled = str(settings.get("tls.enabled", "")).lower() in ("1", "true", "yes")
-    ca = get("caCert")
-    cert, key = get("clientCert"), get("clientKey")
-    skip = str(get("insecureSkipVerify") or "").lower() in ("1", "true", "yes")
-    if not enabled and not ca and not cert and not skip:
-        return {}
-    out: dict = {"tls": True, "tls_ca": ca}
-    if cert:
-        if not key:
-            raise ValueError("kafka tls.clientCert requires tls.clientKey")
-        out["client_cert"] = cert
-        out["client_key"] = key
-    if skip:
-        out["insecure_skip_verify"] = True
-    return out
-
-
-def _kafka_sasl(settings: dict) -> dict | None:
-    """Map the reference kafka connector's SASL settings
-    (conduit-connector-kafka: saslMechanism/saslUsername/saslPassword)
-    onto the wire client's sasl kwargs; None when unauthenticated."""
-    user = settings.get("saslUsername")
-    pw = settings.get("saslPassword")
-    if not user or pw is None:
-        return None
-    return {
-        "mechanism": str(settings.get("saslMechanism", "SCRAM-SHA-256")),
-        "username": str(user),
-        "password": str(pw),
-    }
-
-
-def _s3_creds(settings: dict) -> dict | None:
-    """Map the reference connector's ``aws.*`` credential settings
-    (conduit-connector-s3: accessKeyId/secretAccessKey/region/
-    sessionToken) onto the wire client's SigV4 kwargs; None when
-    unauthenticated (dev endpoints)."""
-    ak = settings.get("aws.accessKeyId")
-    sk = settings.get("aws.secretAccessKey")
-    if not ak or not sk:
-        return None
-    out = {"access_key": str(ak), "secret_key": str(sk)}
-    if settings.get("aws.region"):
-        out["region"] = str(settings["aws.region"])
-    if settings.get("aws.sessionToken"):
-        out["session_token"] = str(settings["aws.sessionToken"])
-    return out
-
-
-def kafka_wire_source_df(
-    spark, servers: str, topic: str, group_id: str | None = None,
-    read_from_beginning: bool = True, client_id: str = "conduit-spark",
-    sasl: dict | None = None, tls: dict | None = None,
-):
-    """Jar-free ``builtin:kafka`` snapshot reader over the engine's
-    wire client: the driver resolves (topic, partition, earliest,
-    latest) offset ranges with Metadata + ListOffsets — O(partitions)
-    control traffic only — then one Spark task per topic-partition
-    Fetches its range over its own connection via ``mapInPandas``.
-    That is exactly the task shape of the JVM kafka source
-    (KafkaSourceRDD: one task per topic-partition fetching a bounded
-    offset range), so the plan scales with partition count; record
-    bytes never touch the driver. ``topic`` accepts a comma-separated
-    list (the reference connector's ``topics`` model). Output columns
-    match the spark-sql-kafka schema subset that
-    ``envelope_from_kafka`` projects.
-
-    ``group_id`` switches each partition's START to the group's
-    committed offset (OffsetFetch; where none, ``read_from_beginning``
-    picks earliest (default) or latest — the reference source's
-    ``readFromBeginning``, whose own default is the LATEST side
-    because it tails as a daemon; a batch snapshot with latest-start
-    would be empty on first run, so the engine defaults to earliest
-    and the setting opts out). Committing after a successful run
-    is the caller's job via :func:`kafka_wire_commit_group` (commit
-    must follow delivery, and a DataFrame is lazy)."""
-    from conduit_spark.functions.minikafka import EARLIEST, LATEST, MiniKafkaClient
-
-    server = str(servers).split(",")[0].strip()
-    topics = [t.strip() for t in str(topic).split(",") if t.strip()]
-    tls_kw = tls or {}
-    schema = (
-        "key binary, value binary, topic string, partition int, "
-        "offset long, timestamp long"
-    )
-    with MiniKafkaClient(server, client_id=client_id, sasl=sasl, **tls_kw) as c:
-        md = c.metadata(topics)
-        all_parts = [
-            (t, p["partition"])
-            for t in topics
-            for p in md["topics"].get(t, {"partitions": []})["partitions"]
-        ]
-        committed = (
-            c.offset_fetch(group_id, all_parts) if group_id else {}
-        )
-        ranges = []
-        for t, p in all_parts:
-            hi = c.list_offsets(t, p, LATEST)
-            if committed.get((t, p), -1) >= 0:
-                lo = max(c.list_offsets(t, p, EARLIEST), committed[(t, p)])
-            elif not read_from_beginning:
-                # readFromBeginning=false: only NEW records. Honored
-                # with or without a groupId (ADVICE r9: falling through
-                # to EARLIEST when no group was set silently inverted
-                # the setting for ported reference pipelines).
-                lo = hi
-            else:
-                lo = c.list_offsets(t, p, EARLIEST)
-            if hi > lo:
-                ranges.append((t, p, lo, hi))
-    if not ranges:
-        return spark.createDataFrame([], schema)
-
-    range_df = spark.createDataFrame(
-        ranges, "topic string, partition int, start long, end long"
-    ).repartition(len(ranges), "topic", "partition")
-
-    def _fetch(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for row in pdf.itertuples():
-                keys, vals, offs, tss = [], [], [], []
-                # client_id travels on executor fetch connections too,
-                # not just the driver metadata connection (ADVICE r9)
-                with MiniKafkaClient(
-                    server, client_id=client_id, sasl=sasl, **tls_kw
-                ) as client:
-                    # highest mutual Fetch revision (v12 flexible
-                    # against this repo's broker; v4 floor elsewhere)
-                    client.negotiate_versions()
-                    off = int(row.start)
-                    while off < row.end:
-                        recs, _hwm = client.fetch(
-                            row.topic, int(row.partition), off
-                        )
-                        if not recs:
-                            break
-                        for r in recs:
-                            if r["offset"] >= row.end:
-                                break
-                            keys.append(r["key"])
-                            vals.append(r["value"])
-                            offs.append(r["offset"])
-                            tss.append(r["timestamp"])
-                        off = recs[-1]["offset"] + 1
-                yield pd.DataFrame(
-                    {
-                        "key": keys,
-                        "value": vals,
-                        "topic": row.topic,
-                        "partition": int(row.partition),
-                        "offset": offs,
-                        "timestamp": tss,
-                    }
-                )
-
-    return range_df.mapInPandas(_fetch, schema)
-
-
-def kafka_wire_commit_group(
-    servers: str, group_id: str, topic: str, sasl: dict | None = None,
-    tls: dict | None = None,
-) -> dict[tuple[str, int], int]:
-    """Commit the CURRENT log-end offsets of ``topic`` (comma list ok)
-    to ``group_id`` under a real join/sync membership — the
-    after-successful-delivery half of the batch consumer-group read
-    (:func:`kafka_wire_source_df` with ``group_id``). Returns the
-    committed next-read offsets per (topic, partition). Driver-side
-    O(partitions) control traffic only."""
-    from conduit_spark.functions.minikafka import LATEST, MiniKafkaClient
-
-    server = str(servers).split(",")[0].strip()
-    topics = [t.strip() for t in str(topic).split(",") if t.strip()]
-    with MiniKafkaClient(server, sasl=sasl, **(tls or {})) as c:
-        md = c.metadata(topics)
-        offsets = {
-            (t, p["partition"]): c.list_offsets(t, p["partition"], LATEST)
-            for t in topics
-            for p in md["topics"].get(t, {"partitions": []})["partitions"]
-        }
-        g = c.join_group(group_id)
-        c.sync_group(
-            group_id, g["generation"], g["member_id"],
-            assignments={g["member_id"]: b""},
-        )
-        c.offset_commit(
-            group_id, offsets,
-            generation=g["generation"], member_id=g["member_id"],
-        )
-    return offsets
 
 
 def kafka_reader_options(settings: dict[str, Any]) -> dict[str, str]:
@@ -1180,6 +909,7 @@ def write_destination(
         return
     if plugin == "builtin:s3":
         if str(settings.get("transport", "jvm")) == "wire":
+            from conduit_spark.sources.pyds import s3_creds
             from conduit_spark.sources.s3_wire import s3_wire_sink
 
             s3_wire_sink(
@@ -1189,7 +919,7 @@ def write_destination(
                 str(settings.get("prefix", "")),
                 fmt=str(settings.get("format", "json")),
                 buffer_size=int(settings.get("bufferSize", 1000)),
-                creds=_s3_creds(settings),
+                creds=s3_creds(settings),
             )
             return
         with _S3A_CONF_LOCK:
@@ -1229,6 +959,8 @@ def write_destination(
         return
     if plugin == "builtin:kafka":
         if str(settings.get("transport", "jvm")) == "wire":
+            from conduit_spark.sources.pyds import kafka_sasl, kafka_tls
+
             sinks.kafka_wire_sink(
                 df,
                 settings["servers"],
@@ -1245,8 +977,8 @@ def write_destination(
                     int(settings["batchBytes"])
                     if "batchBytes" in settings else None
                 ),
-                sasl=_kafka_sasl(settings),
-                tls=_kafka_tls(settings),
+                sasl=kafka_sasl(settings),
+                tls=kafka_tls(settings),
             )
             return
         sinks.kafka_sink(

@@ -456,16 +456,18 @@ class Pipeline:
         return query
 
     def _commit_source_groups(self, checkpoint_dir: str) -> None:
-        from conduit_spark.sources.pyds import commit_group_from_checkpoint
+        from conduit_spark.sources.pyds import (
+            commit_group_from_checkpoint,
+            kafka_sasl,
+            kafka_tls,
+        )
 
         for conn in self.config.sources:
             s = conn.settings
             if conn.plugin == "builtin:kafka" and "groupId" in s and "servers" in s:
-                from conduit_spark.pipeline.registry import _kafka_sasl
-
                 commit_group_from_checkpoint(
                     str(s["servers"]), str(s["groupId"]), checkpoint_dir,
-                    sasl=_kafka_sasl(s),
+                    sasl=kafka_sasl(s), tls=kafka_tls(s),
                 )
 
     def restart_with_backoff(

@@ -1,29 +1,43 @@
-"""Structured-Streaming sources for the wire transports (Python
-DataSource API, Spark 4).
+"""Wire-transport sources (Python DataSource API, Spark 4): one reader
+per transport serves both ``spark.read`` and ``spark.readStream``.
 
-The jar-free ``transport: wire`` paths were batch/snapshot-only; these
-DataSource implementations make them REAL streaming sources — offsets
-tracked by the engine's checkpoint mechanism, micro-batches planned
-per partition, reads executed on executors:
+A source is offsets plus "read the range (start, end]"; a batch read
+is the same plan over one range, from the stream's initial offset up
+to its latest. Planning runs driver-side over metadata only; record
+and object bytes move in the executor tasks that ``read`` each
+planned partition over their own connection:
 
 - ``conduit-kafka-wire`` — per-topic-partition offset ranges, exactly
-  the JVM kafka source's offset model (``{"0": nextOffset, ...}``):
+  the JVM kafka source's offset model (``{"topic:0": nextOffset}``):
   ``latestOffset`` asks the broker's ListOffsets, ``partitions`` plans
-  one InputPartition per topic-partition with a bounded range,
-  ``read`` Fetches that range over the partition's own connection.
+  one InputPartition per topic-partition with a bounded range (the
+  KafkaSourceRDD task shape), ``read`` Fetches that range. The
+  initial offset is the group's committed offset (``groupId``), else
+  earliest, or latest under ``startingOffsets=latest`` /
+  ``readFromBeginning=false``.
 - ``conduit-s3-wire`` — LastModified watermark offsets
-  (``{"since": ts}``): each micro-batch is one CDC polling cycle
-  (ListObjects diff), changed objects fan out size-balanced across
-  input partitions, bytes move executor-side with Range chunking.
-  Boundary semantics: a batch covers ``since < LastModified <= until``.
-  Against real S3 (1-second LastModified granularity) an object
-  written in the same second as ``until`` but after the listing can be
-  skipped permanently — the reference's polling source shares this
-  window; run with a prefix layout that appends, or accept
-  second-granularity lag (MiniS3's monotonic mtimes make the tests
-  exact).
+  (``{"since": ts}``): a range is one CDC polling cycle (ListObjects
+  diff, metadata only), the changed objects fan out size-balanced
+  across input partitions, bytes move with Range chunking. The
+  initial offset is ``cdc.since`` (default: the empty marker, i.e.
+  the whole prefix), or the current listing under
+  ``startingPosition=latest``. Boundary semantics: a range covers
+  ``since < LastModified <= until``. Against real S3 (1-second
+  LastModified granularity) an object written in the same second as
+  ``until`` but after the listing can be skipped permanently — the
+  reference's polling source shares this window; run with a prefix
+  layout that appends, or accept second-granularity lag (MiniS3's
+  monotonic mtimes make the tests exact). Deleted objects are not
+  seen (ListObjects diffing only sees what exists; the reference
+  documents delete capture as out of scope).
 
-Both recover from a checkpoint by construction: offsets are plain
+Options are the reference connectors' setting names — the registry
+passes a connector's settings through unchanged (:func:`load`), and
+DataSource options are case-insensitive. :func:`kafka_sasl`,
+:func:`kafka_tls` and :func:`s3_creds` turn them into wire-client
+kwargs for these readers, the wire sinks and :func:`commit_group`.
+
+Streams recover from a checkpoint by construction: offsets are plain
 JSON dicts the streaming engine persists/replays. Kafka replay is
 exactly deterministic (``read`` is a pure function of the offset
 range — the log is immutable). S3 replay is AT-LEAST-ONCE with
@@ -32,8 +46,7 @@ so an object overwritten or deleted between the original attempt and
 the replay delivers its newest state (or drops out) rather than the
 version the failed batch saw — the same property as the reference's
 polling source, which also holds no snapshot of the bucket. Sinks
-needing exact replay should key on (key, etag) idempotently. Register
-once per session with :func:`register` (idempotent).
+needing exact replay should key on (key, etag) idempotently.
 """
 
 from __future__ import annotations
@@ -43,6 +56,7 @@ from collections.abc import Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
 )
@@ -55,6 +69,140 @@ KAFKA_WIRE_SCHEMA = (
 S3_WIRE_SCHEMA = (
     "key string, value binary, size long, etag string, last_modified string"
 )
+
+
+def _truthy(v) -> bool:
+    return str(v).lower() in ("1", "true", "yes")
+
+
+def kafka_tls(settings) -> dict:
+    """Map the reference kafka connector's TLS settings onto
+    MiniKafkaClient kwargs: tls.enabled / caCert / clientCert /
+    clientKey / insecureSkipVerify (conduit-connector-kafka's parameter
+    names, accepted bare or under the ``tls.`` namespace the engine's
+    YAML uses). clientCert+clientKey turn on mTLS — the client
+    presents its certificate during the handshake."""
+
+    def get(name: str):
+        v = settings.get(f"tls.{name}", settings.get(name))
+        return str(v) if v is not None else None
+
+    enabled = _truthy(settings.get("tls.enabled", ""))
+    ca = get("caCert")
+    cert, key = get("clientCert"), get("clientKey")
+    skip = _truthy(get("insecureSkipVerify") or "")
+    if not enabled and not ca and not cert and not skip:
+        return {}
+    out: dict = {"tls": True, "tls_ca": ca}
+    if cert:
+        if not key:
+            raise ValueError("kafka tls.clientCert requires tls.clientKey")
+        out["client_cert"] = cert
+        out["client_key"] = key
+    if skip:
+        out["insecure_skip_verify"] = True
+    return out
+
+
+def kafka_sasl(settings) -> dict | None:
+    """Map the reference kafka connector's SASL settings
+    (conduit-connector-kafka: saslMechanism/saslUsername/saslPassword)
+    onto the wire client's sasl kwargs; None when unauthenticated."""
+    user = settings.get("saslUsername")
+    pw = settings.get("saslPassword")
+    if not user or pw is None:
+        return None
+    return {
+        "mechanism": str(settings.get("saslMechanism", "SCRAM-SHA-256")),
+        "username": str(user),
+        "password": str(pw),
+    }
+
+
+def s3_creds(settings) -> dict | None:
+    """Map the reference connector's ``aws.*`` credential settings
+    (conduit-connector-s3: accessKeyId/secretAccessKey/region/
+    sessionToken) onto MiniS3Client's SigV4 kwargs, plus ``tls.caCert``
+    (the kafka connector's name) as the pinned CA of an HTTPS endpoint;
+    None when neither is set (dev endpoints)."""
+    out: dict = {}
+    ak = settings.get("aws.accessKeyId")
+    sk = settings.get("aws.secretAccessKey")
+    if ak and sk:
+        out = {"access_key": str(ak), "secret_key": str(sk)}
+        if settings.get("aws.region"):
+            out["region"] = str(settings["aws.region"])
+        if settings.get("aws.sessionToken"):
+            out["session_token"] = str(settings["aws.sessionToken"])
+    if settings.get("tls.caCert"):
+        out["ca_pem"] = str(settings["tls.caCert"])
+    return out or None
+
+
+def commit_group(
+    servers: str, group: str, offsets: dict[tuple[str, int], int],
+    sasl: dict | None = None, tls: dict | None = None,
+) -> None:
+    """Commit next-read ``offsets`` (``{(topic, partition): offset}``)
+    to consumer group ``group`` under a real membership: join → sync →
+    commit with the generation, so a rebalance in between fences the
+    commit exactly like a real consumer; then leave, since the engine
+    holds no membership between commits. Driver-side O(partitions)
+    control traffic only.
+
+    Callers commit what was DELIVERED, never the log end: a stream's
+    completed batch end offsets (:meth:`KafkaWireStreamReader.commit`,
+    :func:`commit_group_from_checkpoint`), or a batch read's
+    :func:`delivered_offsets`."""
+    from conduit_spark.functions.minikafka import MiniKafkaClient
+
+    server = str(servers).split(",")[0].strip()
+    with MiniKafkaClient(server, sasl=sasl, **(tls or {})) as c:
+        g = c.join_group(group)
+        me = g["member_id"]
+        c.sync_group(group, g["generation"], me, assignments={me: b""})
+        c.offset_commit(group, offsets, generation=g["generation"], member_id=me)
+        c.leave_group(group, me)
+
+
+def delivered_offsets(rows) -> dict[tuple[str, int], int]:
+    """The next-read offsets of the ``conduit-kafka-wire`` rows a batch
+    read delivered — max offset + 1 per (topic, partition) — which the
+    read commits with :func:`commit_group` after delivery. Records
+    produced after the read stay uncommitted, so the group's next read
+    gets them. Takes the delivered rows, not the DataFrame: every
+    action on a batch read plans its range afresh."""
+    out: dict[tuple[str, int], int] = {}
+    for r in rows:
+        tp = (r["topic"], int(r["partition"]))
+        out[tp] = max(out.get(tp, 0), int(r["offset"]) + 1)
+    return out
+
+
+def _parse_offsets(end: dict, default_topic: str = "") -> dict:
+    """``{"topic:partition": offset}`` → ``{(topic, partition): offset}``;
+    a bare partition key (pre-multi-topic checkpoint) takes
+    ``default_topic``."""
+    out = {}
+    for key, off in end.items():
+        topic, _, p = key.rpartition(":")
+        out[(topic or default_topic, int(p))] = int(off)
+    return out
+
+
+class _RangeReader(DataSourceReader):
+    """A batch read: the stream reader's plan over one range, from its
+    initial offset up to its latest."""
+
+    def __init__(self, stream: DataSourceStreamReader):
+        self._stream = stream
+
+    def partitions(self) -> list[InputPartition]:
+        s = self._stream
+        return s.partitions(s.initialOffset(), s.latestOffset())
+
+    def read(self, partition: InputPartition) -> Iterator[tuple]:
+        return self._stream.read(partition)
 
 
 @dataclasses.dataclass
@@ -73,59 +221,36 @@ class KafkaWireStreamReader(DataSourceStreamReader):
         if not self._servers or not self._topics:
             raise ValueError("conduit-kafka-wire needs servers and topic(s)")
         self._server = self._servers.split(",")[0].strip()
-        # startingOffsets: earliest (default) | latest — same contract
-        # as the JVM kafka source; only affects the FIRST batch (the
-        # checkpoint owns offsets afterwards)
-        start = str(options.get("startingoffsets",
-                                options.get("startingOffsets", "earliest")))
+        # startingOffsets: earliest (default) | latest — the JVM kafka
+        # source's contract; readFromBeginning=false is the reference
+        # connector's name for latest. Only the initial offset reads
+        # it (a stream's checkpoint owns offsets afterwards).
+        start = str(options.get("startingOffsets", "earliest"))
         if start.lower() not in ("earliest", "latest"):
             raise ValueError(
                 f"startingOffsets must be earliest|latest, got {start!r}"
             )
-        self._start_latest = start.lower() == "latest"
+        self._start_latest = start.lower() == "latest" or not _truthy(
+            options.get("readFromBeginning", "true")
+        )
         # groupId: consumer-group mode (the reference's kafka source is
-        # a consumer-group source). The FIRST batch starts from the
-        # group's committed offsets (falling back to startingOffsets
-        # where none exist) and every completed batch commits back via
-        # OffsetCommit under a real JoinGroup/SyncGroup membership —
-        # so a second run sharing the group id resumes after the last
-        # commit even with a fresh checkpoint.
-        self._group_id = str(
-            options.get("groupid", options.get("groupId", ""))
-        ) or None
-        # SASL (reference saslMechanism/saslUsername/saslPassword)
-        su = options.get("saslusername", options.get("saslUsername"))
-        sp = options.get("saslpassword", options.get("saslPassword"))
-        self._sasl = (
-            {
-                "mechanism": str(
-                    options.get("saslmechanism",
-                                options.get("saslMechanism",
-                                            "SCRAM-SHA-256"))
-                ),
-                "username": str(su),
-                "password": str(sp),
-            }
-            if su and sp is not None
-            else None
-        )
-        tls_on = str(
-            options.get("tls.enabled", options.get("tls.enabled".lower(), ""))
-        ).lower() in ("1", "true", "yes")
-        tls_ca = options.get("tls.cacert", options.get("tls.caCert"))
-        self._tls = (
-            {"tls": True, "tls_ca": str(tls_ca) if tls_ca else None}
-            if (tls_on or tls_ca)
-            else {}
-        )
-        import uuid
-
-        self._member_id = f"conduit-spark-{uuid.uuid4().hex[:12]}"
+        # a consumer-group source). The initial offset is the group's
+        # committed offset (falling back to the starting position
+        # where none exists) and every completed stream batch commits
+        # back, so a second run sharing the group id resumes after
+        # the last commit even with a fresh checkpoint.
+        self._group_id = str(options.get("groupId", "")) or None
+        self._sasl = kafka_sasl(options)
+        self._tls = kafka_tls(options)
+        self._client_id = str(options.get("clientID", "conduit-spark"))
 
     def _client(self):
         from conduit_spark.functions.minikafka import MiniKafkaClient
 
-        c = MiniKafkaClient(self._server, sasl=self._sasl, **self._tls)
+        c = MiniKafkaClient(
+            self._server, client_id=self._client_id, sasl=self._sasl,
+            **self._tls,
+        )
         # ride the highest mutual Produce/Fetch revisions (KIP-482
         # flexible against this repo's broker), like franz-go does on
         # every fresh connection
@@ -157,15 +282,15 @@ class KafkaWireStreamReader(DataSourceStreamReader):
         fallback = self._offsets(earliest=not self._start_latest)
         if self._group_id is None:
             return fallback
-        parts = []
-        for key in fallback:
-            topic, _, p = key.rpartition(":")
-            parts.append((topic or self._topics[0], int(p)))
+        earliest = self._offsets(earliest=True) if self._start_latest else fallback
+        parts = list(_parse_offsets(fallback, self._topics[0]))
         with self._client() as c:
             committed = c.offset_fetch(self._group_id, parts)
+        # a committed offset below the log start (removed by retention)
+        # resumes at the log start
         return {
             f"{t}:{p}": (
-                committed[(t, p)]
+                max(committed[(t, p)], earliest[f"{t}:{p}"])
                 if committed.get((t, p), -1) >= 0
                 else fallback[f"{t}:{p}"]
             )
@@ -212,35 +337,23 @@ class KafkaWireStreamReader(DataSourceStreamReader):
 
     def commit(self, end: dict) -> None:
         # checkpoint owns in-run progress; with a groupId the batch's
-        # end offsets ALSO commit to the group under a real membership
-        # (join → sync → commit with the generation, so a stale
-        # generation after a rebalance refuses, exactly like a real
-        # consumer). Without one, broker log retention is the policy.
-        # NOTE Spark invokes commit(N) lazily when batch N+1 starts,
-        # so a run's FINAL batch is committed by
-        # :func:`commit_group_from_checkpoint` after termination (the
-        # pipeline runtime calls it; see run_streaming).
+        # end offsets ALSO commit to the group. Without one, broker
+        # log retention is the policy. NOTE Spark invokes commit(N)
+        # lazily when batch N+1 starts, so a run's FINAL batch is
+        # committed by :func:`commit_group_from_checkpoint` after
+        # termination (the pipeline runtime calls it; see
+        # run_streaming).
         if self._group_id is None or not end:
             return
-        offsets = {}
-        for key, off in end.items():
-            topic, _, p = key.rpartition(":")
-            offsets[(topic or self._topics[0], int(p))] = int(off)
-        with self._client() as c:
-            g = c.join_group(self._group_id, member_id=self._member_id)
-            c.sync_group(
-                self._group_id, g["generation"], g["member_id"],
-                assignments={g["member_id"]: b""} if g["leader"] == g["member_id"] else None,
-            )
-            c.offset_commit(
-                self._group_id, offsets,
-                generation=g["generation"], member_id=g["member_id"],
-            )
+        commit_group(
+            self._servers, self._group_id,
+            _parse_offsets(end, self._topics[0]), self._sasl, self._tls,
+        )
 
 
 class KafkaWireDataSource(DataSource):
-    """``spark.readStream.format("conduit-kafka-wire")`` — see module
-    docstring."""
+    """``spark.read``/``spark.readStream.format("conduit-kafka-wire")``
+    — see module docstring."""
 
     @classmethod
     def name(cls) -> str:
@@ -249,8 +362,54 @@ class KafkaWireDataSource(DataSource):
     def schema(self) -> str:
         return KAFKA_WIRE_SCHEMA
 
+    def reader(self, schema: StructType):
+        return _RangeReader(KafkaWireStreamReader(self.options))
+
     def streamReader(self, schema: StructType):  # noqa: N802
         return KafkaWireStreamReader(self.options)
+
+
+def _greedy_pack(objs: list[dict], n: int) -> list[list[dict]]:
+    """Size-balanced assignment of objects to ``n`` groups: biggest
+    objects placed first into the currently-lightest group, so no task
+    drags the stage."""
+    n = max(1, min(n, len(objs)))
+    groups: list[list[dict]] = [[] for _ in range(n)]
+    sizes = [0] * n
+    for o in sorted(objs, key=lambda o: -o["size"]):
+        t = min(range(n), key=sizes.__getitem__)
+        sizes[t] += o["size"]
+        groups[t].append(o)
+    return groups
+
+
+def _fetch_tasks(objs: list[dict], cap: int) -> int:
+    """Fetch-task count from the WORK, not the core count (the same
+    rule as input split sizing): a task that fetches under ~8 MB or
+    under ~64 small objects is dominated by its own overhead (task
+    scheduling + one TCP/TLS handshake + server-side connection
+    churn); measured on the wire gate pair, 32 tasks over 300 tiny
+    objects ran the whole fetch 8x slower than 8 tasks. Large ranges
+    hit the byte target and fan out up to ``cap`` (the session's
+    default parallelism, passed by :func:`load`; 0 = no cap)."""
+    total_bytes = sum(int(o["size"]) for o in objs)
+    n = max(-(-total_bytes // (8 * 1024 * 1024)), -(-len(objs) // 64))
+    return min(n, cap) if cap else n
+
+
+def _range_get(client, bucket: str, key: str, size: int, chunk_bytes: int) -> bytes:
+    """GET one object, streaming down in Range slices when it exceeds
+    ``chunk_bytes`` — a task never holds more than one slice over the
+    buffer it is assembling."""
+    if size <= chunk_bytes:
+        return client.get_object(bucket, key)
+    parts = []
+    off = 0
+    while off < size:
+        end = min(off + chunk_bytes, size) - 1
+        parts.append(client.get_object(bucket, key, (off, end)))
+        off = end + 1
+    return b"".join(parts)
 
 
 @dataclasses.dataclass
@@ -260,29 +419,19 @@ class _S3Slice(InputPartition):
 
 class S3WireStreamReader(DataSourceStreamReader):
     def __init__(self, options: dict):
-        self._endpoint = str(options.get("endpoint", options.get("aws.url", "")))
-        self._bucket = str(options.get("bucket", options.get("aws.bucket", "")))
+        self._endpoint = str(options.get("aws.url", ""))
+        self._bucket = str(options.get("aws.bucket", ""))
         if not self._endpoint or not self._bucket:
-            raise ValueError("conduit-s3-wire needs endpoint and bucket")
+            raise ValueError("conduit-s3-wire needs aws.url and aws.bucket")
         self._prefix = str(options.get("prefix", ""))
-        # SigV4 credentials (reference aws.* setting names) — the
-        # streaming reader signs like the batch wire client does
-        ak = options.get("access_key", options.get("aws.accesskeyid"))
-        sk = options.get("secret_key", options.get("aws.secretaccesskey"))
-        self._creds = (
-            {"access_key": str(ak), "secret_key": str(sk)} if ak and sk else None
-        )
-        if self._creds and options.get("region", options.get("aws.region")):
-            self._creds["region"] = str(
-                options.get("region", options.get("aws.region"))
-            )
+        self._creds = s3_creds(options) or {}
         self._chunk = int(options.get("chunk_bytes", 8 * 1024 * 1024))
-        self._n_parts = int(options.get("fetch_parallelism", 8))
+        self._max_tasks = int(options.get("fetch_parallelism", 0))
+        self._since = str(options.get("cdc.since", ""))
         # startingPosition: earliest (default, snapshot-then-tail) |
         # latest (skip the existing backlog; only objects written
         # after attach flow) — the kafka startingOffsets analog
-        start = str(options.get("startingposition",
-                                options.get("startingPosition", "earliest")))
+        start = str(options.get("startingPosition", "earliest"))
         if start.lower() not in ("earliest", "latest"):
             raise ValueError(
                 f"startingPosition must be earliest|latest, got {start!r}"
@@ -291,44 +440,40 @@ class S3WireStreamReader(DataSourceStreamReader):
 
     _list_cache: tuple[str, list] | None = None
 
-    def _list(self) -> list[dict]:
+    def _client(self):
         from conduit_spark.functions.minis3 import MiniS3Client
 
-        return MiniS3Client(
-            self._endpoint, **(self._creds or {})
-        ).list_objects(self._bucket, self._prefix)
+        return MiniS3Client(self._endpoint, **self._creds)
 
-    def _list_cached(self, until: str) -> list[dict]:
-        """One listing per micro-batch: latestOffset() caches its
-        listing keyed by the offset it returned; partitions() for that
-        same offset reuses it instead of re-listing the bucket (halves
-        per-trigger control-plane requests; also keeps planning
-        consistent with the offsets just computed)."""
-        if self._list_cache is not None and self._list_cache[0] == until:
-            return self._list_cache[1]
-        objs = self._list()
-        self._list_cache = (until, objs)
-        return objs
+    def _listing(self, until: str) -> list[dict]:
+        """The listing behind offset ``until``: latestOffset() hands
+        its listing to the partitions() call for the offset it just
+        returned (one ListObjects walk per micro-batch, and planning
+        stays consistent with that offset); any other range re-lists.
+        The handoff is consumed, so the listing is not shipped to the
+        read tasks with the reader."""
+        cached, self._list_cache = self._list_cache, None
+        if cached is not None and cached[0] == until:
+            return cached[1]
+        return self._client().list_objects(self._bucket, self._prefix)
 
     def initialOffset(self) -> dict:  # noqa: N802
         if self._start_latest:
             return self.latestOffset()
-        return {"since": ""}
+        return {"since": self._since}
 
     def latestOffset(self) -> dict:  # noqa: N802
-        objs = self._list()
+        objs = self._client().list_objects(self._bucket, self._prefix)
         lm = [o["last_modified"] for o in objs if o["last_modified"]]
         until = max(lm, default="")
         self._list_cache = (until, objs)
         return {"since": until}
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        from conduit_spark.sources.s3_wire import greedy_pack
-
         since, until = start.get("since", ""), end.get("since", "")
         changed = [
             o
-            for o in self._list_cached(until)
+            for o in self._listing(until)
             if o["last_modified"]
             and (not since or o["last_modified"] > since)
             and o["last_modified"] <= until
@@ -339,18 +484,16 @@ class S3WireStreamReader(DataSourceStreamReader):
             _S3Slice(
                 [(o["key"], o["size"], o["etag"], o["last_modified"]) for o in g]
             )
-            for g in greedy_pack(changed, self._n_parts)
+            for g in _greedy_pack(changed, _fetch_tasks(changed, self._max_tasks))
         ]
 
     def read(self, part: _S3Slice) -> Iterator[tuple]:
         if not part.objs:
             return
-        from conduit_spark.functions.minis3 import MiniS3Client
-        from conduit_spark.sources.s3_wire import range_get
-
-        c = MiniS3Client(self._endpoint, **(self._creds or {}))
+        # one client = one persistent keep-alive connection per task
+        c = self._client()
         for key, size, etag, lm in part.objs:
-            data = range_get(c, self._bucket, key, int(size), self._chunk)
+            data = _range_get(c, self._bucket, key, int(size), self._chunk)
             yield (key, data, len(data), etag, lm)
 
     def commit(self, end: dict) -> None:
@@ -358,8 +501,8 @@ class S3WireStreamReader(DataSourceStreamReader):
 
 
 class S3WireDataSource(DataSource):
-    """``spark.readStream.format("conduit-s3-wire")`` — see module
-    docstring."""
+    """``spark.read``/``spark.readStream.format("conduit-s3-wire")`` —
+    see module docstring."""
 
     @classmethod
     def name(cls) -> str:
@@ -368,23 +511,40 @@ class S3WireDataSource(DataSource):
     def schema(self) -> str:
         return S3_WIRE_SCHEMA
 
+    def reader(self, schema: StructType):
+        return _RangeReader(S3WireStreamReader(self.options))
+
     def streamReader(self, schema: StructType):  # noqa: N802
         return S3WireStreamReader(self.options)
 
 
 def register(spark) -> None:
-    """Register both wire data sources on a session. Registration is a
-    name→class map update on the session, so re-registering is cheap
-    and safe — no identity cache (an ``id(spark)`` key would go stale
-    when a GC'd session's address is reused by a new one, silently
-    skipping registration)."""
-    spark.dataSource.register(KafkaWireDataSource)
-    spark.dataSource.register(S3WireDataSource)
+    """Register both wire data sources on a session, once. The check
+    asks the session's own data source manager — no identity cache (an
+    ``id(spark)`` key would go stale when a GC'd session's address is
+    reused by a new one, silently skipping registration)."""
+    manager = spark._jsparkSession.sessionState().dataSourceManager()
+    for source in (KafkaWireDataSource, S3WireDataSource):
+        if not manager.dataSourceExists(source.name()):
+            spark.dataSource.register(source)
+
+
+def load(spark, fmt: str, settings: dict, *, streaming: bool = False):
+    """``spark.read`` (or ``readStream`` when ``streaming``) of wire
+    format ``fmt`` with a connector's ``settings`` as its options —
+    batch and streaming differ only in the entry point. The s3 fetch
+    cap is the session's default parallelism."""
+    register(spark)
+    opts = {k: str(v) for k, v in settings.items() if v is not None}
+    if fmt == S3WireDataSource.name():
+        opts["fetch_parallelism"] = str(spark.sparkContext.defaultParallelism)
+    reader = spark.readStream if streaming else spark.read
+    return reader.format(fmt).options(**opts).load()
 
 
 def commit_group_from_checkpoint(
     servers: str, group_id: str, checkpoint_dir: str,
-    sasl: dict | None = None,
+    sasl: dict | None = None, tls: dict | None = None,
 ) -> dict | None:
     """Commit the LAST COMPLETED batch's end offsets from a Structured
     Streaming checkpoint to a consumer group.
@@ -436,21 +596,5 @@ def commit_group_from_checkpoint(
             break
     if end is None:
         return None
-    from conduit_spark.functions.minikafka import MiniKafkaClient
-
-    offsets = {}
-    for key, off in end.items():
-        topic, _, p = key.rpartition(":")
-        offsets[(topic, int(p))] = int(off)
-    server = str(servers).split(",")[0].strip()
-    with MiniKafkaClient(server, sasl=sasl) as c:
-        g = c.join_group(group_id)
-        c.sync_group(
-            group_id, g["generation"], g["member_id"],
-            assignments={g["member_id"]: b""},
-        )
-        c.offset_commit(
-            group_id, offsets,
-            generation=g["generation"], member_id=g["member_id"],
-        )
+    commit_group(servers, group_id, _parse_offsets(end), sasl, tls)
     return end

@@ -1,178 +1,39 @@
-"""Jar-free ``builtin:s3`` source/destination over the S3 REST wire.
+"""Jar-free ``builtin:s3`` destination over the S3 REST wire, and the
+envelope projection of the wire source's object rows.
 
 The JVM hot path for ``builtin:s3`` is Hadoop s3a (``apply_s3_conf``
 maps conduit-connector-s3 setting names onto ``fs.s3a.*``); this
-module is the ``transport: wire`` analog of ``kafka_wire_source_df``
-— a pure-Python S3 protocol client (``functions.minis3.MiniS3Client``)
-driving the exact object semantics of the reference's S3 connector
-(conduit-connector-s3):
+module and the ``conduit-s3-wire`` DataSource (``sources/pyds.py``)
+are the ``transport: wire`` analog — a pure-Python S3 protocol client
+(``functions.minis3.MiniS3Client``) driving the exact object semantics
+of the reference's S3 connector (conduit-connector-s3):
 
-- **source**: paginated ListObjectsV2 snapshot of ``prefix`` in
-  lexicographic key order, one record per object: key = object key,
-  payload = raw object bytes, position = ``bucket/key`` — the
-  reference source's snapshot iterator contract.
-- **destination**: records buffered per partition and written as
-  JSON-lines (``format: json``) or parquet (``format: parquet``)
-  objects under ``prefix`` — the reference destination's
-  buffer-then-PutObject contract, with multipart upload above the
-  single-PUT threshold.
-
-Scale shape: listing is driver-side but METADATA ONLY (key/size/etag
-— ~100 bytes per object, paginated; 10M objects ≈ 1 GB of driver
-heap would be the limit, far past the connector's intended use and
-fixable by feeding ranges like the kafka reader). Object BYTES move
-executor-side: the key list is size-balanced across tasks with a
-greedy first-fit pack, every task GETs its own objects over its own
-connection, and objects larger than ``chunk_bytes`` stream down in
-Range slices so a task never holds more than one slice over the
-buffer it is assembling.
+- **source** (``conduit-s3-wire``): paginated ListObjectsV2 of
+  ``prefix`` on the driver (metadata only), object bytes fetched
+  executor-side in size-balanced tasks with Range chunking; one record
+  per object: key = object key, payload = raw object bytes, position
+  = ``bucket/key`` (:func:`envelope_from_s3`) — the reference source's
+  snapshot iterator contract, and its LastModified CDC polling.
+- **destination** (:func:`s3_wire_sink`): records buffered per
+  partition and written as JSON-lines (``format: json``) or parquet
+  (``format: parquet``) objects under ``prefix`` — the reference
+  destination's buffer-then-PutObject contract, with multipart upload
+  above the single-PUT threshold.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
-
-OBJ_SCHEMA = (
-    "key string, value binary, size long, etag string, last_modified string"
-)
-
-
+from pyspark.sql import DataFrame
 
 
 def _client(endpoint: str, creds: dict | None):
-    """Wire client, optionally SigV4-signing (``creds`` keys:
-    access_key/secret_key/region/session_token — mapped from the
-    connector's ``aws.*`` settings by the registry)."""
+    """Wire client, optionally SigV4-signing (``creds``: the
+    MiniS3Client kwargs ``pyds.s3_creds`` maps from the connector's
+    settings)."""
     from conduit_spark.functions.minis3 import MiniS3Client
 
     return MiniS3Client(endpoint, **(creds or {}))
-
-
-def greedy_pack(objs: list[dict], n: int) -> list[list[dict]]:
-    """Size-balanced assignment of objects to ``n`` groups: biggest
-    objects placed first into the currently-lightest group, so no task
-    drags the stage (shared by the batch reader and the streaming
-    DataSource)."""
-    n = max(1, min(n, len(objs)))
-    groups: list[list[dict]] = [[] for _ in range(n)]
-    sizes = [0] * n
-    for o in sorted(objs, key=lambda o: -o["size"]):
-        t = min(range(n), key=sizes.__getitem__)
-        sizes[t] += o["size"]
-        groups[t].append(o)
-    return groups
-
-
-def range_get(client, bucket: str, key: str, size: int, chunk_bytes: int) -> bytes:
-    """GET one object, streaming down in Range slices when it exceeds
-    ``chunk_bytes`` — the chunk-boundary math lives HERE only."""
-    if size <= chunk_bytes:
-        return client.get_object(bucket, key)
-    parts = []
-    off = 0
-    while off < size:
-        end = min(off + chunk_bytes, size) - 1
-        parts.append(client.get_object(bucket, key, (off, end)))
-        off = end + 1
-    return b"".join(parts)
-
-
-def s3_wire_source_df(
-    spark: SparkSession,
-    endpoint: str,
-    bucket: str,
-    prefix: str = "",
-    *,
-    page_size: int = 1000,
-    chunk_bytes: int = 8 * 1024 * 1024,
-    tasks: int | None = None,
-    creds: dict | None = None,
-) -> DataFrame:
-    """Snapshot-read every object under ``prefix`` → one row per
-    object (key, value=bytes, size, etag, last_modified)."""
-    client = _client(endpoint, creds)
-    objs = client.list_objects(bucket, prefix, page_size=page_size)
-    return _fetch_objects_df(
-        spark, endpoint, bucket, objs, chunk_bytes=chunk_bytes, tasks=tasks,
-        creds=creds,
-    )
-
-
-def _fetch_objects_df(
-    spark: SparkSession,
-    endpoint: str,
-    bucket: str,
-    objs: list[dict],
-    *,
-    chunk_bytes: int,
-    tasks: int | None = None,
-    creds: dict | None = None,
-) -> DataFrame:
-    """Executor-parallel GET of a known object list → OBJ_SCHEMA rows."""
-    if not objs:
-        return spark.createDataFrame([], OBJ_SCHEMA)
-
-    # greedy size-balanced assignment (the s3a reader gets this from
-    # file splits; here objects are the indivisible unit)
-    #
-    # r15: task count derives from the WORK, not the core count (guide
-    # §2.6/§6 — the same rule as input split sizing). A task that
-    # fetches under ~8 MB or under ~64 small objects is dominated by
-    # its own overhead (task scheduling + one TCP/TLS handshake +
-    # server-side connection churn); measured on the wire gate pair,
-    # 32 tasks over 300 tiny objects ran the whole fetch 8x slower
-    # than 8 tasks. Large snapshots hit the byte target and fan out to
-    # full parallelism exactly as before.
-    target_bytes = 8 * 1024 * 1024
-    min_objs_per_task = 64
-    total_bytes = sum(int(o["size"]) for o in objs)
-    by_size = -(-total_bytes // target_bytes)
-    by_count = -(-len(objs) // min_objs_per_task)
-    n_tasks = tasks or max(
-        1,
-        min(
-            len(objs),
-            spark.sparkContext.defaultParallelism,
-            max(by_size, by_count),
-        ),
-    )
-    assign = [
-        (t, o["key"], o["size"], o["etag"], o["last_modified"])
-        for t, group in enumerate(greedy_pack(objs, n_tasks))
-        for o in group
-    ]
-
-    plan_df = spark.createDataFrame(
-        assign, "task int, key string, size long, etag string, last_modified string"
-    ).repartition(n_tasks, "task")
-
-    def _fetch(batches):
-        import pandas as pd
-
-        # one client = one persistent keep-alive connection per task
-        # (r15: MiniS3Client reuses its socket across the task's GETs)
-        c = _client(endpoint, creds)
-        for pdf in batches:
-            keys, vals, sizes, etags, lms = [], [], [], [], []
-            for row in pdf.itertuples():
-                data = range_get(c, bucket, row.key, int(row.size), chunk_bytes)
-                keys.append(row.key)
-                vals.append(data)
-                sizes.append(len(data))
-                etags.append(row.etag)
-                lms.append(row.last_modified)
-            yield pd.DataFrame(
-                {
-                    "key": keys,
-                    "value": vals,
-                    "size": sizes,
-                    "etag": etags,
-                    "last_modified": lms,
-                }
-            )
-
-    return plan_df.mapInPandas(_fetch, OBJ_SCHEMA)
 
 
 def envelope_from_s3(
@@ -311,42 +172,3 @@ def s3_wire_sink(
         .mode("overwrite")
         .save()
     )
-
-
-def s3_wire_cdc_df(
-    spark: SparkSession,
-    endpoint: str,
-    bucket: str,
-    prefix: str = "",
-    *,
-    since: str = "",
-    page_size: int = 1000,
-    chunk_bytes: int = 8 * 1024 * 1024,
-    creds: dict | None = None,
-) -> tuple[DataFrame, str]:
-    """One CDC polling cycle, the reference S3 source's change-capture
-    half (conduit-connector-s3 source: after the snapshot it polls
-    ListObjects every ``pollingPeriod`` and emits objects whose
-    ``LastModified`` is strictly after the stored position). Returns
-    ``(changed_objects_df, new_position)`` where the position is the
-    max LastModified seen — feed it back as ``since`` on the next
-    cycle. Objects deleted between polls are NOT detected (same
-    limitation as the reference: ListObjects diffing only sees what
-    exists; it documents delete capture as out of scope).
-
-    The listing walk is the same metadata-only pagination as the
-    snapshot; only CHANGED objects' bytes move, executor-side.
-    """
-    client = _client(endpoint, creds)
-    changed = [
-        o
-        for o in client.list_objects(bucket, prefix, page_size=page_size)
-        if o["last_modified"] and (not since or o["last_modified"] > since)
-    ]
-    new_pos = max((o["last_modified"] for o in changed), default=since)
-    # only the CHANGED objects enter the fetch plan — bytes of
-    # unchanged objects never move
-    df = _fetch_objects_df(
-        spark, endpoint, bucket, changed, chunk_bytes=chunk_bytes, creds=creds
-    )
-    return df, new_pos

@@ -1,7 +1,7 @@
 """Consumer-group protocol parity for the jar-free kafka wire
 transport: FindCoordinator/JoinGroup/SyncGroup/Heartbeat/LeaveGroup +
 OffsetCommit/OffsetFetch on the in-process broker, and group-offset
-resume for both the batch snapshot reader and the streaming source —
+resume for both batch and streaming reads of the wire source —
 the reference's kafka source is a consumer-group source
 (pkg/plugin/connector/builtin/registry.go)."""
 
@@ -12,10 +12,6 @@ import pytest
 from conduit_spark.functions.minikafka import (
     MiniKafkaBroker,
     MiniKafkaClient,
-)
-from conduit_spark.pipeline.registry import (
-    kafka_wire_commit_group,
-    kafka_wire_source_df,
 )
 from conduit_spark.sources import pyds
 
@@ -98,23 +94,37 @@ def test_offset_commit_fetch_roundtrip_and_generation_fencing(broker):
         assert c.offset_fetch("other", [("t", 0)]) == {("t", 0): -1}
 
 
-# --- batch snapshot reader over group offsets -------------------------
+# --- batch reader over group offsets ----------------------------------
+
+
+def _batch_read(spark, broker, group):
+    return pyds.load(
+        spark, "conduit-kafka-wire",
+        {"servers": broker.bootstrap, "topic": "t", "groupId": group},
+    ).collect()
 
 
 def test_batch_wire_source_resumes_from_group_commit(spark, broker):
+    """A batch group read commits what it delivered (max offset + 1 per
+    partition), never the log end: records produced between the read
+    and its commit reach the group's next read."""
     _produce(broker, "t", [f"a{i}" for i in range(5)])
-    df1 = kafka_wire_source_df(spark, broker.bootstrap, "t", group_id="job")
-    got1 = sorted(bytes(r.value).decode() for r in df1.collect())
-    assert got1 == [f"a{i}" for i in range(5)]
-    kafka_wire_commit_group(broker.bootstrap, "job", "t")
+    rows1 = _batch_read(spark, broker, "job")
+    assert sorted(bytes(r.value).decode() for r in rows1) == [
+        f"a{i}" for i in range(5)
+    ]
+    _produce(broker, "t", ["late0", "late1"])
+    pyds.commit_group(broker.bootstrap, "job", pyds.delivered_offsets(rows1))
+    with MiniKafkaClient(broker.bootstrap) as c:
+        assert c.offset_fetch("job", [("t", 0)]) == {("t", 0): 5}
 
     _produce(broker, "t", [f"b{i}" for i in range(3)])
-    df2 = kafka_wire_source_df(spark, broker.bootstrap, "t", group_id="job")
-    got2 = sorted(bytes(r.value).decode() for r in df2.collect())
-    assert got2 == ["b0", "b1", "b2"]
+    got2 = sorted(
+        bytes(r.value).decode() for r in _batch_read(spark, broker, "job")
+    )
+    assert got2 == ["b0", "b1", "b2", "late0", "late1"]
     # a DIFFERENT group still reads everything
-    df3 = kafka_wire_source_df(spark, broker.bootstrap, "t", group_id="fresh")
-    assert len(df3.collect()) == 8
+    assert len(_batch_read(spark, broker, "fresh")) == 10
 
 
 # --- streaming source: two runs, fresh checkpoints, shared group ------

@@ -177,7 +177,7 @@ def test_production_paths_negotiate_flexible(spark):
     import json
 
     from conduit_spark.pipeline import registry
-    from conduit_spark.pipeline.registry import kafka_wire_source_df
+    from conduit_spark.sources import pyds
 
     with MiniKafkaBroker() as b:
         b.create_topic("flexpipe", partitions=2)
@@ -195,7 +195,7 @@ def test_production_paths_negotiate_flexible(spark):
             "cast(null as binary) as payload_after_raw",
         )
         registry.write_destination(src, "builtin:kafka", settings)
-        df = kafka_wire_source_df(spark, b.bootstrap, "flexpipe")
+        df = pyds.load(spark, "conduit-kafka-wire", settings)
         assert df.count() == 20
         produce_vs = {v for k, v, _, _ in b.request_log if k == API_PRODUCE}
         fetch_vs = {v for k, v, _, _ in b.request_log if k == API_FETCH}

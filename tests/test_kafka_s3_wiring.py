@@ -319,7 +319,11 @@ def test_kafka_wire_read_from_beginning_false_skips_backlog(spark):
         MiniKafkaBroker,
         MiniKafkaClient,
     )
-    from conduit_spark.pipeline.registry import kafka_wire_source_df
+    from conduit_spark.pipeline import registry
+
+    def read(**settings):
+        settings.update(servers=b.bootstrap, topic="rfb-t", transport="wire")
+        return registry.build_source(spark, "builtin:kafka", settings, "k")
 
     with MiniKafkaBroker() as b:
         b.create_topic("rfb-t", partitions=1)
@@ -327,15 +331,9 @@ def test_kafka_wire_read_from_beginning_false_skips_backlog(spark):
             c.produce("rfb-t", 0, [
                 {"key": None, "value": b"old", "timestamp": 1}
             ])
-        df = kafka_wire_source_df(
-            spark, b.bootstrap, "rfb-t", group_id="g-rfb",
-            read_from_beginning=False,
-        )
+        df = read(groupId="g-rfb", readFromBeginning="false")
         assert df.count() == 0  # backlog skipped
-        df2 = kafka_wire_source_df(
-            spark, b.bootstrap, "rfb-t", group_id="g-rfb",
-            read_from_beginning=True,
-        )
+        df2 = read(groupId="g-rfb", readFromBeginning="true")
         assert df2.count() == 1  # opt-in to the backlog
 
 
@@ -449,7 +447,13 @@ def test_kafka_wire_read_from_beginning_false_without_group(spark):
         MiniKafkaBroker,
         MiniKafkaClient,
     )
-    from conduit_spark.pipeline.registry import kafka_wire_source_df
+    from conduit_spark.pipeline import registry
+
+    def read(**settings):
+        settings.update(
+            servers=b.bootstrap, topic="rfb-nogroup", transport="wire"
+        )
+        return registry.build_source(spark, "builtin:kafka", settings, "k")
 
     with MiniKafkaBroker() as b:
         b.create_topic("rfb-nogroup", partitions=1)
@@ -457,13 +461,9 @@ def test_kafka_wire_read_from_beginning_false_without_group(spark):
             c.produce("rfb-nogroup", 0, [
                 {"key": None, "value": b"backlog", "timestamp": 1}
             ])
-        df = kafka_wire_source_df(
-            spark, b.bootstrap, "rfb-nogroup", read_from_beginning=False,
-        )
+        df = read(readFromBeginning="false")
         assert df.count() == 0  # backlog skipped, groupId or not
-        df2 = kafka_wire_source_df(
-            spark, b.bootstrap, "rfb-nogroup", read_from_beginning=True,
-        )
+        df2 = read(readFromBeginning="true")
         assert df2.count() == 1
 
 
@@ -528,7 +528,7 @@ def test_kafka_wire_source_client_id_on_executor_fetches(spark):
         MiniKafkaBroker,
         MiniKafkaClient,
     )
-    from conduit_spark.pipeline.registry import kafka_wire_source_df
+    from conduit_spark.pipeline import registry
 
     with MiniKafkaBroker() as b:
         b.create_topic("cid-t", partitions=2)
@@ -538,8 +538,13 @@ def test_kafka_wire_source_client_id_on_executor_fetches(spark):
                     {"key": None, "value": b"x", "timestamp": 1}
                 ])
         b.request_log.clear()
-        df = kafka_wire_source_df(
-            spark, b.bootstrap, "cid-t", client_id="trace-me",
+        df = registry.build_source(
+            spark, "builtin:kafka",
+            {
+                "servers": b.bootstrap, "topic": "cid-t",
+                "transport": "wire", "clientID": "trace-me",
+            },
+            "k",
         )
         assert df.count() == 2
         fetch_cids = {

@@ -1,8 +1,8 @@
 """Protocol-level builtin:kafka verification: the in-process broker
 (`functions/minikafka.py`) speaks the public Kafka wire protocol over
 real TCP, and the engine's wire transport (sink `foreachPartition`
-producer, source `mapInPandas` per-partition fetcher) round-trips
-envelopes through it. This upgrades kafka parity from options+codec
+producer, source `conduit-kafka-wire` DataSource with one fetch task
+per partition) round-trips envelopes through it. This upgrades kafka parity from options+codec
 level to request/response level — the sandbox analog of the
 reference's dockerized broker integration tests."""
 
@@ -107,10 +107,11 @@ def test_murmur2_matches_kafka_partitioner_properties():
 
 def test_wire_sink_then_wire_source_roundtrip(spark, tmp_path, broker):
     """e2e over TCP: envelopes → kafka_wire_sink (foreachPartition
-    producer) → broker log → kafka_wire_source_df (mapInPandas
-    fetcher) → envelopes. Payloads and key routing survive."""
-    from conduit_spark.pipeline.registry import kafka_wire_source_df
+    producer) → broker log → ``conduit-kafka-wire`` batch read (one
+    fetch task per partition) → envelopes. Payloads and key routing
+    survive."""
     from conduit_spark.sinks import kafka_wire_sink
+    from conduit_spark.sources import pyds
 
     broker.create_topic("events", partitions=3)
     rows = [(f"key-{i}", json.dumps({"i": i, "v": i * i})) for i in range(100)]
@@ -123,7 +124,10 @@ def test_wire_sink_then_wire_source_roundtrip(spark, tmp_path, broker):
     )
     kafka_wire_sink(env, broker.bootstrap, "events", batch_size=16)
 
-    out = kafka_wire_source_df(spark, broker.bootstrap, "events")
+    out = pyds.load(
+        spark, "conduit-kafka-wire",
+        {"servers": broker.bootstrap, "topic": "events"},
+    )
     got = out.collect()
     assert len(got) == 100
     payloads = sorted(json.loads(bytes(r.value).decode())["i"] for r in got)
@@ -328,15 +332,18 @@ def test_metadata_request_autocreates_named_topic(broker):
 
 
 def test_wire_source_multi_topic_batch(spark, broker):
-    """kafka_wire_source_df accepts a comma-separated topic list."""
-    from conduit_spark.pipeline.registry import kafka_wire_source_df
+    """A batch read accepts a comma-separated topic list."""
+    from conduit_spark.sources import pyds
 
     broker.create_topic("m1", partitions=1)
     broker.create_topic("m2", partitions=2)
     with MiniKafkaClient(broker.bootstrap) as c:
         c.produce("m1", 0, [{"key": None, "value": b"x", "timestamp": 1}])
         c.produce("m2", 1, [{"key": None, "value": b"y", "timestamp": 1}])
-    df = kafka_wire_source_df(spark, broker.bootstrap, "m1, m2")
+    df = pyds.load(
+        spark, "conduit-kafka-wire",
+        {"servers": broker.bootstrap, "topics": "m1, m2"},
+    )
     rows = {(r.topic, bytes(r.value)) for r in df.collect()}
     assert rows == {("m1", b"x"), ("m2", b"y")}
 
@@ -560,7 +567,7 @@ def test_sasl_wire_transport_end_to_end(spark):
         with pytest.raises(Exception, match="onnection|closed|reset"):
             registry.build_source(
                 spark, "builtin:kafka", plain, "k2", streaming=False
-            )
+            ).collect()
 
 
 def test_apiversions_v3_served_natively(broker):

@@ -80,14 +80,22 @@ def test_multipart_upload_concats_and_etags(s3):
 # -- Spark wire source/sink ------------------------------------------------
 
 
+def _wire_read(spark, endpoint, prefix, **settings):
+    """Batch read of the ``conduit-s3-wire`` DataSource over bucket bkt."""
+    from conduit_spark.sources import pyds
+
+    return pyds.load(
+        spark, "conduit-s3-wire",
+        {"aws.url": endpoint, "aws.bucket": "bkt", "prefix": prefix, **settings},
+    )
+
+
 def test_wire_source_reads_objects_parallel(spark, s3):
     srv, c = s3
     payloads = {f"in/doc{i:02d}.bin": bytes([i]) * (i + 1) for i in range(12)}
     for k, v in payloads.items():
         c.put_object("bkt", k, v)
-    from conduit_spark.sources.s3_wire import s3_wire_source_df
-
-    df = s3_wire_source_df(spark, srv.endpoint, "bkt", "in/")
+    df = _wire_read(spark, srv.endpoint, "in/")
     rows = {r.key: bytes(r.value) for r in df.collect()}
     assert rows == payloads
     sizes = {r.key: r.size for r in df.collect()}
@@ -100,11 +108,7 @@ def test_wire_source_chunked_range_fetch(spark, s3):
     srv, c = s3
     big = bytes(range(256)) * 1024  # 256 KiB
     c.put_object("bkt", "big/one", big)
-    from conduit_spark.sources.s3_wire import s3_wire_source_df
-
-    df = s3_wire_source_df(
-        spark, srv.endpoint, "bkt", "big/", chunk_bytes=60_000
-    )
+    df = _wire_read(spark, srv.endpoint, "big/", chunk_bytes=60_000)
     [row] = df.collect()
     assert bytes(row.value) == big
 
@@ -262,24 +266,28 @@ def test_cdc_polling_cycles_only_fetch_changes(spark, s3):
     after the marker, an empty cycle returns 0 rows and keeps the
     marker."""
     srv, c = s3
-    from conduit_spark.sources.s3_wire import s3_wire_cdc_df
+
+    def cycle(since=""):
+        rows = _wire_read(spark, srv.endpoint, "cdc/", **{"cdc.since": since})
+        rows = rows.collect()
+        return rows, max((r.last_modified for r in rows), default=since)
 
     for i in range(3):
         c.put_object("bkt", f"cdc/a{i}", f"v{i}".encode())
-    df1, pos1 = s3_wire_cdc_df(spark, srv.endpoint, "bkt", "cdc/")
-    assert sorted(r.key for r in df1.collect()) == ["cdc/a0", "cdc/a1", "cdc/a2"]
+    rows1, pos1 = cycle()
+    assert sorted(r.key for r in rows1) == ["cdc/a0", "cdc/a1", "cdc/a2"]
     assert pos1
 
     # nothing new → empty batch, marker unchanged
-    df2, pos2 = s3_wire_cdc_df(spark, srv.endpoint, "bkt", "cdc/", since=pos1)
-    assert df2.count() == 0 and pos2 == pos1
+    rows2, pos2 = cycle(pos1)
+    assert rows2 == [] and pos2 == pos1
 
     # two new objects + one overwrite → exactly those three
     c.put_object("bkt", "cdc/b0", b"new0")
     c.put_object("bkt", "cdc/b1", b"new1")
     c.put_object("bkt", "cdc/a1", b"v1-updated")
-    df3, pos3 = s3_wire_cdc_df(spark, srv.endpoint, "bkt", "cdc/", since=pos1)
-    rows = {r.key: bytes(r.value) for r in df3.collect()}
+    rows3, pos3 = cycle(pos1)
+    rows = {r.key: bytes(r.value) for r in rows3}
     assert rows == {"cdc/b0": b"new0", "cdc/b1": b"new1", "cdc/a1": b"v1-updated"}
     assert pos3 > pos1
 
@@ -287,10 +295,10 @@ def test_cdc_polling_cycles_only_fetch_changes(spark, s3):
 def test_registry_cdc_since_setting(spark, s3):
     srv, c = s3
     from conduit_spark.pipeline import registry
-    from conduit_spark.sources.s3_wire import s3_wire_cdc_df
 
     c.put_object("bkt", "rtc/x", b"one")
-    _, pos = s3_wire_cdc_df(spark, srv.endpoint, "bkt", "rtc/")
+    [first] = _wire_read(spark, srv.endpoint, "rtc/").collect()
+    pos = first.last_modified
     c.put_object("bkt", "rtc/y", b"two")
     env = registry.build_source(
         spark,
@@ -548,9 +556,7 @@ def test_wire_source_and_sink_signed_end_to_end(spark):
     (listing driver-side, GET/PUT executor-side). The same flow
     without credentials is refused — proving the server really
     enforces and the tasks really sign."""
-    import urllib.error
-
-    from conduit_spark.sources.s3_wire import s3_wire_sink, s3_wire_source_df
+    from conduit_spark.sources.s3_wire import s3_wire_sink
 
     creds_srv = {"AKIDWIRE": "wire-secret"}
     creds = {"access_key": "AKIDWIRE", "secret_key": "wire-secret"}
@@ -561,17 +567,18 @@ def test_wire_source_and_sink_signed_end_to_end(spark):
         for k, v in payloads.items():
             c.put_object("bkt", k, v)
 
-        df = s3_wire_source_df(
-            spark, srv.endpoint, "bkt", "in/", creds=creds,
+        df = _wire_read(
+            spark, srv.endpoint, "in/",
+            **{"aws.accessKeyId": "AKIDWIRE",
+               "aws.secretAccessKey": "wire-secret"},
             chunk_bytes=8,  # force Range reassembly through signing too
         )
         rows = {r.key: bytes(r.value) for r in df.collect()}
         assert rows == payloads
 
         # unsigned listing refused
-        with pytest.raises(urllib.error.HTTPError) as e:
-            s3_wire_source_df(spark, srv.endpoint, "bkt", "in/")
-        assert e.value.code == 403
+        with pytest.raises(Exception, match="HTTP Error 403"):
+            _wire_read(spark, srv.endpoint, "in/").collect()
 
         # signed sink writes objects back
         env = spark.createDataFrame(
@@ -583,11 +590,11 @@ def test_wire_source_and_sink_signed_end_to_end(spark):
 
 
 def test_registry_s3_creds_mapping():
-    from conduit_spark.pipeline.registry import _s3_creds
+    from conduit_spark.sources.pyds import s3_creds
 
-    assert _s3_creds({}) is None
-    assert _s3_creds({"aws.accessKeyId": "A"}) is None  # needs both halves
-    full = _s3_creds({
+    assert s3_creds({}) is None
+    assert s3_creds({"aws.accessKeyId": "A"}) is None  # needs both halves
+    full = s3_creds({
         "aws.accessKeyId": "A", "aws.secretAccessKey": "S",
         "aws.region": "eu-west-1", "aws.sessionToken": "tok",
     })

@@ -430,6 +430,39 @@ def test_scan_fanout_rules(spark):
     assert "l_orderkey" in read_schema and "l_comment" not in read_schema
 
 
+def test_wire_batch_reads_plan_as_one_scan(spark):
+    """A batch read of each wire format plans as one ``BatchScan`` of
+    its DataSource: the driver plans the ranges and the scan's tasks
+    fetch them, with no Exchange or pandas map stage below the
+    reader."""
+    from conduit_spark.functions.minikafka import (
+        MiniKafkaBroker,
+        MiniKafkaClient,
+    )
+    from conduit_spark.functions.minis3 import MiniS3Client, MiniS3Server
+    from conduit_spark.sources import pyds
+
+    with MiniKafkaBroker(default_partitions=3) as b, MiniS3Server() as srv:
+        with MiniKafkaClient(b.bootstrap) as c:
+            for p in range(3):
+                c.produce("t", p, [{"key": None, "value": b"x", "timestamp": 1}])
+        s3 = MiniS3Client(srv.endpoint)
+        s3.create_bucket("bkt")
+        for i in range(3):
+            s3.put_object("bkt", f"o{i}", b"y")
+        reads = {
+            "conduit-kafka-wire": {"servers": b.bootstrap, "topic": "t"},
+            "conduit-s3-wire": {"aws.url": srv.endpoint, "aws.bucket": "bkt"},
+        }
+        for fmt, settings in reads.items():
+            df = pyds.load(spark, fmt, settings)
+            plan = plan_of(df).split("\n\n")[0]
+            assert plan.count("BatchScan") == 1, plan
+            assert f"BatchScan {fmt}" in plan, plan
+            assert "Exchange" not in plan and "MapIn" not in plan, plan
+            assert df.count() == 3
+
+
 def test_ordered_result_equals_plain_orderby(spark):
     """The lazy-checkpoint sort barrier must be a pure optimization:
     identical rows, identical order, for both column-name and

@@ -91,8 +91,8 @@ def test_s3_wire_stream_cdc_cycles(spark, s3, tmp_path):
     def stream():
         return (
             spark.readStream.format("conduit-s3-wire")
-            .option("endpoint", srv.endpoint)
-            .option("bucket", "bkt")
+            .option("aws.url", srv.endpoint)
+            .option("aws.bucket", "bkt")
             .option("prefix", "in/")
             .load()
         )
@@ -292,8 +292,8 @@ def test_s3_wire_starting_position_latest(spark, s3, tmp_path):
     def stream():
         return (
             spark.readStream.format("conduit-s3-wire")
-            .option("endpoint", srv.endpoint)
-            .option("bucket", "bkt")
+            .option("aws.url", srv.endpoint)
+            .option("aws.bucket", "bkt")
             .option("prefix", "sp/")
             .option("startingPosition", "latest")
             .load()

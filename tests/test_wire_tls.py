@@ -235,19 +235,19 @@ def test_kafka_tls_settings_mapping_client_cert():
     """YAML settings → wire-client kwargs, both the reference's bare
     names (caCert/clientCert/clientKey) and the tls.-namespaced form;
     a cert without its key is a config error, not a silent no-op."""
-    from conduit_spark.pipeline.registry import _kafka_tls
+    from conduit_spark.sources.pyds import kafka_tls
 
-    kw = _kafka_tls(
+    kw = kafka_tls(
         {"tls.caCert": "CA", "tls.clientCert": "CC", "tls.clientKey": "CK"}
     )
     assert kw == {
         "tls": True, "tls_ca": "CA", "client_cert": "CC", "client_key": "CK"
     }
-    kw = _kafka_tls({"caCert": "CA", "clientCert": "CC", "clientKey": "CK"})
+    kw = kafka_tls({"caCert": "CA", "clientCert": "CC", "clientKey": "CK"})
     assert kw["client_cert"] == "CC" and kw["tls_ca"] == "CA"
     with pytest.raises(ValueError, match="clientKey"):
-        _kafka_tls({"tls.clientCert": "CC"})
-    assert _kafka_tls({}) == {}
+        kafka_tls({"tls.clientCert": "CC"})
+    assert kafka_tls({}) == {}
 
 
 # -- SCRAM-SHA-512 (round 9): the third saslMechanism inclusion value --
@@ -322,7 +322,7 @@ def test_kafka_wire_mtls_scram512_settings_end_to_end(spark, cert, client_cert):
     """The full round-9 posture through YAML settings: mTLS
     (clientCert/clientKey) + SCRAM-SHA-512 over TLS, sink then source —
     every executor task presents the client certificate on its own
-    connection (the kwargs ship inside the mapInPandas closures)."""
+    connection (the kwargs ship inside the pickled reader)."""
     import json
 
     from conduit_spark.functions.minikafka import MiniKafkaBroker
@@ -368,7 +368,7 @@ def test_kafka_wire_mtls_scram512_settings_end_to_end(spark, cert, client_cert):
         with pytest.raises(Exception):
             registry.build_source(
                 spark, "builtin:kafka", bad, "k", streaming=False
-            )
+            ).collect()
 
 
 def test_postgres_walsender_mtls_roundtrip_and_rejects(
@@ -472,7 +472,7 @@ def test_kafka_insecure_skip_verify(cert):
         MiniKafkaBroker,
         MiniKafkaClient,
     )
-    from conduit_spark.pipeline.registry import _kafka_tls
+    from conduit_spark.sources.pyds import kafka_tls
 
     cert_pem, key_pem = cert
     with MiniKafkaBroker(tls=(cert_pem, key_pem)) as b:
@@ -488,6 +488,159 @@ def test_kafka_insecure_skip_verify(cert):
         # default: self-signed cert is NOT in the system trust store
         with pytest.raises(_ssl.SSLError):
             MiniKafkaClient(b.bootstrap, tls=True).api_versions()
-    assert _kafka_tls({"insecureSkipVerify": "true"}) == {
+    assert kafka_tls({"insecureSkipVerify": "true"}) == {
         "tls": True, "tls_ca": None, "insecure_skip_verify": True
     }
+
+
+# -- streaming wire sources get the connector's security settings ------
+
+
+def _stream_to_parquet(spark, env, tmp_path):
+    q = (
+        env.writeStream.format("parquet")
+        .option("path", str(tmp_path / "out"))
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    return spark.read.parquet(str(tmp_path / "out")).collect()
+
+
+@pytest.mark.parametrize("trust", ["tls.caCert", "tls.insecureSkipVerify"])
+def test_streaming_kafka_wire_source_gets_security_settings(
+    spark, cert, client_cert, tmp_path, trust
+):
+    """A streaming builtin:kafka wire source connects with the
+    connector's SASL, TLS and mTLS settings — pinning the CA, or
+    skipping verification under insecureSkipVerify — and reads every
+    record of a SASL_SSL broker that requires client certificates."""
+    from conduit_spark.functions.minikafka import (
+        MiniKafkaBroker,
+        MiniKafkaClient,
+    )
+    from conduit_spark.pipeline import registry
+
+    cert_pem, key_pem = cert
+    cc_pem, ck_pem = client_cert
+    with MiniKafkaBroker(
+        tls=(cert_pem, key_pem), client_ca=cc_pem, users={"svc": "pw"}
+    ) as b:
+        b.create_topic("sec-stream", partitions=2)
+        with MiniKafkaClient(
+            b.bootstrap,
+            sasl={"mechanism": "SCRAM-SHA-256", "username": "svc",
+                  "password": "pw"},
+            tls_ca=cert_pem, client_cert=cc_pem, client_key=ck_pem,
+        ) as c:
+            for i in range(10):
+                c.produce("sec-stream", i % 2, [
+                    {"key": None, "value": b"v%d" % i, "timestamp": 1}
+                ])
+        settings = {
+            "servers": b.bootstrap, "topic": "sec-stream",
+            "transport": "wire",
+            "saslUsername": "svc", "saslPassword": "pw",
+            "tls.clientCert": cc_pem, "tls.clientKey": ck_pem,
+            trust: cert_pem if trust == "tls.caCert" else "true",
+        }
+        env = registry.build_source(
+            spark, "builtin:kafka", settings, "k", streaming=True
+        )
+        got = _stream_to_parquet(spark, env, tmp_path)
+    assert sorted(bytes(r.payload_after_raw) for r in got) == sorted(
+        b"v%d" % i for i in range(10)
+    )
+
+
+def test_streaming_s3_wire_source_gets_credentials(spark, cert, tmp_path):
+    """A streaming builtin:s3 wire source signs with the connector's
+    aws.* credentials against a SigV4-enforcing HTTPS endpoint and
+    reads every object; the stream reader carries the session token
+    and region too."""
+    from pyspark.sql.datasource import CaseInsensitiveDict
+
+    from conduit_spark.functions.minis3 import MiniS3Client, MiniS3Server
+    from conduit_spark.pipeline import registry
+    from conduit_spark.sources.pyds import S3WireStreamReader
+
+    cert_pem, key_pem = cert
+    with MiniS3Server(
+        tls=(cert_pem, key_pem), credentials={"AK": "SK"}
+    ) as srv:
+        c = MiniS3Client(
+            srv.endpoint, ca_pem=cert_pem, access_key="AK", secret_key="SK"
+        )
+        c.create_bucket("sec")
+        for i in range(5):
+            c.put_object("sec", f"in/k{i}", b"data%d" % i)
+        settings = {
+            "transport": "wire", "aws.url": srv.endpoint,
+            "aws.bucket": "sec", "prefix": "in/",
+            "aws.accessKeyId": "AK", "aws.secretAccessKey": "SK",
+            "aws.region": "eu-west-1", "aws.sessionToken": "tok",
+            "tls.caCert": cert_pem,
+        }
+        env = registry.build_source(
+            spark, "builtin:s3", settings, "s3", streaming=True
+        )
+        got = _stream_to_parquet(spark, env, tmp_path)
+    assert sorted(bytes(r.payload_after_raw) for r in got) == [
+        b"data%d" % i for i in range(5)
+    ]
+    reader = S3WireStreamReader(CaseInsensitiveDict(settings))
+    assert reader._creds == {
+        "access_key": "AK", "secret_key": "SK", "region": "eu-west-1",
+        "session_token": "tok", "ca_pem": cert_pem,
+    }
+
+
+def test_pipeline_commits_group_over_tls(spark, cert, tmp_path):
+    """A streaming pipeline over a SASL_SSL broker with a groupId
+    commits its final batch to the group after the run: the
+    runtime's checkpoint commit connects with the source's TLS
+    settings, not only its SASL ones."""
+    from conduit_spark.functions.minikafka import (
+        MiniKafkaBroker,
+        MiniKafkaClient,
+    )
+    from conduit_spark.pipeline.config import parse_yaml
+    from conduit_spark.pipeline.runtime import Pipeline
+
+    cert_pem, key_pem = cert
+    sasl = {"mechanism": "SCRAM-SHA-256", "username": "svc", "password": "pw"}
+    with MiniKafkaBroker(tls=(cert_pem, key_pem), users={"svc": "pw"}) as b:
+        b.create_topic("tls-group", partitions=1)
+        with MiniKafkaClient(b.bootstrap, sasl=sasl, tls_ca=cert_pem) as c:
+            c.produce("tls-group", 0, [
+                {"key": None, "value": b"r%d" % i, "timestamp": 1}
+                for i in range(3)
+            ])
+        cfg = parse_yaml(f"""
+version: "2.2"
+pipelines:
+  - id: tls-group-pipe
+    connectors:
+      - id: src
+        type: source
+        plugin: builtin:kafka
+        settings:
+          servers: "{b.bootstrap}"
+          topic: tls-group
+          transport: wire
+          groupId: tls-g
+          saslUsername: svc
+          saslPassword: pw
+      - id: dst
+        type: destination
+        plugin: builtin:file
+        settings:
+          path: "{tmp_path / 'sink'}"
+""")[0]
+        cfg.sources[0].settings["tls.caCert"] = cert_pem
+        Pipeline(spark, cfg).run_streaming(str(tmp_path / "ck"))
+        with MiniKafkaClient(b.bootstrap, sasl=sasl, tls_ca=cert_pem) as c:
+            assert c.offset_fetch("tls-g", [("tls-group", 0)]) == {
+                ("tls-group", 0): 3
+            }

@@ -1829,10 +1829,28 @@ class MiniKafkaClient:
         version: int | None = None,
     ) -> tuple[list[dict], int]:
         """Returns (records, high_watermark); each record carries its
-        absolute ``offset`` plus key/value/headers/timestamp. Speaks
-        the negotiated revision by default (v4 floor / v12 flexible
-        ceiling); always a full, sessionless fetch (session_id 0,
-        epoch -1 — KIP-227's stateless mode)."""
+        absolute ``offset`` plus key/value/headers/timestamp."""
+        data, hwm = self.fetch_record_set(
+            topic, partition, offset, max_bytes=max_bytes, version=version
+        )
+        records = [r for r in decode_record_batches(data) if r["offset"] >= offset]
+        return records, hwm
+
+    def fetch_record_set(
+        self,
+        topic: str,
+        partition: int,
+        offset: int,
+        *,
+        max_bytes: int = 16 * 1024 * 1024,
+        version: int | None = None,
+    ) -> tuple[bytes, int]:
+        """Returns (record set, high_watermark): the partition's
+        RecordBatch v2 frames as the broker sent them, undecoded — the
+        first frame may start before ``offset``. Speaks the negotiated
+        revision by default (v4 floor / v12 flexible ceiling); always a
+        full, sessionless fetch (session_id 0, epoch -1 — KIP-227's
+        stateless mode)."""
         v = self._fetch_version if version is None else version
         flexible = v >= 12
         body = struct.pack(">iiii", -1, 0, 1, max_bytes)
@@ -1873,7 +1891,7 @@ class MiniKafkaClient:
             r.i32()  # session_id
             if top_err:
                 raise RuntimeError(f"fetch error {top_err} (session level)")
-        records: list[dict] = []
+        sets: list[bytes] = []
         hwm = -1
         n_topics = (r.uvarint() - 1) if flexible else r.i32()
         for _ in range(n_topics):
@@ -1901,12 +1919,10 @@ class MiniKafkaClient:
                 if err:
                     raise RuntimeError(f"fetch error {err} on {topic}/{partition}")
                 if data:
-                    for rec in decode_record_batches(data):
-                        if rec["offset"] >= offset:
-                            records.append(rec)
+                    sets.append(data)
             if flexible:
                 r.tags()
-        return records, hwm
+        return b"".join(sets), hwm
 
     # -- consumer-group protocol --------------------------------------
 

@@ -3,24 +3,46 @@ per transport serves both ``spark.read`` and ``spark.readStream``.
 
 A source is offsets plus "read the range (start, end]"; a batch read
 is the same plan over one range, from the stream's initial offset up
-to its latest. Planning runs driver-side over metadata only; record
-and object bytes move in the executor tasks that ``read`` each
-planned partition over their own connection:
+to its latest. A batch read plans driver-side over metadata only, and
+record and object bytes move in the executor tasks that read each
+planned partition over their own connection. The kafka STREAM reads
+on the driver instead (below).
 
 - ``conduit-kafka-wire`` — per-topic-partition offset ranges, exactly
-  the JVM kafka source's offset model (``{"topic:0": nextOffset}``):
-  ``latestOffset`` asks the broker's ListOffsets, ``partitions`` plans
-  one InputPartition per topic-partition with a bounded range (the
-  KafkaSourceRDD task shape), ``read`` Fetches that range. The
-  initial offset is the group's committed offset (``groupId``), else
-  earliest, or latest under ``startingOffsets=latest`` /
+  the JVM kafka source's offset model (``{"topic:0": nextOffset}``).
+  The initial offset is the group's committed offset (``groupId``),
+  else earliest, or latest under ``startingOffsets=latest`` /
   ``readFromBeginning=false``.
+
+  - Stream: a ``SimpleDataSourceStreamReader``, one reader per source
+    like the reference's single consumer. Each trigger, Spark's
+    long-lived Python source runner calls ``read(start)``, which asks
+    ListOffsets and Fetches every topic-partition with new data up to
+    those offsets over one connection, and returns the records (one
+    Arrow batch per Fetch response) with that end offset; an idle
+    poll returns ``start`` and nothing. A read stops at
+    ``_PREFETCH_MAX_BYTES`` and returns the offsets it reached, so a
+    larger backlog arrives over several micro-batches (under
+    ``availableNow``, over several starts: Spark's Python sources run
+    one batch a start). Spark ships the records to the JVM as Arrow,
+    and the micro-batch scans them from the block manager in one JVM
+    task: no Python worker task starts, so the micro-batch pays no
+    per-task worker set-up. The runner holds the batch until the
+    commit after it, the JVM until the next plan. After a restart, a
+    batch logged but not committed replays through
+    ``readBetweenOffsets`` in one executor task.
+  - Batch: ``partitions`` plans one InputPartition per topic-partition
+    with a bounded range (the KafkaSourceRDD task shape), and each
+    task Fetches its range.
+
+  One fetch loop (:func:`_fetch_range`) serves all three paths.
 - ``conduit-s3-wire`` — LastModified watermark offsets
-  (``{"since": ts}``): a range is one CDC polling cycle (ListObjects
-  diff, metadata only), the changed objects fan out size-balanced
-  across input partitions, bytes move with Range chunking. The
-  initial offset is ``cdc.since`` (default: the empty marker, i.e.
-  the whole prefix), or the current listing under
+  (``{"since": ts}``), read in executor tasks for batch and stream
+  alike (object bytes need the fan-out): a range is one CDC polling
+  cycle (ListObjects diff, metadata only), the changed objects fan
+  out size-balanced across input partitions, bytes move with Range
+  chunking. The initial offset is ``cdc.since`` (default: the empty
+  marker, i.e. the whole prefix), or the current listing under
   ``startingPosition=latest``. Boundary semantics: a range covers
   ``since < LastModified <= until``. Against real S3 (1-second
   LastModified granularity) an object written in the same second as
@@ -39,8 +61,8 @@ kwargs for these readers, the wire sinks and :func:`commit_group`.
 
 Streams recover from a checkpoint by construction: offsets are plain
 JSON dicts the streaming engine persists/replays. Kafka replay is
-exactly deterministic (``read`` is a pure function of the offset
-range — the log is immutable). S3 replay is AT-LEAST-ONCE with
+exactly deterministic (``readBetweenOffsets`` is a pure function of
+the offset range — the log is immutable). S3 replay is AT-LEAST-ONCE with
 read-latest semantics: ``partitions`` re-lists the bucket on recovery,
 so an object overwritten or deleted between the original attempt and
 the replay delivers its newest state (or drops out) rather than the
@@ -59,6 +81,7 @@ from pyspark.sql.datasource import (
     DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
+    SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import StructType
 
@@ -192,17 +215,18 @@ def _parse_offsets(end: dict, default_topic: str = "") -> dict:
 
 class _RangeReader(DataSourceReader):
     """A batch read: the stream reader's plan over one range, from its
-    initial offset up to its latest."""
+    initial offset up to its latest, one executor task per planned
+    partition."""
 
-    def __init__(self, stream: DataSourceStreamReader):
+    def __init__(self, stream):
         self._stream = stream
 
     def partitions(self) -> list[InputPartition]:
         s = self._stream
         return s.partitions(s.initialOffset(), s.latestOffset())
 
-    def read(self, partition: InputPartition) -> Iterator[tuple]:
-        return self._stream.read(partition)
+    def read(self, partition: InputPartition) -> Iterator:
+        return self._stream.read_partition(partition)
 
 
 @dataclasses.dataclass
@@ -213,7 +237,58 @@ class _KafkaRange(InputPartition):
     end: int
 
 
-class KafkaWireStreamReader(DataSourceStreamReader):
+# The most Arrow bytes one stream trigger prefetches: 8 Fetch responses
+# at the client's 16 MiB default. The source runner keeps a prefetched
+# batch until the commit after it, so this bounds its memory; a larger
+# backlog arrives over several micro-batches.
+_PREFETCH_MAX_BYTES = 8 * 16 * 1024 * 1024
+
+
+def _fetch_range(c, r: _KafkaRange) -> Iterator:
+    """Fetch ``[r.start, r.end)`` of one topic-partition over client
+    ``c``: one Arrow record batch per Fetch response, decoded column
+    by column. Every kafka read runs this loop: the stream's prefetch
+    and replay and the batch read's executor tasks."""
+    import pyarrow as pa
+
+    from conduit_spark.functions.kafka_wire import decode_record_columns
+
+    schema = pa.schema([
+        ("key", pa.binary()), ("value", pa.binary()), ("topic", pa.string()),
+        ("partition", pa.int32()), ("offset", pa.int64()),
+        ("timestamp", pa.int64()),
+    ])
+    off = r.start
+    while off < r.end:
+        data, _hwm = c.fetch_record_set(r.topic, r.partition, off)
+        offsets, timestamps, keys, values = decode_record_columns(data)
+        n = len(offsets)
+        batch = pa.RecordBatch.from_arrays(
+            [
+                pa.array(keys, pa.binary()),
+                pa.array(values, pa.binary()),
+                pa.repeat(pa.scalar(r.topic, pa.string()), n),
+                pa.repeat(pa.scalar(r.partition, pa.int32()), n),
+                pa.array(offsets, pa.int64()),
+                pa.array(timestamps, pa.int64()),
+            ],
+            schema=schema,
+        )
+        # a response may start before ``off`` and run past ``r.end``
+        keep = (offsets >= off) & (offsets < r.end)
+        if not keep.any():
+            return
+        if not keep.all():
+            batch = batch.filter(pa.array(keep))
+        yield batch
+        off = int(offsets[keep][-1]) + 1
+
+
+class KafkaWireStreamReader(SimpleDataSourceStreamReader):
+    """The stream's driver-side reader (module docstring);
+    ``latestOffset``/``partitions``/``read_partition`` are the batch
+    read's plan and tasks (:class:`_RangeReader`)."""
+
     def __init__(self, options: dict):
         self._servers = str(options.get("servers", ""))
         topic = str(options.get("topics", options.get("topic", "")))
@@ -257,34 +332,29 @@ class KafkaWireStreamReader(DataSourceStreamReader):
         c.negotiate_versions()
         return c
 
-    def _offsets(self, earliest: bool) -> dict:
+    def _offsets(self, c, earliest: bool) -> dict:
         # offsets keyed "topic:partition" — the multi-topic analog of
         # the JVM source's per-topic-partition offset map
         from conduit_spark.functions.minikafka import EARLIEST, LATEST
 
-        out: dict = {}
-        with self._client() as c:
-            md = c.metadata(self._topics)
-            for t in self._topics:
-                parts = [
-                    p["partition"]
-                    for p in md["topics"].get(t, {"partitions": []})[
-                        "partitions"
-                    ]
-                ]
-                for p in parts:
-                    out[f"{t}:{p}"] = c.list_offsets(
-                        t, p, EARLIEST if earliest else LATEST
-                    )
-        return out
+        md = c.metadata(self._topics)
+        return {
+            f"{t}:{p['partition']}": c.list_offsets(
+                t, p["partition"], EARLIEST if earliest else LATEST
+            )
+            for t in self._topics
+            for p in md["topics"].get(t, {"partitions": []})["partitions"]
+        }
 
     def initialOffset(self) -> dict:  # noqa: N802 — DataSource API
-        fallback = self._offsets(earliest=not self._start_latest)
-        if self._group_id is None:
-            return fallback
-        earliest = self._offsets(earliest=True) if self._start_latest else fallback
-        parts = list(_parse_offsets(fallback, self._topics[0]))
         with self._client() as c:
+            fallback = self._offsets(c, earliest=not self._start_latest)
+            if self._group_id is None:
+                return fallback
+            earliest = (
+                self._offsets(c, earliest=True) if self._start_latest else fallback
+            )
+            parts = list(_parse_offsets(fallback, self._topics[0]))
             committed = c.offset_fetch(self._group_id, parts)
         # a committed offset below the log start (removed by retention)
         # resumes at the log start
@@ -297,10 +367,7 @@ class KafkaWireStreamReader(DataSourceStreamReader):
             for t, p in parts
         }
 
-    def latestOffset(self) -> dict:  # noqa: N802
-        return self._offsets(earliest=False)
-
-    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
+    def _ranges(self, start: dict, end: dict) -> list[_KafkaRange]:
         out = []
         for key, hi in end.items():
             topic, _, p = key.rpartition(":")
@@ -309,31 +376,60 @@ class KafkaWireStreamReader(DataSourceStreamReader):
             lo = int(start.get(key, 0))
             if int(hi) > lo:
                 out.append(_KafkaRange(topic, int(p), lo, int(hi)))
-        # the engine requires ≥1 partition per batch; an empty batch
-        # plans one degenerate range that reads nothing
-        return out or [_KafkaRange(self._topics[0], 0, 0, 0)]
+        return out
 
-    def read(self, part: _KafkaRange) -> Iterator[tuple]:
-        if part.end <= part.start:
-            return
+    def read(self, start: dict) -> tuple[Iterator, dict]:
+        """Prefetch: the log end of every topic-partition, then its
+        records from ``start``, over one connection, one Fetch response
+        per partition in turn until each reaches that end or the batch
+        holds ``_PREFETCH_MAX_BYTES``; the end returned is where each
+        partition stopped. Nothing new returns ``start`` itself, so an
+        idle poll plans no batch."""
         with self._client() as c:
-            off = part.start
-            while off < part.end:
-                recs, _hwm = c.fetch(part.topic, part.partition, off)
-                if not recs:
-                    break
-                for r in recs:
-                    if r["offset"] >= part.end:
-                        return
-                    yield (
-                        r["key"],
-                        r["value"],
-                        part.topic,
-                        part.partition,
-                        r["offset"],
-                        r["timestamp"],
-                    )
-                off = recs[-1]["offset"] + 1
+            end = self._offsets(c, earliest=False)
+            ranges = {f"{r.topic}:{r.partition}": r for r in self._ranges(start, end)}
+            if not ranges:
+                return iter(()), start
+            fetches = {key: _fetch_range(c, r) for key, r in ranges.items()}
+            reached = {key: r.start for key, r in ranges.items()}
+            # a list: the runner copies the iterator to send the batch
+            batches: list = []
+            held = 0
+            while fetches and held < _PREFETCH_MAX_BYTES:
+                for key, it in list(fetches.items()):
+                    batch = next(it, None)
+                    if batch is None:  # at the log end read above
+                        del fetches[key]
+                        continue
+                    batches.append(batch)
+                    held += batch.nbytes
+                    reached[key] = batch.column("offset")[-1].as_py() + 1
+                    if held >= _PREFETCH_MAX_BYTES:
+                        break
+            for key in fetches:  # stopped at the cap
+                end[key] = reached[key]
+        return iter(batches), end
+
+    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator:  # noqa: N802
+        ranges = self._ranges(start, end)
+        if ranges:
+            with self._client() as c:
+                for r in ranges:
+                    yield from _fetch_range(c, r)
+
+    def latestOffset(self) -> dict:  # noqa: N802
+        with self._client() as c:
+            return self._offsets(c, earliest=False)
+
+    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
+        # the engine requires ≥1 partition per read; an empty range
+        # plans one degenerate range that reads nothing
+        return self._ranges(start, end) or [_KafkaRange(self._topics[0], 0, 0, 0)]
+
+    def read_partition(self, part: _KafkaRange) -> Iterator:
+        if part.end > part.start:
+            with self._client() as c:
+                yield from _fetch_range(c, part)
 
     def commit(self, end: dict) -> None:
         # checkpoint owns in-run progress; with a groupId the batch's
@@ -365,7 +461,7 @@ class KafkaWireDataSource(DataSource):
     def reader(self, schema: StructType):
         return _RangeReader(KafkaWireStreamReader(self.options))
 
-    def streamReader(self, schema: StructType):  # noqa: N802
+    def simpleStreamReader(self, schema: StructType):  # noqa: N802
         return KafkaWireStreamReader(self.options)
 
 
@@ -487,7 +583,7 @@ class S3WireStreamReader(DataSourceStreamReader):
             for g in _greedy_pack(changed, _fetch_tasks(changed, self._max_tasks))
         ]
 
-    def read(self, part: _S3Slice) -> Iterator[tuple]:
+    def read_partition(self, part: _S3Slice) -> Iterator[tuple]:
         if not part.objs:
             return
         # one client = one persistent keep-alive connection per task
@@ -495,6 +591,8 @@ class S3WireStreamReader(DataSourceStreamReader):
         for key, size, etag, lm in part.objs:
             data = _range_get(c, self._bucket, key, int(size), self._chunk)
             yield (key, data, len(data), etag, lm)
+
+    read = read_partition  # the stream API's name
 
     def commit(self, end: dict) -> None:
         pass
@@ -549,7 +647,7 @@ def commit_group_from_checkpoint(
     """Commit the LAST COMPLETED batch's end offsets from a Structured
     Streaming checkpoint to a consumer group.
 
-    Spark calls ``DataSourceStreamReader.commit(N)`` only when batch
+    Spark calls a stream reader's ``commit(N)`` only when batch
     N+1 starts, so a run's final batch never reaches the group through
     the reader. The checkpoint itself is the source of truth for what
     completed: ``offsets/N`` holds the planned end offsets and

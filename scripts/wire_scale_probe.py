@@ -16,6 +16,11 @@ endpoint at the scaled constants; the timed region therefore covers
 list+fetch+decode only, as in the bench, and endpoint seeding is no
 longer part of the measured ratio.
 
+Each point is the minimum of ``RUNS`` timed runs in its child (the
+warm in-session min-of-3 the bench protocol uses): one run a point
+could not resolve a 20% scaling change, since the base time of one
+query moved 1.39–2.31 s between single runs of the same code.
+
 Each child also verifies its query against the DuckDB oracle AT THE
 SCALED N (the oracle SQL embeds the same env-scaled constants), so a
 transport that only "scales" by dropping records cannot pass.
@@ -42,6 +47,7 @@ WIRE_QUERIES = {
     "kafka-sasl-ssl": ("g_kafka_wire_sasl_snapshot", ("CONDUIT_SNAP_N",)),
     "pg-live-walsender": ("g_pg_live_wal_cdc", ("CONDUIT_PG_LIVE_N",)),
 }
+RUNS = 3
 
 def _base_constants() -> dict[str, int]:
     """Read the committed seed constants from pipeline_queries itself
@@ -59,8 +65,9 @@ def _base_constants() -> dict[str, int]:
 
 
 def _child(name: str) -> None:
-    """Time one query (construction + noop write) and oracle-check it
-    at whatever seed constants the environment carries."""
+    """Time one query (construction + noop write, min of ``RUNS``) and
+    oracle-check it at whatever seed constants the environment
+    carries."""
     import time
 
     sys.path.insert(0, REPO)
@@ -77,10 +84,12 @@ def _child(name: str) -> None:
 
     queries = entrymod.extended_queries()
     oracles = entrymod.extended_oracle_sql()
-    t0 = time.monotonic()
-    df = queries[name](spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()
-    dt = time.monotonic() - t0
+    runs = []
+    for _ in range(RUNS):
+        t0 = time.monotonic()
+        df = queries[name](spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        runs.append(time.monotonic() - t0)
 
     con = duckdb.connect()
     for t in ("region nation customer supplier part orders lineitem "
@@ -95,7 +104,8 @@ def _child(name: str) -> None:
                    key=skey)
     print(json.dumps({
         "query": name,
-        "sec": round(dt, 3),
+        "sec": round(min(runs), 3),
+        "runs": [round(t, 3) for t in runs],
         "rows": len(srows),
         "oracle_match": srows == drows,
     }))

@@ -169,6 +169,28 @@ class TestKafkaWireFormat:
         # RFC 3720 appendix B test vector for CRC32C("123456789")
         assert crc32c(b"123456789") == 0xE3069283
 
+    def test_crc32c_lanes_match_table_loop(self):
+        """Inputs from 2 KB up take the numpy lanes; every length and
+        seed must give the byte-at-a-time table loop's CRC."""
+        import random
+
+        from conduit_spark.functions import kafka_wire as kw
+
+        def table(data: bytes, crc: int) -> int:
+            return ~kw._table_crc(~crc & 0xFFFFFFFF, data) & 0xFFFFFFFF
+
+        rng = random.Random(15)
+        edges = [0, 1, 3, 4, 17, 2047, 2048, 2049, 2050, 4099, (1 << 18) - 1, 1 << 18]
+        sizes = edges + [rng.randrange(0, 1 << 20) for _ in range(10)] + [1 << 20]
+        for n in sizes:
+            data = rng.randbytes(n)
+            seed = rng.randrange(1, 1 << 32)
+            assert kw.crc32c(data, seed) == table(data, seed), n
+            assert kw.crc32c(data) == table(data, 0), n
+        long = b"123456789" * 1000
+        assert kw.crc32c(long) == table(long, 0)
+        assert kw.crc32c(long[5000:], kw.crc32c(long[:5000])) == kw.crc32c(long)
+
     def test_round_trip_offsets_timestamps_headers(self):
         from conduit_spark.functions.kafka_wire import (
             decode_record_batches,

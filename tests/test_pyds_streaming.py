@@ -306,3 +306,218 @@ def test_s3_wire_starting_position_latest(spark, s3, tmp_path):
     _run_available_now(stream(), out, ck)
     [row] = spark.read.parquet(out).collect()
     assert row.key == "sp/new"
+
+
+def _kafka_stream(spark, broker, topic: str):
+    pyds.register(spark)
+    return (
+        spark.readStream.format("conduit-kafka-wire")
+        .option("servers", broker.bootstrap)
+        .option("topic", topic)
+        .load()
+    )
+
+
+def test_kafka_wire_backlog_over_several_fetches_exactly_once(spark, broker, tmp_path):
+    """A backlog larger than one Fetch response per partition arrives
+    complete and exactly once under availableNow: the driver-side
+    prefetch loops Fetch until each partition's log end."""
+    import zlib
+
+    from pyspark.sql import functions as F
+
+    broker.create_topic("big", partitions=2)
+    n, size = 18, 1 << 20  # 18 MiB a partition; one Fetch carries 16 MiB
+    want = {}
+    with MiniKafkaClient(broker.bootstrap) as c:
+        for p in (0, 1):
+            for i in range(n):
+                v = bytes([p * n + i]) * size
+                c.produce("big", p, [{"key": None, "value": v, "timestamp": 1}])
+                want[(p, i)] = zlib.crc32(v)
+        for p in (0, 1):
+            first, _ = c.fetch("big", p, 0)
+            assert 0 < len(first) < n  # the backlog needs several Fetches
+    df = _kafka_stream(spark, broker, "big").select(
+        "partition", "offset", F.crc32("value").alias("crc")
+    )
+    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    _run_available_now(df, out, ck)
+    rows = spark.read.parquet(out).collect()
+    assert len(rows) == 2 * n
+    assert {(r.partition, r.offset): r.crc for r in rows} == want
+
+
+def test_kafka_wire_prefetch_stops_at_its_cap(broker, monkeypatch):
+    """A backlog above the prefetch cap arrives over several reads,
+    complete and exactly once: each ``read(start)`` stops once it holds
+    the cap and returns the offsets it reached, and its records are
+    exactly those between ``start`` and that end."""
+    broker.create_topic("cap", partitions=2)
+    n, size = 17, 1 << 20  # one Fetch carries 16 of a partition's 17 MiB
+    with MiniKafkaClient(broker.bootstrap) as c:
+        for p in (0, 1):
+            for i in range(n):
+                v = bytes([i]) * size
+                c.produce("cap", p, [{"key": None, "value": v, "timestamp": 1}])
+    monkeypatch.setattr(pyds, "_PREFETCH_MAX_BYTES", 8 * size)
+    reader = pyds.KafkaWireStreamReader({"servers": broker.bootstrap, "topic": "cap"})
+    start = reader.initialOffset()
+    seen: list[tuple[int, int]] = []
+    reads = 0
+    while True:
+        batches, end = reader.read(start)
+        batches = list(batches)
+        if end == start:
+            assert batches == []
+            break
+        reads += 1
+        assert sum(b.nbytes for b in batches) < 8 * size + 17 * size
+        got = [
+            (p, o)
+            for b in batches
+            for p, o in zip(
+                b.column("partition").to_pylist(), b.column("offset").to_pylist()
+            )
+        ]
+        assert sorted(got) == [
+            (p, o)
+            for p in (0, 1)
+            for o in range(start[f"cap:{p}"], end[f"cap:{p}"])
+        ]
+        seen += got
+        start = end
+    assert reads >= 3
+    assert sorted(seen) == [(p, o) for p in (0, 1) for o in range(n)]
+
+
+def test_kafka_wire_idle_polls_plan_no_batch(spark, broker, tmp_path):
+    """An idle poll returns its start offset with no records: Spark
+    raises no SIMPLE_STREAM_READER_OFFSET_DID_NOT_ADVANCE and plans no
+    batch, and the offset document keeps its key order."""
+    import json
+    import time
+
+    broker.create_topic("idle", partitions=2)
+    with MiniKafkaClient(broker.bootstrap) as c:
+        for p in (0, 1):
+            c.produce("idle", p, [{"key": None, "value": b"x", "timestamp": 1}])
+    reader = pyds.KafkaWireStreamReader(
+        {"servers": broker.bootstrap, "topic": "idle"}
+    )
+    start = reader.initialOffset()
+    rows, end = reader.read(start)
+    assert sum(b.num_rows for b in rows) == 2
+    rows, again = reader.read(end)
+    assert list(rows) == [] and json.dumps(again) == json.dumps(end)
+
+    q = (
+        _kafka_stream(spark, broker, "idle")
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(processingTime="100 milliseconds")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        batches = q.lastProgress["batchId"]
+        time.sleep(2)  # about 20 idle polls
+        assert q.exception() is None and q.isActive
+        assert q.lastProgress["batchId"] == batches
+    finally:
+        q.stop()
+
+
+def test_kafka_wire_restart_replays_uncommitted_batch_once(spark, broker, tmp_path):
+    """A batch whose offsets were logged but never committed replays
+    on restart through ``readBetweenOffsets`` (a fresh source runner
+    holds no prefetched data), exactly once and with exactly the
+    logged range; what arrived since forms the next batch."""
+    from pyspark.errors import StreamingQueryException
+
+    broker.create_topic("rp", partitions=2)
+
+    def produce(vals):
+        with MiniKafkaClient(broker.bootstrap) as c:
+            for i, v in enumerate(vals):
+                c.produce("rp", i % 2, [{"key": None, "value": v, "timestamp": 1}])
+
+    wave1 = [b"a%d" % i for i in range(6)]
+    wave2 = [b"b%d" % i for i in range(3)]
+    produce(wave1)
+    ck = str(tmp_path / "ck")
+
+    def fail(df, batch_id):
+        raise RuntimeError("crash before the commit")
+
+    q = (
+        _kafka_stream(spark, broker, "rp").writeStream.foreachBatch(fail)
+        .option("checkpointLocation", ck).trigger(availableNow=True).start()
+    )
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(120)
+    produce(wave2)
+    seen: dict[int, list[bytes]] = {}
+
+    def record(df, batch_id):
+        seen.setdefault(batch_id, []).extend(bytes(r.value) for r in df.collect())
+
+    # a source without Trigger.AvailableNow support runs one batch a
+    # start: the first restart replays batch 0, the second reads on
+    for _ in range(2):
+        q = (
+            _kafka_stream(spark, broker, "rp").writeStream.foreachBatch(record)
+            .option("checkpointLocation", ck).trigger(availableNow=True).start()
+        )
+        assert q.awaitTermination(120)
+    assert sorted(seen) == [0, 1]
+    assert sorted(seen[0]) == sorted(wave1)
+    assert sorted(seen[1]) == sorted(wave2)
+
+
+def test_kafka_wire_steady_micro_batch_runs_one_task_per_job(spark, broker, tmp_path):
+    """A steady-state micro-batch reads its prefetched rows from the
+    JVM's block manager: every job of the batch runs one task, however
+    many topic-partitions the batch spans (a partitioned read would
+    run one per topic-partition)."""
+    import time
+
+    broker.create_topic("st", partitions=2)
+    spans: dict[int, set[int]] = {}
+
+    def record(df, batch_id):
+        spans.setdefault(batch_id, set()).update(
+            r.partition for r in df.select("partition").collect()
+        )
+
+    def produce(tag: bytes):
+        with MiniKafkaClient(broker.bootstrap) as c:
+            for p in (0, 1):
+                c.produce("st", p, [{"key": None, "value": tag, "timestamp": 1}])
+
+    produce(b"first")
+    q = (
+        _kafka_stream(spark, broker, "st").writeStream.foreachBatch(record)
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(processingTime="1 second")
+        .start()
+    )
+    try:
+        deadline = time.monotonic() + 120
+        while not any(b >= 1 and len(ps) == 2 for b, ps in spans.items()):
+            assert time.monotonic() < deadline and q.exception() is None
+            produce(b"more")
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(str(q.runId))
+    assert jobs
+    tasks = [
+        st.getStageInfo(s).numTasks
+        for j in jobs
+        for s in st.getJobInfo(j).stageIds
+    ]
+    assert tasks and set(tasks) == {1}
